@@ -12,11 +12,11 @@
 # every result is a function of the data crossing a real process
 # boundary, not of driver-JVM state.
 #
-# Mechanics: SPARK_GRAFT_MASTER flips Verify.session's master; the
+# Mechanics: SPARK_GRAFT_MASTER flips GraftSession's master; the
 # in-process Master+Workers fork executors from a SPARK_HOME dist. A
 # shim home in /tmp (jars symlinked to /opt/spark/jars, a local work/
 # dir) keeps executor logs and worker scratch out of the read-mostly
-# dist. Verify wires executor memory/classpath/--add-opens and blocks
+# dist. GraftSession wires executor memory/classpath/--add-opens and blocks
 # the first job until both executors registered.
 #
 # Fired-guards: (conf) VERIFY_CONF must echo master=local-cluster…;

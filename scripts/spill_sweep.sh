@@ -8,8 +8,8 @@
 # survives one in-memory partition order can diverge when partial
 # buffers spill and merge in sorted-key order; a sketch whose
 # serialize/merge round-trip loses state only shows it when the
-# ObjectHashAggregate falls back). SPARK_GRAFT_SPILL=1 (Verify's
-# session knobs, all public Spark confs) forces: TungstenAggregate
+# ObjectHashAggregate falls back). SPARK_GRAFT_SPILL=1 (GraftSession's
+# spill conf, all public Spark confs) forces: TungstenAggregate
 # sort-fallback after 5 keys, ObjectHashAggregate fallback after 2
 # groups, window/SMJ/session-window/cartesian buffers external+spill
 # at 16 rows, and UnsafeExternalSorter force-spill every 2000
@@ -35,8 +35,8 @@ overall=0
 # regime multiplied spill counts enough to OOM an 8g heap (attempt 1,
 # ContextCleaner), then a 16g heap's direct-memory budget (attempt 2,
 # spill-reader NIO buffers). 32g heap + explicit direct headroom holds
-# the whole registry; the knob arithmetic lives in Verify.session's
-# scaladoc
+# the whole registry; the knob arithmetic lives in GraftSession's
+# SpillConf scaladoc
 run_verify_gate spill "$sfdir" "SPARK_GRAFT_SPILL=1" \
   "SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g}" \
   "SPARK_GRAFT_EXTRA_JVM_OPTS=-XX:MaxDirectMemorySize=24g"

@@ -181,27 +181,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the driver's events.parquet stores TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // size the generated-class cache to the registry (static conf;
-      // default 100): ~143 distinct plans compile far more generated
-      // classes than 100, so with the default every timed window paid
-      // Janino + a fresh C2 pass for classes the warmup had already
-      // compiled and then evicted. Scale-independent: any long-lived
-      // app serving a large query registry wants the cache to actually
-      // hold its plans' classes; the entries are class handles, not
-      // data. Env-tunable for A/B against the eviction regime.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.BenchLayout)
+    val cpus = spark.sparkContext.defaultParallelism.toString
     // warmup: parquet reader + shuffle machinery, then one untimed run
     // of EVERY query at the SAME scale factor. Janino compilation of
     // generated code dominates first-run cost (7.5s cold vs 0.8s warm
@@ -213,14 +194,6 @@ object Bench {
     // compiles different generated classes, missing the cache.
     spark.read.parquet(s"$sfDir/events.parquet")
       .groupBy("event_type").count().count()
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", sfDir)
-    if (warmDir != sfDir)
-      // a different-SF warmup misses the codegen cache (AQE picks
-      // different join strategies per size → different generated
-      // classes), silently skewing the first timed pass
-      System.err.println(
-        s"[bench] WARNING: warmup dir $warmDir != measured dir $sfDir — " +
-          "first timed pass will include codegen compilation")
     // the bench measures the correctness registry PLUS the bench-only
     // train-time twins (Lloyd's paths — recall-gated in specs, never
     // oracle-checkable, but their cost is worth tracking round over
@@ -254,7 +227,7 @@ object Bench {
       var df: Option[org.apache.spark.sql.DataFrame] = None
       val ok =
         try {
-          val d = fn(spark, warmDir); df = Some(d)
+          val d = fn(spark, sfDir); df = Some(d)
           d.write.mode("overwrite").format("noop").save(); true
         } catch { case e: Throwable =>
           System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
@@ -571,7 +544,7 @@ object Bench {
     val cpusJson =
       if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "\"" + esc(cpus) + "\""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","gc_s":$gcJson,"jit_s":$jitJson,"cleaned_n":$cleanedJson,"cleaner_pending":$pendingJson,"queries":$qs,"sf":"${esc(sfDir)}","warmup":"${esc(warmDir)}","cpus":$cpusJson,"passes":$passes,"sweep":true,"leaked":$leaked,"regime":"$Regime","sentinel_s":$sentinel,"baseline":"${esc(baselinePath)}","drift_sentinel":${ms(driftSentinel)},"drift_used":${ms(driftUsed)},"suspect_ratio":$suspectJson,"drift_watch":$watchJson,"watch_overflow":$watchOverflow,"suspect_jit_share":$jitShareJson,"isolated_s":$isoJson,"isolated_gc_s":$isoGcJson,"isolated_jit_s":$isoJitJson,"isolated_cleaned_n":$isoCleanedJson,"isolated_pending":$isoPendingJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","gc_s":$gcJson,"jit_s":$jitJson,"cleaned_n":$cleanedJson,"cleaner_pending":$pendingJson,"queries":$qs,"sf":"${esc(sfDir)}","warmup":"${esc(sfDir)}","cpus":$cpusJson,"passes":$passes,"sweep":true,"leaked":$leaked,"regime":"$Regime","sentinel_s":$sentinel,"baseline":"${esc(baselinePath)}","drift_sentinel":${ms(driftSentinel)},"drift_used":${ms(driftUsed)},"suspect_ratio":$suspectJson,"drift_watch":$watchJson,"watch_overflow":$watchOverflow,"suspect_jit_share":$jitShareJson,"isolated_s":$isoJson,"isolated_gc_s":$isoGcJson,"isolated_jit_s":$isoJitJson,"isolated_cleaned_n":$isoCleanedJson,"isolated_pending":$isoPendingJson}"""
     println(line)
     // also persist to a file: stdout can get interleaved with stray
     // [error] log lines under sbt, which breaks line-oriented parsers.

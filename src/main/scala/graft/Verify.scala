@@ -7,16 +7,17 @@ import java.nio.file.{Files, Paths}
   * iteration tool) so the two surfaces cannot drift. */
 object Verify {
 
-  /** The session every verify surface uses — results must be
-    * comparable to the driver's gate, so there is exactly one config.
-    * The two extra env knobs DEFAULT to that one config and exist only
-    * for the config-invariance sweep (`scripts/config_invariance.sh`):
-    * on a real cluster the physical partitioning never matches
-    * local[32], so every oracle-checked result must be IDENTICAL under
-    * a hostile partition count and with AQE's runtime re-planning
-    * disabled — a float fold whose value depends on partition order,
-    * or a limit riding an unpinned sort, would pass the canonical
-    * config forever and differ on the thousand-executor layout.
+  /** The session every verify surface uses: [[GraftSession]] at Bench's
+    * layout, so results are comparable to the oracle gate's. Its env
+    * knobs exist for the standing sweeps: a hostile partition count and
+    * AQE off (`scripts/config_invariance.sh`) — on a real cluster the
+    * physical partitioning never matches local[32], so a float fold
+    * whose value depends on partition order, or a limit riding an
+    * unpinned sort, would pass the canonical config forever and differ
+    * on the thousand-executor layout; forced spill
+    * (`scripts/spill_sweep.sh`); a local-cluster master
+    * (`scripts/multijvm_sweep.sh`); fetch chaos
+    * (`scripts/fetch_chaos_sweep.sh`).
     *
     * SPARK_GRAFT_TASK_CHAOS=<n> (default off) arms the chaos listener:
     * every n-th FIRST-attempt task is killed via
@@ -29,169 +30,28 @@ object Verify {
     * (`scripts/retry_chaos_sweep.sh`). Retried attempts are never
     * killed, so every stage terminates.
     *
-    * SPARK_GRAFT_SPILL=1 (default off) arms the forced-spill axis
-    * (`scripts/spill_sweep.sh`): sf≤0.1 in a 128 GiB sandbox never
-    * exercises hash-aggregate sort-fallback, external-sort merge, or
-    * shuffle spill, yet at 100 TB spilling is STEADY-STATE and the
-    * spill/merge paths are the classic home of order- and
-    * precision-dependent bugs (a float fold that survives one
-    * in-memory partition order can diverge once partial buffers spill
-    * and merge in sorted-key order). The knobs force every such path
-    * at tiny thresholds, all public Spark confs:
-    *   - `TungstenAggregate.testFallbackStartsAt=64,8192` — every
-    *     hash aggregate with >8192 input rows per task abandons its
-    *     map and finishes sort-based (spill + sorted merge of partial
-    *     buffers). The second number is the per-REFILL row budget —
-    *     Spark resets the counter after each map destruct, so a tiny
-    *     value ("2,5" in the first attempts) destructs-and-merges a
-    *     sorter every 5 rows: ~500k chained sorters at sf0.1, whose
-    *     final merge exhausted the 20k fd limit ("too many open
-    *     files") after first blowing the TB-scale spill accounting;
-    *     8192 keeps the fallback firing on every non-trivial
-    *     aggregate with the chained-sorter count bounded in the
-    *     hundreds;
-    *   - `objectHashAggregate.sortBased.fallbackThreshold=2` — the
-    *     ObjectHashAggregate family (our TypedImperativeAggregate
-    *     sketches ride it) falls back to sort-based merge;
-    *   - window / sort-merge-join / session-window / cartesian
-    *     buffers go EXTERNAL at 16 rows (every non-trivial group
-    *     exercises the ExternalAppendOnlyUnsafeRowArray → sorter
-    *     path) but FILE-spill at the shared 256k-element bound — an
-    *     sf0.1 attempt with file spills at 16 rows exhausted a 16 GiB
-    *     direct-memory budget because per-group spill readers churn
-    *     1 MiB direct buffers faster than an unpressured heap GC
-    *     reclaims them (direct buffers are only freed when their heap
-    *     handles are collected);
-    *   - `shuffle.spill.numElementsForceSpillThreshold=262144` — every
-    *     UnsafeExternalSorter (SortExec, shuffle writers, the
-    *     sort-fallback's KV sorter) force-spills each 256k elements,
-    *     so external merges genuinely run many-way on the
-    *     row-explosion queries while the spill-FILE count stays
-    *     bounded. The bound is load-bearing: `getSortedIterator`
-    *     opens a reader per spill file SIMULTANEOUSLY at merge time,
-    *     each holding ≥1 MiB of buffers (the conf floor), and sweep
-    *     attempts at thresholds 2000/16384 OOM'd the JVM from
-    *     q_dup_ngrams' hundreds of per-task spill files — spill
-    *     granularity is a memory knob, not just an IO knob, the same
-    *     arithmetic that sizes a real cluster's
-    *     `maxRemoteBlockSizeFetchToMem`/merge fan-in. Read-ahead is
-    *     disabled (`unsafe.sorter.spill.read.ahead.enabled=false`)
-    *     to halve per-open-file buffering, and
-    *     `diskWriteBufferSize=64k` shrinks writer-side buffers.
-    * The fired-guard is metric-based: the session counts
+    * The spill fired-guard is metric-based: the session counts
     * memory/diskBytesSpilled across all tasks and main() prints
     * `VERIFY_SPILL mem=<B> disk=<B>`; the sweep FAILS on zero (a
     * sweep that never spilled is a plain re-dump).
     *
-    * SPARK_GRAFT_MASTER (default `local[$cpus]`) arms the MULTI-JVM
-    * axis (`scripts/multijvm_sweep.sh`) when set to
-    * `local-cluster[n,cores,memMB]`: Spark's standalone-in-miniature
-    * master spawns REAL executor JVMs (in-process Master+Workers fork
-    * CoarseGrainedExecutorBackend processes from the SPARK_HOME dist)
-    * with network shuffle and serialized task dispatch. Every other
-    * axis runs driver and executors in ONE JVM, which structurally
-    * cannot catch the canonical cluster-only bug class: task code
-    * observing driver-JVM state through statics, companion objects,
-    * or broadcast object identity (an accidental analog of
-    * [[Verify.spilledMem]] read inside a task passes every single-JVM
-    * gate and lies on a real cluster); TypedImperativeAggregate
-    * buffers and codegen'd expressions here cross a process boundary
-    * for the first time. Requirements wired below: executor memory =
-    * the worker's offer (parsed from the master string), executor
-    * classpath = this JVM's (sbt-built graft classes + /opt/spark
-    * jars — codegen referencing graft Expression classes compiles ON
-    * executors), the JDK17 --add-opens propagated from this JVM's
-    * runtime args, and all executors registered before the first job
-    * so the probe cannot race a late worker. The fired-guard is a
+    * Under a local-cluster master Spark's standalone-in-miniature
+    * spawns REAL executor JVMs with network shuffle and serialized task
+    * dispatch. Every other axis runs driver and executors in ONE JVM,
+    * which structurally cannot catch the canonical cluster-only bug
+    * class: task code observing driver-JVM state through statics,
+    * companion objects, or broadcast object identity (an accidental
+    * analog of [[Verify.spilledMem]] read inside a task passes every
+    * single-JVM gate and lies on a real cluster). The fired-guard is a
     * probe job collecting (executorId, pid) per task:
     * `VERIFY_EXECUTORS ok=true n=<k>` requires ≥2 distinct executor
     * PIDs, none equal to the driver's — proving results came from
     * separate JVMs, not a silently-degraded local run. */
   def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spillForced = sys.env.get("SPARK_GRAFT_SPILL").contains("1")
-    val fetchChaosArmed = sys.env.get("SPARK_GRAFT_FETCH_CHAOS").contains("1")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // generated-class cache sized to the registry (the Bench r21
-      // finding): 141 queries' plans thrash the default 100-entry
-      // cache, recompiling classes the run already compiled once
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-    if (spillForced) {
-      builder
-        .config("spark.sql.TungstenAggregate.testFallbackStartsAt", "64,8192")
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2")
-        .config("spark.sql.windowExec.buffer.in.memory.threshold", "16")
-        .config("spark.sql.windowExec.buffer.spill.threshold", "262144")
-        .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", "16")
-        .config("spark.sql.sortMergeJoinExec.buffer.spill.threshold", "262144")
-        .config("spark.sql.sessionWindow.buffer.in.memory.threshold", "16")
-        .config("spark.sql.sessionWindow.buffer.spill.threshold", "262144")
-        .config("spark.sql.cartesianProductExec.buffer.in.memory.threshold", "16")
-        .config("spark.sql.cartesianProductExec.buffer.spill.threshold", "262144")
-        .config("spark.shuffle.spill.numElementsForceSpillThreshold", "262144")
-        .config("spark.shuffle.spill.diskWriteBufferSize", "65536")
-        .config("spark.unsafe.sorter.spill.read.ahead.enabled", "false")
-    }
-    if (master.startsWith("local-cluster")) {
-      // the worker offers exactly memMB; executor memory must fit it
-      // or standalone scheduling grants zero executors (hang)
-      val memMb = master.stripPrefix("local-cluster[").stripSuffix("]")
-        .split(",")(2).trim
-      // this forked JVM's classpath IS the complete one (sbt classes +
-      // /opt/spark/jars); prepending it on executors makes graft's
-      // Expression/aggregate classes resolvable in executor codegen
-      val cp = sys.props("java.class.path")
-      // propagate the JDK17 --add-opens this JVM was launched with —
-      // CoarseGrainedExecutorBackend needs the same module openings
-      // (single-token form so each rides one javaOpt)
-      val args = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments
-      val opens = (0 until args.size - 1).collect {
-        case i if args.get(i) == "--add-opens" =>
-          s"--add-opens=${args.get(i + 1)}"
-      }.mkString(" ")
-      builder
-        .config("spark.executor.memory", s"${memMb}m")
-        .config("spark.executor.extraClassPath", cp)
-        .config("spark.executor.extraJavaOptions", opens)
-        // block the first job until EVERY worker's executor is up —
-        // otherwise the ≥2-distinct-PIDs probe races a slow second
-        // worker and fails spuriously
-        .config("spark.scheduler.minRegisteredResourcesRatio", "1.0")
-        .config("spark.scheduler.maxRegisteredResourcesWaitingTime", "120s")
-    }
-    if (fetchChaosArmed)
-      // indirect task results ride the block manager, and the injected
-      // FetchFailed names the LOCAL master's only executor (== the
-      // driver's own BM), so the scheduler's executor-suspicion
-      // handling purges in-flight result blocks — at sf0.1 broadcast
-      // builds and final collects exceed the 1 MiB direct-result
-      // default and died as TaskResultLost (16 queries, first sf0.1
-      // sweep). A real cluster loses a REMOTE executor's BM, never the
-      // driver's result path, so the harness keeps results direct
-      // (must stay < spark.rpc.message.maxSize, default 128 MiB)
-      builder.config("spark.task.maxDirectResultSize", "100m")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // local-mode liveness stub: the fetch-chaos sweep injects
-    // FetchFailedExceptions across the whole registry; without the
-    // stub each injection arms the 10-minute heartbeat-failure fuse
-    // (block manager re-registration is impossible in local[*] and
-    // the executor exits 56 — see LocalLivenessBridge). With it the
-    // block manager heals on the next heartbeat, the cluster shape.
-    org.apache.spark.graftbridge.LocalLivenessBridge.install(spark.sparkContext)
+    val spark = GraftSession(GraftSession.BenchLayout)
     val chaosN = sys.env.get("SPARK_GRAFT_TASK_CHAOS").map(_.toInt)
       .filter(_ > 0)
-    val fetchChaos = fetchChaosArmed
+    val fetchChaos = sys.env.get("SPARK_GRAFT_FETCH_CHAOS").contains("1")
     // listeners register ONCE per JVM: getOrCreate() can hand back an
     // already-live session, and a second registration would stack
     // listeners — double-counting spilledMem/Disk into the
@@ -272,7 +132,7 @@ object Verify {
       s" spill=${if (spark.conf.getOption(
           "spark.sql.TungstenAggregate.testFallbackStartsAt").isDefined)
         "forced" else "off"}")
-    if (master.startsWith("local-cluster")) {
+    if (spark.sparkContext.master.startsWith("local-cluster")) {
       // multi-JVM fired-guard: a probe job collects (executorId, pid,
       // canary) from inside tasks. ok requires ≥2 DISTINCT executor
       // PIDs, none the driver's — the sweep greps this line, so a

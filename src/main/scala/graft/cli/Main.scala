@@ -1,8 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
-import graft.TopicAnalyzer
+import graft.{GraftSession, TopicAnalyzer}
 import graft.operators.TopicMetrics
 import graft.sources.{EventsAsRecords, KafkaRecordSource}
 
@@ -52,16 +50,7 @@ object Main {
         "usage: graft [-t topic -b servers [--librdkafka k=v,...] | --parquet sfDir] [-c]")
       sys.exit(1)
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-topic-analyzer")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.CliLayout)
     val t0 = System.nanoTime()
     val records = parquetDir match {
       case Some(dir) => EventsAsRecords.records(spark, dir)

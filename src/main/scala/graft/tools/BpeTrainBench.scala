@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Measures the BPE trainer's driver-sequenced-round cost at growing
   * merge counts — the evidence behind the documented O(numMerges)
@@ -18,13 +18,7 @@ object BpeTrainBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val counts =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(50, 100, 200)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.BenchLayout)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     // warm the scan/codegen paths so the first count isn't penalized
     graft.operators.Bpe.trainMerges(docs, 5)

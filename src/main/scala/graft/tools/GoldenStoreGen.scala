@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.GraftSession
 import graft.operators.{CorpusOps, Dedup, Similarity}
 import graft.sources.EpochedTable
 
@@ -79,18 +80,6 @@ object GoldenStoreGen {
       CorpusOps.sourceDistinctFromSketches(
         CorpusOps.readDistinctSketches(spark, s"$goldenDir/sketches"))))
 
-  private def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     // the arity check must cover BOTH forms: a bare `--hashes` would
     // otherwise reach args(1) and die with ArrayIndexOutOfBounds
@@ -103,7 +92,7 @@ object GoldenStoreGen {
     if (args(0) == "--hashes") {
       val goldenDir = args(1)
       val fixtureDir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
-      val spark = session()
+      val spark = GraftSession(GraftSession.BenchLayout)
       readers(spark, goldenDir, fixtureDir).foreach { case (name, rd) =>
         val df = rd()
         val (n, h) = canonicalHash(df)
@@ -121,7 +110,7 @@ object GoldenStoreGen {
       s"golden out dir $out already exists — rm it first (generation " +
         "must start from scratch)")
     val fixtureDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = session()
+    val spark = GraftSession(GraftSession.BenchLayout)
     import spark.implicits._
 
     val docs = fixtureDocs(spark, fixtureDir)

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.Similarity
 
 /** Dumps `.explain("formatted")` for the Lloyd's trainers'
@@ -27,13 +27,7 @@ import graft.operators.Similarity
 object TrainerPlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.BenchLayout)
     val m = Similarity.DefaultPqM
     val ksub = Similarity.DefaultPqKsub
     val unit = Similarity.withUnit(

@@ -18,9 +18,9 @@ class SourceDisciplineSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
 
-  private def countIn(pattern: String): Map[String, Int] = {
+  private def countIn(pattern: String, under: Path): Map[String, Int] = {
     val re = pattern.r
-    Files.walk(root).iterator().asScala
+    Files.walk(under).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && Files.isRegularFile(p))
       .map { p =>
         val body = new String(Files.readAllBytes(p), "UTF-8")
@@ -46,8 +46,8 @@ class SourceDisciplineSpec extends AnyFunSuite {
   }
 
   private def audit(what: String, pattern: String,
-      allow: Map[String, Int]): Unit = {
-    val got = countIn(pattern)
+      allow: Map[String, Int], under: Path = root): Unit = {
+    val got = countIn(pattern, under)
     val unexpected = got.filter { case (f, n) => allow.getOrElse(f, 0) != n }
     val vanished = allow.keys.filterNot(got.contains)
     assert(unexpected.isEmpty && vanished.isEmpty,
@@ -145,5 +145,12 @@ class SourceDisciplineSpec extends AnyFunSuite {
     audit(".rdd", raw"\.rdd\b", Map(
       "src/main/scala/graft/Verify.scala" -> 3,
       "src/main/scala/org/apache/spark/sql/graftbridge/ColumnBridge.scala" -> 1))
+  }
+
+  test("GraftSession is the only session builder, main and test trees alike") {
+    // one conf for the CLI, Bench, Verify, the tools and the suite: a
+    // second builder is how plan dumps drifted off Bench's conf before
+    audit("session builder", raw"SparkSession\.builder\(", Map(
+      "src/main/scala/graft/GraftSession.scala" -> 1), Paths.get("src"))
   }
 }

@@ -36,29 +36,11 @@ object SparkSuite {
   val expectedRetryDepth = new java.util.concurrent.atomic.AtomicInteger
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4, 2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // r22: size the generated-class cache to the suite, the r21
-      // bench/Verify Change-1 applied to the third long-lived session:
-      // 42 suites compile far more generated classes than the default
-      // 100-entry cache holds, so the suite was paying Janino + C2
-      // re-compilation for classes it had already compiled — pure
-      // fixed cost, no timing methodology here to disturb. Measured
-      // on the full suite: 25:27 → see OPTIMIZATION_r22.md.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // local-mode liveness stub: without it, ONE injected fetch failure
-    // (StageResubmissionSpec, the chaos sweeps) arms a 10-minute fuse —
-    // the block manager can never re-register in local[*] and the
-    // executor heartbeater System.exit(56)s after 60 consecutive
-    // failures, killing the fork with every test green (the r21
-    // driver-run "ForkMain exit 56"). See LocalLivenessBridge.
-    org.apache.spark.graftbridge.LocalLivenessBridge.install(s.sparkContext)
+    // a fixed layout, whatever SPARK_GRAFT_* the test run exports: the
+    // retry master above is load-bearing, and spill/chaos knobs would
+    // turn the suite into a different regime
+    val s = GraftSession.build(
+      GraftSession.Layout("local[4, 2]", "4"), Map.empty)
     s.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onTaskEnd(
