@@ -19,9 +19,12 @@ object TopicAnalyzer {
       aliveKeys: Option[Long])
 
   /** Analyze a record-log frame ([[graft.model.RecordSchema]] shape).
-    * One scan for all C/D/E metrics; a second key-partitioned
-    * aggregation only when `countAliveKeys` (mirroring the reference's
-    * optional `-c` handler registration, `src/main.rs:77-80`).
+    * One scan for all C/D/E metrics; a second, key-partitioned hash
+    * aggregation ([[AliveKeys.exact]]) only when `countAliveKeys`
+    * (mirroring the reference's optional `-c` handler registration,
+    * `src/main.rs:77-80`) and the stats found at least one record. Zero
+    * stats rows is how callers detect an empty topic — no separate
+    * probe job — and an empty topic has 0 alive keys without a scan.
     */
   def analyze(records: DataFrame, countAliveKeys: Boolean = false): Result = {
     // ONE collect of the per-partition frame (stats + the min/max
@@ -43,7 +46,10 @@ object TopicAnalyzer {
         l(r, "avg_key_size"), l(r, "avg_value_size"), l(r, "avg_msg_size"))
     }.sortBy(_.partition)
     val summary = TopicMetrics.summaryFromPartials(rows.toSeq, idx)
-    val alive = if (countAliveKeys) Some(AliveKeys.exact(records)) else None
+    val alive =
+      if (!countAliveKeys) None
+      else if (rows.isEmpty) Some(0L)
+      else Some(AliveKeys.exact(records))
     Result(stats, summary, alive)
   }
 

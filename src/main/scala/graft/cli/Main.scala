@@ -1,7 +1,6 @@
 package graft.cli
 
 import graft.{GraftSession, TopicAnalyzer}
-import graft.operators.TopicMetrics
 import graft.sources.{EventsAsRecords, KafkaRecordSource}
 
 /** CLI entry — the reference's flag surface (`src/main.rs:32-67`):
@@ -71,26 +70,30 @@ object Main {
     }
   }
 
-  /** The post-source CLI core — empty-topic guard (`src/main.rs:98-101`;
-    * compat mode echoes the reference's error! text verbatim), analyze,
-    * render. Session-agnostic and exit-free so tests can drive the
-    * exact `--parquet` end-to-end path in-JVM; `main` owns the process
+  /** The post-source CLI core — analyze, empty-topic guard
+    * (`src/main.rs:98-101`; compat mode echoes the reference's error!
+    * text verbatim), render. The guard reads the stats pass itself: zero
+    * partition rows means an empty topic, and `analyze` then skips the
+    * alive-key job, so no separate probe job scans the source.
+    * Session-agnostic and exit-free so tests can drive the exact
+    * `--parquet` end-to-end path in-JVM; `main` owns the process
     * concerns (stderr, exit −2, session stop) around it.
     */
   private[cli] def analyzeAndRender(
       records: org.apache.spark.sql.DataFrame, opts: Map[String, String],
-      label: String, t0: Long): Either[String, String] =
-    if (TopicMetrics.isEmpty(records))
+      label: String, t0: Long): Either[String, String] = {
+    val result = TopicAnalyzer.analyze(records, opts.contains("alive"))
+    if (result.partitionStats.isEmpty)
       Left(
         if (opts.contains("compat"))
           "Given topic has no content, no analysis possible. Exiting."
         else "The topic is empty, exiting.")
     else {
-      val result = TopicAnalyzer.analyze(records, opts.contains("alive"))
       val elapsed = (System.nanoTime() - t0) / 1000000000L
       Right(TopicAnalyzer.report(
         result, label, elapsed, opts.contains("compat")))
     }
+  }
 
   /** The `--librdkafka k=v[,k=v...]` list as Spark Kafka-source
     * options (`kafka.` prefix, like the reference passes raw consumer

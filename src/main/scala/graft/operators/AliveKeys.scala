@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.functions.LastWrite
 
 /** Alive-key counting (the reference's `-c` flag, SURVEY §2.F): the
   * number of keys whose LAST write (by partition, offset order) is not a
@@ -12,25 +14,38 @@ import org.apache.spark.sql.functions._
   * (hash collisions merge keys, a colliding tombstone erases an innocent
   * key) and cross-partition-nondeterministic. The Spark-native
   * formulation below is EXACT and deterministic: reduce per key with
-  * `max_by(value IS NULL, (partition, offset))` — last-write-wins by
-  * total order — then count the keys whose last value is non-null.
+  * [[LastWrite]] — the `value IS NULL` flag of the record with the
+  * largest (partition, offset) — then count the keys whose last value
+  * is non-null.
   *
-  * Scale: one shuffle hash-partitioned by key; `max_by` carries a
-  * constant-size buffer per key, partial-aggregates map-side, and never
-  * materializes the key set on any single node — the distributed
-  * replacement for the reference's single-host 512 MiB bitset bound
-  * (`src/fnv32.rs:74-82`). Null-key records are excluded up front
-  * (`src/metric.rs:290-303`), so the filter prunes before the shuffle.
+  * Scale: one shuffle hash-partitioned by key. `value IS NULL` is
+  * projected next to the scan, so the value bytes never reach the
+  * aggregate or the shuffle. [[LastWrite]]'s buffer is a fixed-width
+  * (INT, LONG, BOOLEAN) triple, so each reduction plans as a
+  * code-generated `HashAggregate` that partial-aggregates map-side and
+  * sorts nothing, and no single node ever materializes the key set —
+  * the distributed replacement for the reference's single-host 512 MiB
+  * bitset bound (`src/fnv32.rs:74-82`). Null-key records are excluded
+  * up front (`src/metric.rs:290-303`), so the filter prunes before the
+  * shuffle.
   */
 object AliveKeys {
 
-  /** Per-key last-write state: key, deadAtEnd flag. */
-  def lastWritePerKey(records: DataFrame): DataFrame =
+  /** Per-group last-write state over the keyed records: the grouping
+    * column `group` as `name`, and `dead_at_end`. */
+  private def lastWriteBy(records: DataFrame, group: Column,
+      name: String): DataFrame =
     records
       .filter(col("key").isNotNull)
-      .groupBy(col("key"))
-      .agg(max_by(col("value").isNull,
-        struct(col("partition"), col("offset"))).as("dead_at_end"))
+      .select(group.as(name), col("partition"), col("offset"),
+        col("value").isNull.as("tomb"))
+      .groupBy(col(name))
+      .agg(LastWrite.dead(col("partition"), col("offset"), col("tomb"))
+        .as("dead_at_end"))
+
+  /** Per-key last-write state: key, deadAtEnd flag. */
+  def lastWritePerKey(records: DataFrame): DataFrame =
+    lastWriteBy(records, col("key"), "key")
 
   /** Exact alive-key count, as a 1-row/1-column frame. */
   def exactFrame(records: DataFrame): DataFrame =
@@ -49,16 +64,12 @@ object AliveKeys {
     * negligible up to billions of keys — while the shuffle rows shrink
     * from arbitrary key bytes to 8 bytes.
     */
+  def approxFrame(records: DataFrame): DataFrame =
+    lastWriteBy(records, xxhash64(col("key")), "hash")
+      .agg(count_if(!col("dead_at_end")).as("alive_keys_approx"))
+
   def approx(records: DataFrame): Long =
-    records
-      .filter(col("key").isNotNull)
-      .select(xxhash64(col("key")).as("key"), col("partition"),
-        col("offset"), col("value").isNull.as("tomb"))
-      .groupBy(col("key"))
-      .agg(max_by(col("tomb"), struct(col("partition"), col("offset")))
-        .as("dead_at_end"))
-      .agg(count_if(!col("dead_at_end")))
-      .collect()(0).getLong(0)
+    approxFrame(records).collect()(0).getLong(0)
 
   /** Per-partition post-compaction footprint estimate — the natural
     * "what would compaction buy me" companion to the dirty ratio
@@ -72,9 +83,9 @@ object AliveKeys {
     * records are invalid on compacted topics and count only toward the
     * pre-compaction totals.
     *
-    * Scale: one (partition, key) shuffle with a constant-size `max_by`
-    * buffer per key (the value rides in the buffer, bounded by record
-    * size), re-reduced per partition; totals re-use the partition
+    * Scale: one (partition, key) shuffle whose `max_by` buffer carries
+    * the value bytes — a BINARY buffer, so this one plans as a
+    * sort-based aggregate — re-reduced per partition; totals re-use the partition
     * grouping. Output is O(#partitions) rows of exact BIGINTs.
     */
   def compactionEstimate(records: DataFrame): DataFrame = {
@@ -105,12 +116,6 @@ object AliveKeys {
     * (partition, offset) instead of arrival order (SURVEY §7.4).
     */
   def approxFnv32Frame(records: DataFrame): DataFrame =
-    records
-      .filter(col("key").isNotNull)
-      .select(graft.functions.Fnv32.fnv32(col("key")).as("bucket"),
-        col("partition"), col("offset"), col("value").isNull.as("tomb"))
-      .groupBy(col("bucket"))
-      .agg(max_by(col("tomb"), struct(col("partition"), col("offset")))
-        .as("dead_at_end"))
+    lastWriteBy(records, graft.functions.Fnv32.fnv32(col("key")), "bucket")
       .agg(count_if(!col("dead_at_end")).as("alive_keys_fnv32"))
 }

@@ -60,6 +60,66 @@ class InvariantsSpec extends SparkSuite {
     }
   }
 
+  /** The struct-ordered `max_by` form [[graft.functions.LastWrite]]
+    * replaced, kept here as the reference: alive groups of `group`. */
+  private def maxByAlive(recs: org.apache.spark.sql.DataFrame,
+      group: org.apache.spark.sql.Column): Long = {
+    import org.apache.spark.sql.functions._
+    recs.filter(col("key").isNotNull)
+      .groupBy(group.as("g"))
+      .agg(max_by(col("value").isNull,
+        struct(col("partition"), col("offset"))).as("dead"))
+      .agg(count_if(!col("dead"))).collect()(0).getLong(0)
+  }
+
+  test("alive keys stay exact at the (partition, offset) encoding's edges") {
+    // signed extremes on both ordering fields, keys written in several
+    // partitions with a LOWER offset in the HIGHER partition, and the
+    // same rows at 1, 3 and 7 input partitions so merge order varies.
+    // Each layout runs again with the hash aggregate forced into its
+    // sort-based fallback after 2 rows, which merges LastWrite buffers
+    // through mergeExpressions instead of the hash map.
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    val parts = Seq(Int.MinValue, -1, 0, Int.MaxValue)
+    val offs = Seq(Long.MinValue, -1L, 0L, 1L << 40, Long.MaxValue)
+    val pinned = Seq(
+      (Int.MinValue, Long.MaxValue, 0L, "dead-by-partition", "v"),
+      (Int.MaxValue, Long.MinValue, 0L, "dead-by-partition", null),
+      (-1, Long.MaxValue, 0L, "alive-by-partition", null),
+      (0, Long.MinValue, 0L, "alive-by-partition", "v"))
+    val slots = for (p <- parts; o <- offs) yield (p, o)
+    val fallbackKey = "spark.sql.TungstenAggregate.testFallbackStartsAt"
+    for (seed <- 1L to 6L) {
+      val rnd = new Random(seed)
+      val rows = pinned ++ rnd.shuffle(slots.filterNot(s =>
+          pinned.exists(r => (r._1, r._2) == s)))
+        .take(12 + rnd.nextInt(5)).map { case (p, o) =>
+          (p, o, 0L, if (rnd.nextInt(8) == 0) null else s"k${rnd.nextInt(4)}",
+            if (rnd.nextInt(3) == 0) null else "v")
+        }
+      val expected = rows.filter(_._4 != null).groupBy(_._4)
+        .count { case (_, rs) => rs.maxBy(r => (r._1, r._2))._5 != null }
+      for (n <- Seq(1, 3, 7)) {
+        val recs = records(new Random(seed * 31 + n).shuffle(rows): _*)
+          .repartition(n)
+        assert(recs.rdd.getNumPartitions == n)
+        assert(maxByAlive(recs, col("key")) == expected.toLong)
+        val approx = maxByAlive(recs, xxhash64(col("key")))
+        val fnv = maxByAlive(recs, graft.functions.Fnv32.fnv32(col("key")))
+        for (fallback <- Seq(None, Some("1,2"))) {
+          val ctx = s"seed=$seed partitions=$n fallback=$fallback"
+          fallback.foreach(spark.conf.set(fallbackKey, _))
+          try {
+            assert(AliveKeys.exact(recs) == expected.toLong, ctx)
+            assert(AliveKeys.approx(recs) == approx, ctx)
+            assert(rowsOf(AliveKeys.approxFnv32Frame(recs))
+              .head("alive_keys_fnv32") == fnv, ctx)
+          } finally spark.conf.unset(fallbackKey)
+        }
+      }
+    }
+  }
+
   test("metrics invariant under cross-partition record permutation") {
     val rows = randomRecords(42L, 300)
     val shuffled = new Random(7).shuffle(rows)

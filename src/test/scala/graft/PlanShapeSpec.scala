@@ -647,18 +647,54 @@ class PlanShapeSpec extends SparkSuite {
       // query-term rank over the LIMIT-bounded (skipTop + nTerms ≤ 26
       // rows) vocabulary head — population capped before the window
       "q_text_search" -> 1)
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val n = fn(spark, "/root/testdata/sf0.001")
-          .queryExecution.optimizedPlan.collect {
+    // The same walk audits sort-based aggregates (building every query
+    // twice would double this test's time). A SortAggregate sorts its
+    // whole input on both sides of the shuffle — the plan Spark falls
+    // back to when an aggregate buffer cannot live in a hash map (a
+    // struct, string or binary max_by/min_by). Each remaining site
+    // needs a reason here; a fixed-width aggregate (LastWrite) is the
+    // usual way out.
+    val allowSortAgg = Map(
+      // max_by(eval_id, struct(score, -eval_id)) tie-break ordering,
+      // Similarity.semanticContamination, over the post-join hit rows
+      "q_decontaminate_semantic" -> 2,
+      // max_by(doc_id, struct(quality, -doc_id)) tie-break ordering,
+      // CorpusOps.bestOfClusterFromLabels, one row per labelled doc
+      "q_cluster_best" -> 2,
+      "q_cluster_best_indexed" -> 2,
+      // compactionEstimate's max_by(value, offset): the retained value
+      // bytes ARE the output (retained_bytes), so they ride the buffer
+      "q_compaction_estimate" -> 2,
+      // max(struct(score, -pos)) best-positive ordering,
+      // Similarity.contrastiveTriplets, over the LSH near-pair rows
+      "q_contrastive_triplets" -> 2,
+      // min/max(source) STRING fold of each melted pair's two rows,
+      // CorpusOps.sourceOverlap — two rows per group
+      "q_source_overlap" -> 2,
+      // min/max(split) STRING per cluster (plus the countDistinct
+      // expand's second level), CorpusOps.splitLeakageFromLabels
+      "q_split_leakage" -> 4,
+      "q_split_leakage_indexed" -> 4)
+    val (offenders, sortAggOffenders) = SparkEntry.queries.toSeq.sortBy(_._1)
+      .map { case (name, fn) =>
+        val qe = fn(spark, "/root/testdata/sf0.001").queryExecution
+        val n = qe.optimizedPlan.collect {
             case w: org.apache.spark.sql.catalyst.plans.logical.Window
               if w.partitionSpec.isEmpty => w
           }.length
-        if (n > allow.getOrElse(name, 0)) Some(s"$name: $n global windows")
-        else None
-    }
-    assert(offenders.isEmpty,
-      s"undocumented single-reducer windows:\n${offenders.mkString("\n")}")
+        val sa = qe.sparkPlan.collect {
+          case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
+        }.length
+        (if (n > allow.getOrElse(name, 0)) Some(s"$name: $n global windows")
+          else None,
+         if (sa != allowSortAgg.getOrElse(name, 0))
+           Some(s"$name: $sa sort aggregates") else None)
+      }.unzip
+    assert(offenders.flatten.isEmpty,
+      s"undocumented single-reducer windows:\n${offenders.flatten.mkString("\n")}")
+    assert(sortAggOffenders.flatten.isEmpty,
+      "sort-based aggregates off the allowlist (or an allowlisted count " +
+        s"that changed):\n${sortAggOffenders.flatten.mkString("\n")}")
   }
 
   test("bloom decontamination filters train postings BELOW the join") {
@@ -894,6 +930,56 @@ class PlanShapeSpec extends SparkSuite {
         val same = rowsOf(ix) == rowsOf(tw)
         org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(tw)
         assert(same, s"$name: indexed twin diverged from recomputing twin")
+      }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("alive-key reductions: codegen'd hash aggregates, no sort, no value in a shuffle") {
+    // LastWrite's fixed-width buffer keeps each AliveKeys reduction a
+    // map-side-partial HashAggregate; the struct-ordered max_by it
+    // replaced planned Sort → SortAggregate on both sides of the
+    // shuffle, with every record's value bytes in the map-side sort
+    import org.apache.spark.sql.execution.{SortExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+      SortAggregateExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.operators.AliveKeys
+    object aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val dir = java.nio.file.Files.createTempDirectory("graft-alive-plan").toString
+    try {
+      records((0, 0L, 1000L, "a", "x"), (1, 5L, 1000L, "a", null),
+        (0, 1L, 1000L, "b", "y"), (1, 6L, 1000L, null, "z"))
+        .write.mode("overwrite").parquet(dir)
+      val recs = spark.read.parquet(dir)
+      Seq("key" -> AliveKeys.exactFrame(recs),
+          "hash" -> AliveKeys.approxFrame(recs),
+          "bucket" -> AliveKeys.approxFnv32Frame(recs)).foreach {
+        case (group, df) =>
+          assert(df.collect()(0).getLong(0) == 1L)
+          val p = df.queryExecution.executedPlan
+          val keyed = aqe.collect(p) {
+            case a: HashAggregateExec
+              if a.groupingExpressions.map(_.name) == Seq(group) => a
+          }
+          assert(keyed.size == 2, s"$group: expected partial + final:\n$p")
+          val codegen = aqe.collect(p) {
+            case w: WholeStageCodegenExec => w.child.collect {
+              case a: HashAggregateExec => a
+            }
+          }.flatten
+          assert(keyed.forall(k => codegen.exists(_ eq k)),
+            s"$group: aggregate fell out of whole-stage codegen:\n$p")
+          val sorts = aqe.collect(p) {
+            case a: SortAggregateExec => a
+            case s: SortExec => s
+          }
+          assert(sorts.isEmpty, s"$group: sort-based plan:\n$p")
+          val valueShuffles = aqe.collect(p) {
+            case e: ShuffleExchangeExec if e.output.exists(_.name == "value") => e
+          }
+          assert(valueShuffles.isEmpty, s"$group: value bytes shuffled:\n$p")
       }
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))

@@ -176,6 +176,49 @@ class CliSpec extends AnyFunSuite {
     }
   }
 
+  test("-c reads the source twice: the stats pass is the empty guard") {
+    // stats pass + alive keys, each scanning sf0.001's 1,000 events; a
+    // separate isEmpty probe job would add a third full scan (the
+    // EventsAsRecords offset window needs every row before limit 1)
+    val spark = graft.SparkSuite.spark
+    val sc = spark.sparkContext
+    val tag = "graft.test.cli-scan"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(tag) != null))
+          j.stageIds.foreach(stages.add)
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          read.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
+    }
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    val opts = Main.parse(List("--parquet", "/root/testdata/sf0.001", "-c"),
+      Map.empty)
+    val records = graft.sources.EventsAsRecords.records(spark, opts("parquet"))
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "1")
+      val out = Main.analyzeAndRender(records, opts, "t", System.nanoTime())
+      sc.setLocalProperty(tag, null)
+      org.apache.spark.graftbridge.ListenerBusBridge.waitUntilEmpty(sc)
+      assert(out.isRight, s"CLI core failed: $out")
+      assert(read.get == 2 * 1000L,
+        s"expected 2 scans of 1,000 records, read ${read.get}")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
+    }
+  }
+
   test("--parquet end-to-end: the empty guard takes the compat exit text") {
     val spark = graft.SparkSuite.spark
     val empty = spark.createDataFrame(
