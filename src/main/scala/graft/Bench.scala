@@ -36,14 +36,28 @@ object Bench {
     * the cache sized (matched sentinels). Timings shift broadly
     * (down), so v4 artifacts are not comparable raw. Purely DIAGNOSTIC fields
     * (gc_s in r17; jit_s / cleaned_n / cleaner_pending and their
-    * isolated_* twins in r18; drift_watch / suspect_jit_share in r19)
-    * do not bump the regime: timings and their methodology are
+    * isolated_* twins in r18; drift_watch / suspect_jit_share in r19;
+    * the construct_s / plan_s / exec_s split of the same window) do not
+    * bump the regime: timings and their methodology are
     * untouched, so baselines stay comparable. Likewise the r19
     * compounding-drift trigger only ADDS entries to the isolated
     * re-timing pass (suspect SELECTION, not measurement), so it rides
     * v4.
     */
   private[graft] val Regime = "pass-major-rotate-v5"
+
+  /** Sentinel-normalized in-suite/baseline ratio over which a query is
+    * a suspect and gets an isolated re-timing. */
+  private val SuspectRatio = 1.5
+
+  /** Cap on isolated re-timings, worst offenders first, so a
+    * drift-heavy run cannot double the suite's wall clock. */
+  private val MaxSuspects = 12
+
+  /** Ratio at or over which a query enters the artifact's drift_watch;
+    * a query on the baseline's watch that moves this much again is
+    * promoted to the re-timing pass (the compounding trigger). */
+  private val WatchRatio = 1.1
 
   /** A parsed prior artifact: per-query seconds, the sentinel
     * yardstick, the regime tag ("" on pre-v2 artifacts), and the
@@ -111,6 +125,15 @@ object Bench {
     else (xs(n / 2 - 1) + xs(n / 2)) / 2.0
   }
 
+  /** JSON string body: an env-provided path with a quote or backslash
+    * must not produce unparseable JSON. */
+  private def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+
+  private def ms(v: Double): String = (math.rint(v * 1000) / 1000).toString
+
+  private def cpusJson(cpus: String) =
+    if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "\"" + esc(cpus) + "\""
+
   /** The compact machine-readable run summary printed as the FINAL
     * stdout line. The full artifact line is ~20 KB (5 query-keyed
     * diagnostic objects + the isolated_* family) and the queries map
@@ -118,25 +141,24 @@ object Bench {
     * (the round driver keeps 2000 chars) could never see a complete
     * JSON object, so two rounds of PERF comparisons ran blind. This
     * line carries the headline numbers and pointers and is guaranteed
-    * under 1900 chars (suspect/failed lists are capped; sizes are
-    * spec-pinned); the full per-query artifact is unchanged and lives
-    * in bench.json plus the earlier stdout line.
+    * under 1900 chars (suspect/failed lists are capped, the sf path
+    * keeps its last 120 chars and each query name its first 64; sizes
+    * are spec-pinned); the full per-query artifact is unchanged and
+    * lives in bench.json plus the earlier stdout line.
     */
   private[graft] def summaryLine(total: Double, sfDir: String, cpus: String,
       passes: Int, leaked: Long, sentinel: Double, regime: String,
       nQueries: Int, failed: Seq[String], suspects: Seq[(String, Double)],
       driftSentinel: Double, driftUsed: Double, watchN: Int,
       watchOverflow: Int): String = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    def ms(v: Double): String = (math.rint(v * 1000) / 1000).toString
-    val cpusJson =
-      if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "\"" + esc(cpus) + "\""
-    val failedJson = failed.take(8).map("\"" + esc(_) + "\"")
+    def name(q: String) = esc(q.take(64))
+    val sf = if (sfDir.length <= 120) sfDir else "..." + sfDir.takeRight(117)
+    val failedJson = failed.take(8).map("\"" + name(_) + "\"")
       .mkString("[", ",", "]")
     val suspectsJson = suspects.take(5)
-      .map { case (k, v) => "\"" + esc(k) + "\":" + ms(v) }
+      .map { case (k, v) => "\"" + name(k) + "\":" + ms(v) }
       .mkString("{", ",", "}")
-    s"""{"metric":"total","value":$total,"unit":"sec","sf":"${esc(sfDir)}","cpus":$cpusJson,"passes":$passes,"regime":"${esc(regime)}","sentinel_s":$sentinel,"leaked":$leaked,"n_queries":$nQueries,"n_failed":${failed.size},"failed":$failedJson,"drift_sentinel":${ms(driftSentinel)},"drift_used":${ms(driftUsed)},"watch_n":$watchN,"watch_overflow":$watchOverflow,"suspects":$suspectsJson,"queries_file":"bench.json","summary":true}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","sf":"${esc(sf)}","cpus":${cpusJson(cpus)},"passes":$passes,"regime":"${esc(regime)}","sentinel_s":$sentinel,"leaked":$leaked,"n_queries":$nQueries,"n_failed":${failed.size},"failed":$failedJson,"drift_sentinel":${ms(driftSentinel)},"drift_used":${ms(driftUsed)},"watch_n":$watchN,"watch_overflow":$watchOverflow,"suspects":$suspectsJson,"queries_file":"bench.json","summary":true}"""
   }
 
   /** Parse one flat (string→number) object by its literal marker; the
@@ -223,16 +245,30 @@ object Bench {
       val swept = StorageHygiene.releaseAndSweep(spark, "bench", name, df, ok)
       if (ok) leaked += swept
     }
-    queries.foreach { case (name, fn) =>
+    // one run into the noop sink: forces full materialization of every
+    // output column (a bare count() lets Catalyst prune projection-only
+    // plans away). The frame is bound BEFORE the action so a failed save
+    // still gets a targeted checkpoint release instead of polluting the
+    // leaked counter. (ok, frame, seconds the registry function took)
+    def runOnce(failure: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : (Boolean, Option[org.apache.spark.sql.DataFrame], Double) = {
       var df: Option[org.apache.spark.sql.DataFrame] = None
+      var construct = -1.0
       val ok =
         try {
+          val c0 = System.nanoTime()
           val d = fn(spark, sfDir); df = Some(d)
+          construct = (System.nanoTime() - c0) / 1e9
           d.write.mode("overwrite").format("noop").save(); true
         } catch { case e: Throwable =>
-          System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
+          System.err.println(s"[bench] $failure: ${e.getMessage}")
           false
         }
+      (ok, df, construct)
+    }
+    queries.foreach { case (name, fn) =>
+      val (ok, df, _) = runOnce(s"warmup $name failed", fn)
       release(name, df, ok)
     }
     // quiesce: the warmup sweep just executed EVERY query once, leaving
@@ -255,74 +291,27 @@ object Bench {
     // the least-noisy view of the plan's cost
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
     val ordered = queries.toSeq.sortBy(_._1)
-    // per-window mechanism diagnostics — all JVM-global, which is
-    // exactly the point: the backlog a heavy NEIGHBOR leaves surfaces
-    // INSIDE the next query's window, and these fields separate each
-    // candidate mechanism from plan cost without a re-run. Round 16
-    // disproved leaked checkpoints (block manager provably empty, gap
-    // persisted); round 17's gc_s (≤0.062 s everywhere) disproved
-    // measured GC pause; round 18 adds the remaining unmeasured
-    // candidates: JIT compilation time (code-cache churn from ~143
-    // plans' generated classes), ContextCleaner events drained in the
-    // window (a drain is work a neighbor enqueued but never paid for),
-    // and the size of the cleaner's registered-not-yet-cleaned set at
-    // window end (an upper BOUND on backlog — it includes live objects;
-    // see CleanerBridge.pendingDepth). Diagnostics
-    // only — timings and their methodology are unchanged, so the
-    // regime tag stays v4 and baselines remain comparable.
-    def gcMillis(): Long = {
-      val it = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.iterator()
-      var total = 0L
-      while (it.hasNext) total += it.next().getCollectionTime.max(0L)
-      total
+    // every timed window is a RunRecorder window: its record carries
+    // the JVM-global mechanism diagnostics (GC, JIT, ContextCleaner
+    // drain and pending depth) that separate a heavy NEIGHBOR's backlog
+    // from plan cost without a re-run, and the planning seconds that
+    // split the window into construct / plan / execute. Diagnostics
+    // only: the timed span is the same body as before, so the regime
+    // tag stays v5 and baselines remain comparable.
+    val recorder = RunRecorder(spark)
+    // sec carries the timing (or the -1 failure sentinel); construct is
+    // the registry function's own share of it
+    case class Diag(sec: Double, construct: Double, rec: RunRecorder.Record) {
+      def plan: Double = if (sec < 0) -1.0 else rec.planSeconds
+      def exec: Double = if (sec < 0) -1.0 else sec - construct - plan
     }
-    val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-    def jitMillis(): Long =
-      if (jitBean != null && jitBean.isCompilationTimeMonitoringSupported)
-        jitBean.getTotalCompilationTime
-      else -1L
-    val cleanedCounter = org.apache.spark.graftbridge.CleanerBridge
-      .attachCounter(spark.sparkContext)
-    def cleanedNow(): Long = cleanedCounter.map(_.get).getOrElse(-1L)
-    def pendingNow(): Long = org.apache.spark.graftbridge.CleanerBridge
-      .pendingDepth(spark.sparkContext)
-    // sec carries the timing (or the -1 failure sentinel); the rest are
-    // the window's mechanism diagnostics (-1 = unmeasurable, never 0)
-    case class Diag(sec: Double, gc: Double, jit: Double,
-        cleaned: Long, pending: Long)
     // the all-passes-crashed fallback: every field carries the -1
     // unmeasurable sentinel — a 0 here would read as "window measured,
     // no JIT/cleaner/GC activity" for a window that never ran clean
-    val CrashedDiag = Diag(-1.0, -1.0, -1.0, -1L, -1L)
+    val CrashedDiag = Diag(-1.0, -1.0, RunRecorder.Unmeasured)
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Diag = {
-      val gc0 = gcMillis()
-      val jit0 = jitMillis()
-      val cl0 = cleanedNow()
-      val t0 = System.nanoTime()
-      // noop sink: forces full materialization of every output column
-      // (a bare count() lets Catalyst prune projection-only plans away).
-      // The frame is bound BEFORE the action so a failed save still
-      // gets a targeted checkpoint release instead of polluting the
-      // leaked counter.
-      var df: Option[org.apache.spark.sql.DataFrame] = None
-      val ok =
-        try {
-          val d = fn(spark, sfDir); df = Some(d)
-          d.write.mode("overwrite").format("noop").save(); true
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
-        }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      val gcSec = (gcMillis() - gc0) / 1e3
-      val jit1 = jitMillis()
-      val jitSec = if (jit0 < 0 || jit1 < 0) -1.0 else (jit1 - jit0) / 1e3
-      val cl1 = cleanedNow()
-      val cleaned = if (cl0 < 0 || cl1 < 0) -1L else cl1 - cl0
-      // depth is sampled AT WINDOW END, inside the window's accounting:
-      // what the cleaner still owes when this query's clock stopped
-      val pending = pendingNow()
+      val ((ok, df, construct), rec) =
+        recorder.window(runOnce(s"$name FAILED", fn))
       // checkpoint release runs OUTSIDE the timed window: timings
       // measure the plan, and every query starts from the same empty
       // block manager (the "isolated" condition) instead of inheriting
@@ -331,7 +320,7 @@ object Bench {
       // a failed query must be loud IN THE JSON too: -1 is
       // unmistakably not a timing, so consumers cannot mistake a
       // crash for speed
-      Diag(if (ok) elapsed else -1.0, gcSec, jitSec, cleaned, pending)
+      if (ok) Diag(rec.seconds, construct, rec) else Diag(-1.0, -1.0, rec)
     }
     // pass-major with a rotated start per pass: any residual boundary
     // overhead a quiesce misses lands on a DIFFERENT query each pass, so
@@ -347,10 +336,14 @@ object Bench {
         timesByQuery(name) = timeOnce(name, fn) :: timesByQuery.getOrElse(name, Nil)
       }
     }
-    val results = ordered.map { case (name, _) =>
+    // the pass that supplied each reported min (CrashedDiag when any
+    // pass crashed): its sec is the "queries" entry, and its
+    // construct / plan / exec split sums to it
+    val reported = ordered.map { case (name, _) =>
       val times = timesByQuery.getOrElse(name, List(CrashedDiag))
-      name -> (if (times.exists(_.sec == -1.0)) -1.0 else times.map(_.sec).min)
+      name -> (if (times.exists(_.sec < 0)) CrashedDiag else times.minBy(_.sec))
     }
+    val results = reported.map { case (name, d) => name -> d.sec }
     // the diagnostics of the pass that SUPPLIED each query's reported
     // min — pairing them keeps "how much of this number was collection
     // pauses / JIT / cleaner drain" answerable per artifact entry.
@@ -399,11 +392,6 @@ object Bench {
     // min-of-5 in this same JVM — post-suite, post-quiesce, empty
     // block manager — and recorded as "isolated_s". A reader needs no
     // re-run: isolated_s IS the isolated number.
-    val suspectThreshold =
-      sys.env.getOrElse("SPARK_GRAFT_SUSPECT_RATIO", "1.5").toDouble
-    // cap the re-timing budget so a drift-heavy run cannot double the
-    // suite's wall clock; worst offenders first
-    val maxSuspects = sys.env.getOrElse("SPARK_GRAFT_MAX_SUSPECTS", "12").toInt
     // baseline defaults to the committed working-tree bench.json; a
     // re-run in the same tree would otherwise compare against its own
     // immediately previous output (this run overwrites the file at the
@@ -458,21 +446,20 @@ object Bench {
     // ≥ the watch threshold AGAIN this run is promoted into the
     // isolated re-timing pass even though below the suspect threshold
     // — two consecutive compounding moves always get adjudicated.
-    val watchThreshold =
-      sys.env.getOrElse("SPARK_GRAFT_WATCH_RATIO", "1.1").toDouble
     val watch: Seq[(String, Double)] = comparison
       .fold(Seq.empty[(String, Double)]) { case (norm, _, _, _) =>
-        norm.filter(_._2 >= watchThreshold).toSeq.sortBy(-_._2)
+        norm.filter(_._2 >= WatchRatio).toSeq.sortBy(-_._2)
       }
     val qualifying: Seq[(String, Double)] = comparison
       .fold(Seq.empty[(String, Double)]) { case (norm, baseWatch, _, _) =>
-        qualifyingSuspects(norm, baseWatch, watchThreshold, suspectThreshold)
+        qualifyingSuspects(norm, baseWatch, WatchRatio, SuspectRatio)
       }
-    val suspects: Seq[(String, Double)] = qualifying.take(maxSuspects)
+    val suspects: Seq[(String, Double)] = qualifying.take(MaxSuspects)
     // qualifying entries the cap dropped from the isolated re-timing
     // pass — nonzero means the artifact's adjudication is INCOMPLETE
-    // this run and the reader should widen SPARK_GRAFT_MAX_SUSPECTS
-    val watchOverflow = (qualifying.size - maxSuspects).max(0)
+    // this run: the dropped entries are still listed in drift_watch /
+    // suspect_ratio, and a SPARK_GRAFT_ONLY run of them re-times them
+    val watchOverflow = (qualifying.size - MaxSuspects).max(0)
     // isolated re-timings carry their OWN min-pass diagnostics: one
     // artifact then answers the mechanism question per suspect — if
     // the in-suite window shows a JIT/cleaner/GC load the isolated
@@ -487,25 +474,30 @@ object Bench {
     def obj[T](xs: Seq[(String, T)])(f: T => String): String =
       xs.map { case (k, v) => "\"" + k + "\":" + f(v) }
         .mkString("{", ",", "}")
-    def ms(v: Double): String = (math.rint(v * 1000) / 1000).toString
     val qs = obj(results)(_.toString)
     // millisecond precision keeps the line short. Artifact layout: the
     // pre-"queries" placement invariant covers gc_s/jit_s/cleaned_n/
-    // cleaner_pending ONLY — suspect_ratio/drift_watch/
-    // suspect_jit_share and the isolated_* family are also
+    // cleaner_pending ONLY — construct_s/plan_s/exec_s, suspect_ratio/
+    // drift_watch/suspect_jit_share and the isolated_* family are also
     // query-name-keyed but sit AFTER "queries", so a tail-fragment
     // regex for "q_*":number MUST anchor on the literal `"queries":{`
     // marker (loadBaseline does; BenchBaselineSpec pins both shapes)
     // rather than scan the whole line
-    val gcJson = obj(diagOfMin)(d => ms(d.gc))
-    val jitJson = obj(diagOfMin)(d => ms(d.jit))
-    val cleanedJson = obj(diagOfMin)(_.cleaned.toString)
-    val pendingJson = obj(diagOfMin)(_.pending.toString)
+    val gcJson = obj(diagOfMin)(d => ms(d.rec.gcSeconds))
+    val jitJson = obj(diagOfMin)(d => ms(d.rec.jitSeconds))
+    val cleanedJson = obj(diagOfMin)(_.rec.cleaned.toString)
+    val pendingJson = obj(diagOfMin)(_.rec.cleanerPending.toString)
+    // full precision, so the three sum to the "queries" entry:
+    // construct is the registry function, plan the write's
+    // QueryExecution tracker, exec the remainder
+    val constructJson = obj(reported)(_.construct.toString)
+    val planJson = obj(reported)(_.plan.toString)
+    val execJson = obj(reported)(_.exec.toString)
     val isoJson = obj(isolated)(_.sec.toString)
-    val isoGcJson = obj(isolated)(d => ms(d.gc))
-    val isoJitJson = obj(isolated)(d => ms(d.jit))
-    val isoCleanedJson = obj(isolated)(_.cleaned.toString)
-    val isoPendingJson = obj(isolated)(_.pending.toString)
+    val isoGcJson = obj(isolated)(d => ms(d.rec.gcSeconds))
+    val isoJitJson = obj(isolated)(d => ms(d.rec.jitSeconds))
+    val isoCleanedJson = obj(isolated)(_.rec.cleaned.toString)
+    val isoPendingJson = obj(isolated)(_.rec.cleanerPending.toString)
     val suspectJson = obj(suspects)(_.toString)
     val watchJson = obj(watch)(r => ms(r))
     // self-explaining degraded runs (r19): for each isolated-re-timed
@@ -523,28 +515,23 @@ object Bench {
       val dIn = diagMap.getOrElse(name, CrashedDiag)
       val dt = tIn - iso.sec
       val share =
-        if (tIn <= 0 || iso.sec <= 0 || dIn.jit < 0 || iso.jit < 0 ||
-            dt <= 0.05) -1.0
-        else ((dIn.jit - iso.jit) / dt).max(0.0)
+        if (tIn <= 0 || iso.sec <= 0 || dIn.rec.jitSeconds < 0 ||
+            iso.rec.jitSeconds < 0 || dt <= 0.05) -1.0
+        else ((dIn.rec.jitSeconds - iso.rec.jitSeconds) / dt).max(0.0)
       name -> share
     }
     val jitShareJson = obj(jitShare)(v => ms(v))
     // total covers successful queries only — summing the -1 failure
     // sentinels would make a crashed query IMPROVE the headline number
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    // escape env-provided paths — a quote or backslash in the dir name
-    // must not produce unparseable JSON
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     // "sweep":true documents the per-query release mode (bench hygiene:
     // timings are storage-isolated); "leaked" counts fixed-point
     // violations the sweep had to absorb — anything non-zero is a bug
     // "regime" names the timing methodology; bump it whenever the
     // measurement procedure changes (warmup policy, rotation, quiesce,
     // sentinel) so artifacts from different regimes are never compared
-    val cpusJson =
-      if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "\"" + esc(cpus) + "\""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","gc_s":$gcJson,"jit_s":$jitJson,"cleaned_n":$cleanedJson,"cleaner_pending":$pendingJson,"queries":$qs,"sf":"${esc(sfDir)}","warmup":"${esc(sfDir)}","cpus":$cpusJson,"passes":$passes,"sweep":true,"leaked":$leaked,"regime":"$Regime","sentinel_s":$sentinel,"baseline":"${esc(baselinePath)}","drift_sentinel":${ms(driftSentinel)},"drift_used":${ms(driftUsed)},"suspect_ratio":$suspectJson,"drift_watch":$watchJson,"watch_overflow":$watchOverflow,"suspect_jit_share":$jitShareJson,"isolated_s":$isoJson,"isolated_gc_s":$isoGcJson,"isolated_jit_s":$isoJitJson,"isolated_cleaned_n":$isoCleanedJson,"isolated_pending":$isoPendingJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","gc_s":$gcJson,"jit_s":$jitJson,"cleaned_n":$cleanedJson,"cleaner_pending":$pendingJson,"queries":$qs,"construct_s":$constructJson,"plan_s":$planJson,"exec_s":$execJson,"sf":"${esc(sfDir)}","warmup":"${esc(sfDir)}","cpus":${cpusJson(cpus)},"passes":$passes,"sweep":true,"leaked":$leaked,"regime":"$Regime","sentinel_s":$sentinel,"baseline":"${esc(baselinePath)}","drift_sentinel":${ms(driftSentinel)},"drift_used":${ms(driftUsed)},"suspect_ratio":$suspectJson,"drift_watch":$watchJson,"watch_overflow":$watchOverflow,"suspect_jit_share":$jitShareJson,"isolated_s":$isoJson,"isolated_gc_s":$isoGcJson,"isolated_jit_s":$isoJitJson,"isolated_cleaned_n":$isoCleanedJson,"isolated_pending":$isoPendingJson}"""
     println(line)
     // also persist to a file: stdout can get interleaved with stray
     // [error] log lines under sbt, which breaks line-oriented parsers.

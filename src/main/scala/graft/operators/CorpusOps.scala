@@ -734,6 +734,15 @@ object CorpusOps {
       .unionByName(docs.filter(col("doc_id") % 11 === 0)
         .select((col("doc_id") + lit(idShift)).as("doc_id"), col("text")))
 
+  /** Near-duplicate pairs counted per (source_lo, source_hi) pair of
+    * sources. Precondition: `doc_id` is unique in `docs`. The melt
+    * below matches the old double join (least/greatest over the two
+    * members' sources) and its regroup is 1:1 only for unique ids. A
+    * repeated id attaches all of its sources to each of its pairs: the
+    * regroup folds them into one row whose min/max can span two of the
+    * id's own sources, where the double join emitted one row per
+    * source combination.
+    */
   def sourceOverlap(docs: DataFrame): DataFrame = {
     // r22 (guide §2.4): the old shape joined the (doc_id, source)
     // projection to the pair list TWICE — two full corpus-projection

@@ -2,13 +2,11 @@ package org.apache.spark.graftbridge
 
 import org.apache.spark.{CleanerListener, SparkContext}
 
-/** Bridge into the `private[spark]` ContextCleaner so the bench can
-  * MEASURE the async cleanup backlog instead of hypothesizing about it
-  * (rounds 16–17 disproved leaked checkpoints and measured-GC-pause as
-  * the in-suite inflation mechanism; the cleaner queue was the next
-  * unmeasured candidate). Lives under `org.apache.spark` purely for
-  * access; no Spark internals are modified — one listener attached,
-  * one private field read reflectively.
+/** Bridge into the `private[spark]` ContextCleaner so
+  * [[graft.RunRecorder]] can MEASURE the async cleanup backlog a window
+  * inherits. Lives under `org.apache.spark` purely for access; no Spark
+  * internals are modified — one listener attached, one private field
+  * read reflectively.
   */
 object CleanerBridge {
 

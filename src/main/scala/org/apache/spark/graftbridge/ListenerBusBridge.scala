@@ -5,16 +5,11 @@ import org.apache.spark.SparkContext
 /** Bridge into the `private[spark]` listener bus (bytecode-public —
   * Spark's own suites call it between every job and assertion) so
   * graft can drain the ASYNC bus deterministically where a counter
-  * read follows listener-maintained state:
-  *
-  *  - SparkSuite.afterAll reads the unexpected-retry counter at suite
-  *    boundaries; a time-based sleep either misses a late-delivered
-  *    event (silently absorbed into the next suite's baseline) or
-  *    leaks an injected-retry event into the following suite's watch
-  *    under load.
-  *  - Verify's per-query spill attribution reads the session spill
-  *    totals between queries; without a drain a query's tail task
-  *    metrics land on its successor's delta.
+  * read follows listener-maintained state: [[graft.RunRecorder]]
+  * closing a window, and SparkSuite.afterAll reading the
+  * unexpected-retry counter at suite boundaries. A time-based sleep
+  * instead either misses a late-delivered event or credits it to the
+  * next reader.
   *
   * Lives under `org.apache.spark` purely for access; nothing here
   * touches Spark state — one blocking read of queue emptiness.

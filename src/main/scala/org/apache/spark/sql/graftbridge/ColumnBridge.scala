@@ -50,6 +50,13 @@ object ColumnBridge {
         l.rdd.unpersist(blocking)
       case _ => ()
     }
+
+  /** The QueryExecution an execution-end event carries (null when none
+    * is attached), with its execution id: what lets [[graft.RunRecorder]]
+    * credit planning time to the window whose jobs ran it. */
+  def queryExecution(e: org.apache.spark.sql.execution.ui
+      .SparkListenerSQLExecutionEnd): org.apache.spark.sql.execution
+      .QueryExecution = e.qe
 }
 
 /** Bridge for `ImplicitCastInputTypes`: its `inputTypes` signature

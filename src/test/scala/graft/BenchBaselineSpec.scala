@@ -32,6 +32,18 @@ class BenchBaselineSpec extends AnyFunSuite {
       // a pre-r19 artifact has no drift_watch — parses empty, not None
       assert(b.watch.isEmpty)
     }
+    // the phase split (construct_s/plan_s/exec_s) sits right after
+    // "queries" and reuses its keys — the timings still come only from
+    // the `"queries":{` object
+    val phased =
+      """{"metric":"total","value":1.75,"unit":"sec","gc_s":{"q_agg":0.01,"q_knn":0.0},"queries":{"q_agg":1.25,"q_knn":0.5},"construct_s":{"q_agg":0.25,"q_knn":0.125},"plan_s":{"q_agg":0.5,"q_knn":0.125},"exec_s":{"q_agg":0.5,"q_knn":0.25},"sf":"/x","passes":2,"regime":"pass-major-rotate-v5","sentinel_s":0.1,"drift_watch":{"q_knn":1.2}}"""
+    withTemp(phased) { path =>
+      val Some(b) = Bench.loadBaseline(path)
+      assert(b.queries == Map("q_agg" -> 1.25, "q_knn" -> 0.5),
+        s"timing misread from a phase object: ${b.queries}")
+      assert(b.regime == Bench.Regime && b.sentinel == 0.1)
+      assert(b.watch == Map("q_knn" -> 1.2))
+    }
     // a pre-regime artifact parses with an empty tag (never compared
     // raw against a tagged run — the caller's mismatch check handles it)
     withTemp("""{"queries":{"q":1.0},"sentinel_s":0.2}""") { p =>
@@ -166,6 +178,14 @@ class BenchBaselineSpec extends AnyFunSuite {
     val s = Bench.summaryLine(86.612345, "/root/testdata/sf0.1", "32", 2, 0,
       0.127, Bench.Regime, 143, failed, suspects, 0.78, 1.01, 9, 0)
     assert(s.length < 1900, s"summary too long: ${s.length}")
+    // the strings are bounded too: a 5,000-char sf dir and 200-char
+    // query names in both lists still fit
+    val longName = (i: Int) => f"q_$i%02d_" + "x" * 195
+    val sLong = Bench.summaryLine(86.612345, "/d" * 2500, "32", 2, 0, 0.127,
+      Bench.Regime, 143, (1 to 30).map(longName),
+      (1 to 12).map(i => longName(i) -> (2.0 + i)), 0.78, 1.01, 9, 0)
+    assert(sLong.length < 1900, s"summary too long: ${sLong.length}")
+    assert(sLong.contains("\"n_failed\":30") && sLong.endsWith("}"))
     for (k <- Seq("\"metric\":\"total\"", "\"value\":86.612345",
         "\"unit\":\"sec\"", "\"cpus\":32", "\"sentinel_s\":0.127",
         "\"regime\":", "\"n_queries\":143", "\"n_failed\":30",
@@ -176,6 +196,8 @@ class BenchBaselineSpec extends AnyFunSuite {
     val s2 = Bench.summaryLine(1.0, "/x", "8\"x", 1, 0, 0.1, Bench.Regime,
       1, Nil, Nil, -1.0, -1.0, 0, 0)
     assert(s2.contains("\"cpus\":\"8\\\"x\""))
+    // a short sf path is kept whole
+    assert(s2.contains("\"sf\":\"/x\""))
   }
 
   test("missing file, missing sentinel, empty queries, garbage → None") {

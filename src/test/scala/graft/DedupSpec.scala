@@ -265,18 +265,8 @@ class DedupSpec extends SparkSuite {
       // observed write. Equal counts prove the convergence verdict rides
       // INSIDE the write job — the old shape's separate post-write
       // filter scan would show up as an extra job here.
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      def countJobs(run: => Unit): Int = {
-        spark.sparkContext.addSparkListener(listener)
-        try { jobs.set(0); run; Thread.sleep(1000); jobs.get }
-        finally spark.sparkContext.removeSparkListener(listener)
-      }
+      def countJobs(run: => Unit): Long =
+        RunRecorder(spark).window(run)._2.jobs
       val baseJobs = countJobs {
         graft.sources.CorpusStore.writeBucketed(
           Dedup.propagationRound(edges, labels1), "obs_base", s"$dir/base", 4)

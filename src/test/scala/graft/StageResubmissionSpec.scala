@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.TaskContext
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -64,13 +63,6 @@ class StageResubmissionSpec extends SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  /** Nearest upstream shuffle id in the RDD lineage. */
-  private def upstreamShuffleId(r: RDD[_]): Option[Int] =
-    r.dependencies.collectFirst {
-      case s: org.apache.spark.ShuffleDependency[_, _, _] => s.shuffleId
-    }.orElse(r.dependencies.view
-      .flatMap(d => upstreamShuffleId(d.rdd)).headOption)
-
   private def check(name: String, df: DataFrame): Unit = {
     val clean = df.collect().map(_.toString).sorted.toSeq
     assert(clean.nonEmpty, s"$name: empty clean result — fixture broke")
@@ -78,18 +70,11 @@ class StageResubmissionSpec extends SparkSuite {
     // the injected job plans fresh shuffles and computes its own map
     // stages; the injected fetch failure then forces their regeneration
     val rows = df.rdd
-    val sid = upstreamShuffleId(rows)
+    val sid = Verify.upstreamShuffleId(rows)
       .getOrElse(fail(s"$name: no upstream shuffle in the plan"))
-    val resubmitted = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        if (e.stageInfo.attemptNumber() > 0) resubmitted.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val before = injected.get()
-      val got = rows.mapPartitionsWithIndex { (i, it) =>
+    val before = injected.get()
+    val (got, run) = RunRecorder(spark).window {
+      rows.mapPartitionsWithIndex { (i, it) =>
         val tc = TaskContext.get()
         // first attempt of the first stage attempt only — the re-run
         // (stageAttemptNumber > 0) must consume the regenerated
@@ -104,23 +89,19 @@ class StageResubmissionSpec extends SparkSuite {
         }
         it
       }.collect().map(_.toString).sorted.toSeq
-      assert(injected.get() > before,
-        s"$name: injection never fired — the check is vacuous")
-      // the listener bus is async; give the resubmission evidence a
-      // bounded moment to arrive before calling the check vacuous
-      var waited = 0
-      while (resubmitted.get() == 0 && waited < 50) {
-        Thread.sleep(100); waited += 1
-      }
-      assert(resubmitted.get() > 0,
-        s"$name: no stage attempt > 0 observed — the fetch failure " +
-          "never reached the scheduler as a resubmission")
-      assert(got == clean,
-        s"$name: result changed when a partition was recomputed " +
-          s"against regenerated shuffle output — first diff: " +
-          s"${got.zipAll(clean, "<missing>", "<missing>")
-            .find(p => p._1 != p._2)}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(injected.get() > before,
+      s"$name: injection never fired — the check is vacuous")
+    // the window drains the listener bus before it closes, so the
+    // resubmission evidence is complete here
+    assert(run.resubmitted > 0,
+      s"$name: no stage attempt > 0 observed — the fetch failure " +
+        "never reached the scheduler as a resubmission")
+    assert(got == clean,
+      s"$name: result changed when a partition was recomputed " +
+        s"against regenerated shuffle output — first diff: " +
+        s"${got.zipAll(clean, "<missing>", "<missing>")
+          .find(p => p._1 != p._2)}")
   }
 
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
