@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.Tables
+
 /** Benchmark main — runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
   * A small warmup job first absorbs session/codegen startup so query
@@ -71,31 +73,24 @@ object Bench {
     * threshold (worst first), then the compounding sub-threshold
     * entries — on the baseline's watch AND ≥ the watch threshold
     * again this run, i.e. two consecutive same-direction moves —
-    * capped at `max`. Pure and spec-pinned (BenchBaselineSpec): a
-    * selection regression here silently blinds the adjudication pass.
+    * capped at `max`. Also returns how many qualifying entries the cap
+    * dropped, the artifact's `watch_overflow`: r19 produced 16 watch
+    * entries against the 12 cap, and a worst-case next round would
+    * have skipped 4 compounding entries' adjudication with no trace in
+    * the artifact. Pure, called by main as is and spec-pinned
+    * (BenchBaselineSpec): a selection regression here silently blinds
+    * the adjudication pass.
     */
   private[graft] def selectSuspects(norm: Map[String, Double],
       baseWatch: Map[String, Double], watchThreshold: Double,
-      suspectThreshold: Double, max: Int): Seq[(String, Double)] =
-    qualifyingSuspects(norm, baseWatch, watchThreshold, suspectThreshold)
-      .take(max)
-
-  /** The UNCAPPED qualifying list behind [[selectSuspects]]: suspects
-    * over the threshold (worst first), then the compounding
-    * promotions. Separated so the artifact can report
-    * `watch_overflow` — how many qualifying entries the re-timing cap
-    * dropped. r19 produced 16 watch entries against the 12 cap: a
-    * worst-case next round would silently skip 4 compounding entries'
-    * adjudication with no trace in the artifact without this count. */
-  private[graft] def qualifyingSuspects(norm: Map[String, Double],
-      baseWatch: Map[String, Double], watchThreshold: Double,
-      suspectThreshold: Double): Seq[(String, Double)] = {
+      suspectThreshold: Double, max: Int): (Seq[(String, Double)], Int) = {
     val over = norm.filter(_._2 > suspectThreshold).toSeq.sortBy(-_._2)
     val compounding = norm.filter { case (name, r) =>
       r >= watchThreshold && r <= suspectThreshold &&
         baseWatch.get(name).exists(_ >= watchThreshold)
     }.toSeq.sortBy(-_._2)
-    over ++ compounding
+    val qualifying = over ++ compounding
+    (qualifying.take(max), (qualifying.size - max).max(0))
   }
 
   /** Environment-drift estimator for watch/suspect normalization.
@@ -205,6 +200,11 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession(GraftSession.BenchLayout)
     val cpus = spark.sparkContext.defaultParallelism.toString
+    // the one fixed trivial frame behind the warmup, every quiesce and
+    // the drift sentinel: a raw events scan grouped by event_type, so
+    // its plan never changes round over round
+    def sentinelFrame() =
+      Tables.read(spark, sfDir, "events").groupBy("event_type").count()
     // warmup: parquet reader + shuffle machinery, then one untimed run
     // of EVERY query at the SAME scale factor. Janino compilation of
     // generated code dominates first-run cost (7.5s cold vs 0.8s warm
@@ -214,8 +214,7 @@ object Bench {
     // measured SF — AQE picks different join strategies at different
     // sizes (broadcast vs sort-merge), and a different physical plan
     // compiles different generated classes, missing the cache.
-    spark.read.parquet(s"$sfDir/events.parquet")
-      .groupBy("event_type").count().count()
+    sentinelFrame().count()
     // the bench measures the correctness registry PLUS the bench-only
     // train-time twins (Lloyd's paths — recall-gated in specs, never
     // oracle-checkable, but their cost is worth tracking round over
@@ -281,8 +280,7 @@ object Bench {
     // remaining boundary cost, then collect again.
     def quiesce(): Unit = {
       System.gc(); Thread.sleep(500)
-      spark.read.parquet(s"$sfDir/events.parquet")
-        .groupBy("event_type").count().count()
+      sentinelFrame().count()
       System.gc(); Thread.sleep(200)
     }
     quiesce()
@@ -370,9 +368,7 @@ object Bench {
     val sentinel =
       try (0 until 5).map { _ =>
         val t0 = System.nanoTime()
-        spark.read.parquet(s"$sfDir/events.parquet")
-          .groupBy("event_type").count()
-          .write.mode("overwrite").format("noop").save()
+        sentinelFrame().write.mode("overwrite").format("noop").save()
         (System.nanoTime() - t0) / 1e9
       }.min
       catch { case e: Throwable =>
@@ -450,16 +446,15 @@ object Bench {
       .fold(Seq.empty[(String, Double)]) { case (norm, _, _, _) =>
         norm.filter(_._2 >= WatchRatio).toSeq.sortBy(-_._2)
       }
-    val qualifying: Seq[(String, Double)] = comparison
-      .fold(Seq.empty[(String, Double)]) { case (norm, baseWatch, _, _) =>
-        qualifyingSuspects(norm, baseWatch, WatchRatio, SuspectRatio)
+    // watchOverflow counts the qualifying entries the cap dropped from
+    // the isolated re-timing pass — nonzero means the artifact's
+    // adjudication is INCOMPLETE this run: the dropped entries are
+    // still listed in drift_watch / suspect_ratio, and a
+    // SPARK_GRAFT_ONLY run of them re-times them
+    val (suspects, watchOverflow) = comparison
+      .fold((Seq.empty[(String, Double)], 0)) { case (norm, baseWatch, _, _) =>
+        selectSuspects(norm, baseWatch, WatchRatio, SuspectRatio, MaxSuspects)
       }
-    val suspects: Seq[(String, Double)] = qualifying.take(MaxSuspects)
-    // qualifying entries the cap dropped from the isolated re-timing
-    // pass — nonzero means the artifact's adjudication is INCOMPLETE
-    // this run: the dropped entries are still listed in drift_watch /
-    // suspect_ratio, and a SPARK_GRAFT_ONLY run of them re-times them
-    val watchOverflow = (qualifying.size - MaxSuspects).max(0)
     // isolated re-timings carry their OWN min-pass diagnostics: one
     // artifact then answers the mechanism question per suspect — if
     // the in-suite window shows a JIT/cleaner/GC load the isolated

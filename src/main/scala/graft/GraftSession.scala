@@ -29,16 +29,19 @@ object GraftSession {
   /** The CLI's: every core, 32 shuffle partitions. */
   val CliLayout = Layout("local[*]", "32")
 
+  /** Lets a TIMESTAMP(NANOS) events fixture read at all, as a raw long
+    * that `EventsAsRecords.normalizeTs` turns into a timestamp. Set here
+    * for every session and by no reader. */
+  val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** The conf every session carries. The generated-class cache is sized
     * to the registry (Bench r21): ~143 plans compile far more classes
     * than the default 100 entries hold, so with the default every warm
-    * query paid Janino + C2 again for classes already compiled once.
-    * nanosAsLong lets a TIMESTAMP(NANOS) events fixture read at all;
-    * `EventsAsRecords.normalizeTs` canonicalizes either `ts` encoding. */
+    * query paid Janino + C2 again for classes already compiled once. */
   private val SharedConf = Map(
     "spark.app.name" -> "graft-topic-analyzer",
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    NanosAsLong -> "true",
     "spark.sql.codegen.cache.maxEntries" -> "4096",
     "spark.ui.enabled" -> "false")
 

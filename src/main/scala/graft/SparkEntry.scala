@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AliveKeys, CorpusOps, Dedup, EventAnalytics, Similarity, TextAnalysis, TopicMetrics}
-import graft.sources.EventsAsRecords
+import graft.sources.{EventsAsRecords, Tables}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   * Every implemented operator from SURVEY §2 surfaces here as a named
@@ -13,57 +13,53 @@ import graft.sources.EventsAsRecords
   */
 object SparkEntry {
 
-  private def records(s: SparkSession, dir: String): DataFrame =
-    EventsAsRecords.records(s, dir)
-
-  /** One warehouse-table read — every relational query loads tables
-    * through here. */
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    TopicMetrics.report(records(spark, "/root/testdata/sf0.001"))
+    TopicMetrics.report(EventsAsRecords.records(spark, "/root/testdata/sf0.001"))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.C + §2.E + §2.G1: the 15-column per-partition report
-    "q_partition_stats" -> ((s, dir) => TopicMetrics.report(records(s, dir))),
+    "q_partition_stats" -> ((s, dir) =>
+      TopicMetrics.report(EventsAsRecords.records(s, dir))),
     // §2.D: global topic summary re-reduced from per-partition partials
     "q_topic_summary" -> ((s, dir) =>
-      TopicMetrics.summaryFrame(TopicMetrics.partitionStats(records(s, dir)))),
+      TopicMetrics.summaryFrame(
+        TopicMetrics.partitionStats(EventsAsRecords.records(s, dir)))),
     // §2.A2: watermark/offset discovery
-    "q_offsets" -> ((s, dir) => TopicMetrics.offsets(records(s, dir))),
+    "q_offsets" -> ((s, dir) => TopicMetrics.offsets(EventsAsRecords.records(s, dir))),
     // §4.3(c): per-partition + grand-total in one grouping-sets pass
-    "q_rollup_stats" -> ((s, dir) => TopicMetrics.rollupStats(records(s, dir))),
+    "q_rollup_stats" -> ((s, dir) =>
+      TopicMetrics.rollupStats(EventsAsRecords.records(s, dir))),
     // offset-gap audit over a deterministically gapped log (every 17th
     // offset dropped — the fixture's offsets are dense by construction,
     // so gaps must be synthesized for the query to demonstrate anything)
     "q_offset_gaps" -> ((s, dir) =>
-      TopicMetrics.offsetGaps(records(s, dir).filter(col("offset") % 17 =!= 0))),
+      TopicMetrics.offsetGaps(
+        EventsAsRecords.records(s, dir).filter(col("offset") % 17 =!= 0))),
     // event-time throughput buckets per partition
     "q_partition_throughput" -> ((s, dir) =>
-      TopicMetrics.partitionThroughput(records(s, dir))),
+      TopicMetrics.partitionThroughput(EventsAsRecords.records(s, dir))),
     // exact distinct-key cardinality per partition
     "q_key_cardinality" -> ((s, dir) =>
-      TopicMetrics.keyCardinality(records(s, dir))),
+      TopicMetrics.keyCardinality(EventsAsRecords.records(s, dir))),
     // scale twin: pinned-HLL distinct keys (4 KiB per partition per
     // task crosses the wire, never the keyed record stream) —
     // hash-exact: the oracle replays the registers
     "q_key_cardinality_approx" -> ((s, dir) =>
-      TopicMetrics.keyCardinalityApprox(records(s, dir))),
+      TopicMetrics.keyCardinalityApprox(EventsAsRecords.records(s, dir))),
     // producer-skew diagnosis: top-k hottest keys with tombstone share
     // and partition spread (one agg + TakeOrderedAndProject)
-    "q_hot_keys" -> ((s, dir) => TopicMetrics.hotKeys(records(s, dir))),
+    "q_hot_keys" -> ((s, dir) => TopicMetrics.hotKeys(EventsAsRecords.records(s, dir))),
     // §2.F2: exact last-write-wins alive-key count
-    "q_alive_keys" -> ((s, dir) => AliveKeys.exactFrame(records(s, dir))),
+    "q_alive_keys" -> ((s, dir) => AliveKeys.exactFrame(EventsAsRecords.records(s, dir))),
     // per-partition post-compaction footprint (bytes a compacted log
     // retains) — the priced-in-bytes companion to the dirty ratio
     "q_compaction_estimate" -> ((s, dir) =>
-      AliveKeys.compactionEstimate(records(s, dir))),
+      AliveKeys.compactionEstimate(EventsAsRecords.records(s, dir))),
     // §2.F1 fidelity: alive keys bucketed by the reference's FNV-variant
     "q_alive_keys_fnv32" -> ((s, dir) =>
-      AliveKeys.approxFnv32Frame(records(s, dir))),
+      AliveKeys.approxFnv32Frame(EventsAsRecords.records(s, dir))),
     // event-time analytics (streaming-ready windowed aggregations)
     "q_event_windows" -> ((s, dir) =>
       EventAnalytics.dailyWindows(EventsAsRecords.readEvents(s, dir))),
@@ -148,156 +144,158 @@ object SparkEntry {
     // relational side: classic TPC-H shapes over the warehouse tables
     "q_tpch_q1" -> ((s, dir) =>
       graft.operators.Relational.pricingSummary(
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q3" -> ((s, dir) =>
       graft.operators.Relational.shippingPriority(
-        tbl(s, dir, "customer"),
-        tbl(s, dir, "orders"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "customer"),
+        Tables.read(s, dir, "orders"),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q5" -> ((s, dir) =>
       graft.operators.Relational.localSupplierRevenue(
-        tbl(s, dir, "region"),
-        tbl(s, dir, "nation"),
-        tbl(s, dir, "supplier"),
-        tbl(s, dir, "customer"),
-        tbl(s, dir, "orders"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "region"),
+        Tables.read(s, dir, "nation"),
+        Tables.read(s, dir, "supplier"),
+        Tables.read(s, dir, "customer"),
+        Tables.read(s, dir, "orders"),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q14" -> ((s, dir) =>
       graft.operators.Relational.promoRevenue(
-        tbl(s, dir, "lineitem"),
-        tbl(s, dir, "part"))),
+        Tables.read(s, dir, "lineitem"),
+        Tables.read(s, dir, "part"))),
     "q_tpch_q6" -> ((s, dir) =>
       graft.operators.Relational.forecastRevenue(
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q10" -> ((s, dir) =>
       graft.operators.Relational.returnedItemRevenue(
-        tbl(s, dir, "customer"),
-        tbl(s, dir, "orders"),
-        tbl(s, dir, "lineitem"),
-        tbl(s, dir, "nation"))),
+        Tables.read(s, dir, "customer"),
+        Tables.read(s, dir, "orders"),
+        Tables.read(s, dir, "lineitem"),
+        Tables.read(s, dir, "nation"))),
     "q_tpch_q18" -> ((s, dir) =>
       graft.operators.Relational.largeOrders(
-        tbl(s, dir, "customer"),
-        tbl(s, dir, "orders"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "customer"),
+        Tables.read(s, dir, "orders"),
+        Tables.read(s, dir, "lineitem"))),
     // join-surface breadth: left-semi (Q4-style) and left-anti
     // (Q22-style) over the warehouse tables
     "q_tpch_q4" -> ((s, dir) =>
       graft.operators.Relational.orderPriorityCheck(
-        tbl(s, dir, "orders"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "orders"),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q22" -> ((s, dir) =>
       graft.operators.Relational.inactiveHighBalanceCustomers(
-        tbl(s, dir, "customer"),
-        tbl(s, dir, "orders"))),
+        Tables.read(s, dir, "customer"),
+        Tables.read(s, dir, "orders"))),
     // DecisionSupport: the remaining TPC-H shapes (see that object's
     // scaladoc for the partsupp-free adaptations) — suite complete
     "q_tpch_q2" -> ((s, dir) =>
       graft.operators.DecisionSupport.minCostSupplier(
-        tbl(s, dir, "region"),
-        tbl(s, dir, "nation"),
-        tbl(s, dir, "supplier"),
-        tbl(s, dir, "part"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "region"),
+        Tables.read(s, dir, "nation"),
+        Tables.read(s, dir, "supplier"),
+        Tables.read(s, dir, "part"),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q7" -> ((s, dir) =>
       graft.operators.DecisionSupport.volumeShipping(
-        tbl(s, dir, "nation"),
-        tbl(s, dir, "supplier"),
-        tbl(s, dir, "customer"),
-        tbl(s, dir, "orders"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "nation"),
+        Tables.read(s, dir, "supplier"),
+        Tables.read(s, dir, "customer"),
+        Tables.read(s, dir, "orders"),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q8" -> ((s, dir) =>
       graft.operators.DecisionSupport.marketShare(
-        tbl(s, dir, "region"),
-        tbl(s, dir, "nation"),
-        tbl(s, dir, "supplier"),
-        tbl(s, dir, "customer"),
-        tbl(s, dir, "orders"),
-        tbl(s, dir, "lineitem"),
-        tbl(s, dir, "part"))),
+        Tables.read(s, dir, "region"),
+        Tables.read(s, dir, "nation"),
+        Tables.read(s, dir, "supplier"),
+        Tables.read(s, dir, "customer"),
+        Tables.read(s, dir, "orders"),
+        Tables.read(s, dir, "lineitem"),
+        Tables.read(s, dir, "part"))),
     "q_tpch_q9" -> ((s, dir) =>
       graft.operators.DecisionSupport.productProfit(
-        tbl(s, dir, "nation"),
-        tbl(s, dir, "supplier"),
-        tbl(s, dir, "part"),
-        tbl(s, dir, "orders"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "nation"),
+        Tables.read(s, dir, "supplier"),
+        Tables.read(s, dir, "part"),
+        Tables.read(s, dir, "orders"),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q11" -> ((s, dir) =>
       graft.operators.DecisionSupport.importantParts(
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q12" -> ((s, dir) =>
       graft.operators.DecisionSupport.lateShipmentPriority(
-        tbl(s, dir, "orders"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "orders"),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q13" -> ((s, dir) =>
       graft.operators.DecisionSupport.customerDistribution(
-        tbl(s, dir, "customer"),
-        tbl(s, dir, "orders"))),
+        Tables.read(s, dir, "customer"),
+        Tables.read(s, dir, "orders"))),
     "q_tpch_q15" -> ((s, dir) =>
       graft.operators.DecisionSupport.topSupplier(
-        tbl(s, dir, "supplier"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "supplier"),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q16" -> ((s, dir) =>
       graft.operators.DecisionSupport.partSupplierCounts(
-        tbl(s, dir, "supplier"),
-        tbl(s, dir, "part"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "supplier"),
+        Tables.read(s, dir, "part"),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q17" -> ((s, dir) =>
       graft.operators.DecisionSupport.smallQuantityRevenue(
-        tbl(s, dir, "part"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "part"),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q19" -> ((s, dir) =>
       graft.operators.DecisionSupport.discountedRevenue(
-        tbl(s, dir, "part"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "part"),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q20" -> ((s, dir) =>
       graft.operators.DecisionSupport.dominantSuppliers(
-        tbl(s, dir, "nation"),
-        tbl(s, dir, "supplier"),
-        tbl(s, dir, "part"),
-        tbl(s, dir, "lineitem"))),
+        Tables.read(s, dir, "nation"),
+        Tables.read(s, dir, "supplier"),
+        Tables.read(s, dir, "part"),
+        Tables.read(s, dir, "lineitem"))),
     "q_tpch_q21" -> ((s, dir) =>
       graft.operators.DecisionSupport.waitingSuppliers(
-        tbl(s, dir, "supplier"),
-        tbl(s, dir, "orders"),
-        tbl(s, dir, "lineitem"))),
-    "q_repetition" -> ((s, dir) => TextAnalysis.repetition(docs(s, dir))),
-    "q_vocabulary" -> ((s, dir) => TextAnalysis.vocabulary(docs(s, dir))),
+        Tables.read(s, dir, "supplier"),
+        Tables.read(s, dir, "orders"),
+        Tables.read(s, dir, "lineitem"))),
+    "q_repetition" -> ((s, dir) => TextAnalysis.repetition(Tables.documents(s, dir))),
+    "q_vocabulary" -> ((s, dir) => TextAnalysis.vocabulary(Tables.documents(s, dir))),
     // LM-lite quality signal: corpus-relative token commonness in
     // exact integer arithmetic (one terminal division)
-    "q_token_rarity" -> ((s, dir) => TextAnalysis.tokenRarity(docs(s, dir))),
+    "q_token_rarity" -> ((s, dir) => TextAnalysis.tokenRarity(Tables.documents(s, dir))),
     // scale variant: HLL distinct counts (mergeable sketch, no
     // countDistinct re-shuffle) via graft's PINNED HLL (fnv64 +
     // max-merged registers + exact-integer estimate sum) — order-free,
     // so hash-exact vs the oracle; TextAnalysisSpec still brackets
     // the estimates against the exact counts.
     "q_vocab_summary_approx" -> ((s, dir) =>
-      TextAnalysis.vocabularySummaryApprox(docs(s, dir))),
-    "q_length_hist" -> ((s, dir) => TextAnalysis.lengthHistogram(docs(s, dir))),
+      TextAnalysis.vocabularySummaryApprox(Tables.documents(s, dir))),
+    "q_length_hist" -> ((s, dir) =>
+      TextAnalysis.lengthHistogram(Tables.documents(s, dir))),
     "q_text_clean" -> ((s, dir) =>
-      transformDigest(docs(s, dir),
+      transformDigest(Tables.documents(s, dir),
         graft.functions.TextFunctions.cleanText(col("text")), "clean")),
     // LLM-pipeline: text analysis over `documents`
-    "q_text_stats" -> ((s, dir) => TextAnalysis.stats(docs(s, dir))),
-    "q_lang_id" -> ((s, dir) => TextAnalysis.langIdFrame(docs(s, dir))),
+    "q_text_stats" -> ((s, dir) => TextAnalysis.stats(Tables.documents(s, dir))),
+    "q_lang_id" -> ((s, dir) => TextAnalysis.langIdFrame(Tables.documents(s, dir))),
     // language-ID confidence: top/runner-up hits + margin, integers only
     "q_lang_confidence" -> ((s, dir) =>
-      TextAnalysis.langConfidence(docs(s, dir))),
-    "q_quality" -> ((s, dir) => TextAnalysis.quality(docs(s, dir))),
-    "q_fingerprint" -> ((s, dir) => TextAnalysis.fingerprints(docs(s, dir))),
+      TextAnalysis.langConfidence(Tables.documents(s, dir))),
+    "q_quality" -> ((s, dir) => TextAnalysis.quality(Tables.documents(s, dir))),
+    "q_fingerprint" -> ((s, dir) => TextAnalysis.fingerprints(Tables.documents(s, dir))),
     // sparse retrieval: tf×(N−df) scored top-k over broadcast
     // mid-frequency query terms (posting list pruned BEFORE the agg)
-    "q_text_search" -> ((s, dir) => TextAnalysis.searchTopK(docs(s, dir))),
+    "q_text_search" -> ((s, dir) => TextAnalysis.searchTopK(Tables.documents(s, dir))),
     // collocation mining: top-k adjacent pairs by exact-integer lift,
     // marginals re-aggregated from the ONE bigram exchange
-    "q_collocations" -> ((s, dir) => TextAnalysis.collocations(docs(s, dir))),
+    "q_collocations" -> ((s, dir) => TextAnalysis.collocations(Tables.documents(s, dir))),
     // distributed BPE tokenizer training on the distinct-word table
     // (one corpus shuffle, then vocab-sized argmax rounds).
     // Hash-exact: the constant-round loop UNROLLS into chained argmax
     // CTEs in the oracle (a recursive CTE could not express it);
     // BpeSpec additionally pins parity with an independent
     // single-machine reference trainer.
-    "q_bpe_merges" -> ((s, dir) => graft.operators.Bpe.mergesFrame(docs(s, dir))),
+    "q_bpe_merges" -> ((s, dir) =>
+      graft.operators.Bpe.mergesFrame(Tables.documents(s, dir))),
     // tokenizer APPLY: per-doc piece counts under the PINNED shipped
     // merge table (Bpe.PinnedMerges) — segmentation folds once per
     // DISTINCT word (vocab-sized), the corpus only joins integer
@@ -305,23 +303,23 @@ object SparkEntry {
     // q_bpe_merges), and a hash-exact replace-chain oracle; BpeSpec
     // additionally pins reference-encoder parity + invariants.
     "q_bpe_encode" -> ((s, dir) =>
-      graft.operators.Bpe.encodePinnedQuery(docs(s, dir))),
+      graft.operators.Bpe.encodePinnedQuery(Tables.documents(s, dir))),
     // tokenizer-fit: per-source compression of the shipped merge
     // table (pieces per million chars, exact integers) — the
     // fertility check before committing a tokenizer to a mixture
     "q_tokenizer_fit" -> ((s, dir) =>
-      graft.operators.Bpe.tokenizerFit(docs(s, dir))),
+      graft.operators.Bpe.tokenizerFit(Tables.documents(s, dir))),
     // effective tokens: per-source raw vs cluster-canonical-only
     // token totals off the persisted label table — the dedup-aware
     // correction input for mixture weights computed from raw counts
     "q_effective_tokens" -> ((s, dir) =>
-      CorpusOps.effectiveTokens(docs(s, dir),
+      CorpusOps.effectiveTokens(Tables.documents(s, dir),
         Dedup.readDedupLabels(s, labelsDir(s, dir)))),
     // LLM-pipeline: dedup family
     "q_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(docs(s, dir)).orderBy(col("canonical_doc_id"))),
-    "q_dedup_minhash" -> ((s, dir) => Dedup.minhashPairs(docs(s, dir))),
-    "q_dedup_clusters" -> ((s, dir) => Dedup.nearDupClusters(docs(s, dir))),
+      Dedup.exact(Tables.documents(s, dir)).orderBy(col("canonical_doc_id"))),
+    "q_dedup_minhash" -> ((s, dir) => Dedup.minhashPairs(Tables.documents(s, dir))),
+    "q_dedup_clusters" -> ((s, dir) => Dedup.nearDupClusters(Tables.documents(s, dir))),
     // same semantics, bucketed-edge-table iteration (the 100 TB path:
     // per-round joins run co-located, only the update stream shuffles).
     // Scratch state lives under one FIXED per-JVM dir, overwritten on
@@ -335,24 +333,25 @@ object SparkEntry {
     // bucketed tables mid-round, and the exit reaper + orphan sweep
     // reclaim it like every other scratch artifact.
     "q_dedup_clusters_bucketed" -> ((s, dir) =>
-      Dedup.nearDupClustersBucketed(docs(s, dir),
+      Dedup.nearDupClustersBucketed(Tables.documents(s, dir),
         ensureBuilt("ndbq", dir)(_ => ()),
         buckets = s.conf.get("spark.sql.shuffle.partitions").toInt)),
-    "q_ngram_jaccard" -> ((s, dir) => Dedup.ngramJaccardPairs(docs(s, dir))),
+    "q_ngram_jaccard" -> ((s, dir) => Dedup.ngramJaccardPairs(Tables.documents(s, dir))),
     // wholesale-copy vs scattered-overlap: longest contiguous shared
     // token span per near-dup pair (diagonal gaps-and-islands over
     // positional shingles, bounded to the banded candidate pairs)
-    "q_shared_spans" -> ((s, dir) => Dedup.sharedSpans(docs(s, dir))),
+    "q_shared_spans" -> ((s, dir) => Dedup.sharedSpans(Tables.documents(s, dir))),
     // are quality filtering and dedup redundant? per quality bucket,
     // the near-duplicated share as exact-integer ppm
     "q_quality_dup_profile" -> ((s, dir) =>
-      Dedup.qualityDupProfile(docs(s, dir))),
-    "q_dup_ngrams" -> ((s, dir) => Dedup.duplicatedNgrams(docs(s, dir))),
-    "q_source_dup_profile" -> ((s, dir) => Dedup.sourceDupProfile(docs(s, dir))),
+      Dedup.qualityDupProfile(Tables.documents(s, dir))),
+    "q_dup_ngrams" -> ((s, dir) => Dedup.duplicatedNgrams(Tables.documents(s, dir))),
+    "q_source_dup_profile" -> ((s, dir) =>
+      Dedup.sourceDupProfile(Tables.documents(s, dir))),
     // incremental ingest: dedup the batch (doc_id % 5 = 0) against the
     // rest of the corpus — exact + LSH near-dup, greedy first-wins
     "q_dedup_incremental" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = Tables.documents(s, dir)
       Dedup.dedupIncremental(
         d.filter(col("doc_id") % 5 =!= 0), d.filter(col("doc_id") % 5 === 0))
     }),
@@ -363,7 +362,7 @@ object SparkEntry {
     // corpus re-hash. Identical core ⇒ identical verdicts ⇒ shares
     // the inline twin's oracle.
     "q_dedup_incremental_indexed" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = Tables.documents(s, dir)
       val ix = ensureBuilt("dedupidx", dir)(p =>
         Dedup.writeDedupIndex(d.filter(col("doc_id") % 5 =!= 0), p))
       Dedup.dedupIncrementalIndexed(ix, d.filter(col("doc_id") % 5 === 0))
@@ -374,7 +373,7 @@ object SparkEntry {
     // persisted cluster ids, batch-internal propagation; corpus rows
     // never iterate. Index + label table built once per JVM.
     "q_assign_labels" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = Tables.documents(s, dir)
       // the index is the SAME artifact q_dedup_incremental_indexed
       // builds (identical corpus + parameters) — share it instead of
       // fingerprinting/banding the corpus a second time per JVM
@@ -384,38 +383,39 @@ object SparkEntry {
         Dedup.writeDedupLabels(d.filter(col("doc_id") % 5 =!= 0), p))
       Dedup.assignDedupLabels(ix, lbl, d.filter(col("doc_id") % 5 === 0))
     }),
-    "q_simhash" -> ((s, dir) => TextAnalysis.simhashFrame(docs(s, dir))),
-    "q_simhash_pairs" -> ((s, dir) => Dedup.simhashPairs(docs(s, dir))),
+    "q_simhash" -> ((s, dir) => TextAnalysis.simhashFrame(Tables.documents(s, dir))),
+    "q_simhash_pairs" -> ((s, dir) => Dedup.simhashPairs(Tables.documents(s, dir))),
     // LLM-pipeline: multimodal binary-column plumbing (stubbed decode)
     "q_multimodal_features" -> ((s, dir) =>
-      graft.operators.Multimodal.featuresQuery(docs(s, dir))),
+      graft.operators.Multimodal.featuresQuery(Tables.documents(s, dir))),
     "q_multimodal_sample" -> ((s, dir) =>
-      graft.operators.Multimodal.sampleQuery(docs(s, dir))),
+      graft.operators.Multimodal.sampleQuery(Tables.documents(s, dir))),
     // REAL image decode: generated PNGs → javax.imageio → pixel stats;
     // the oracle recomputes the stats from the generator's closed form
     "q_multimodal_decode" -> ((s, dir) =>
-      graft.operators.Multimodal.decodeQuery(docs(s, dir))),
+      graft.operators.Multimodal.decodeQuery(Tables.documents(s, dir))),
     // REAL audio decode: generated PCM WAVs → javax.sound.sampled →
     // sample stats; the oracle recomputes them from the generator's
     // closed form
     "q_multimodal_audio" -> ((s, dir) =>
-      graft.operators.Multimodal.audioDecodeQuery(docs(s, dir))),
+      graft.operators.Multimodal.audioDecodeQuery(Tables.documents(s, dir))),
     // LLM-pipeline: embedding similarity search
     "q_embed_knn" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir)
       Similarity.knnBruteForce(e, e.filter(col("vec_id") < 16), 5)
     }),
     "q_embed_knn_lsh" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir)
       Similarity.knnLsh(e, e.filter(col("vec_id") < 16), 5)
     }),
     // multi-probe variant: each table also probes the planes buckets
     // one bit-flip away — recall for probe volume, index unchanged
     "q_embed_knn_lsh_mp" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir)
       Similarity.knnLshMultiProbe(e, e.filter(col("vec_id") < 16), 5)
     }),
-    "q_embed_near_pairs" -> ((s, dir) => Similarity.lshNearPairs(emb(s, dir))),
+    "q_embed_near_pairs" -> ((s, dir) =>
+      Similarity.lshNearPairs(Tables.embeddings(s, dir))),
     // SemDeDup-style: epsilon-ball clusters over the embedding LSH
     // graph, min-id representative kept per cluster. Threshold 0.4 on
     // the synthetic embeddings yields realistic dedup structure
@@ -423,40 +423,42 @@ object SparkEntry {
     // noise floor and welds 78% of vectors into one giant component
     // whose diameter drags the propagation loop through many rounds
     "q_semantic_keep" -> ((s, dir) =>
-      Similarity.semanticKeep(emb(s, dir), threshold = 0.4)),
+      Similarity.semanticKeep(Tables.embeddings(s, dir), threshold = 0.4)),
     "q_embed_knn_ivf" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir)
       Similarity.knnIvf(e, e.filter(col("vec_id") < 16), 5)
     }),
     // cluster-stratified diversity sampling: cap each embedding-space
     // cell's contribution, deterministic hash-order draw within cells
-    "q_diverse_sample" -> ((s, dir) => Similarity.diverseSample(emb(s, dir))),
+    "q_diverse_sample" -> ((s, dir) =>
+      Similarity.diverseSample(Tables.embeddings(s, dir))),
     // embedding-dump data-quality gate: nulls / wrong dims / zero
     // norms / norm range, one scan, one row
-    "q_embedding_audit" -> ((s, dir) => Similarity.embeddingAudit(emb(s, dir))),
+    "q_embedding_audit" -> ((s, dir) =>
+      Similarity.embeddingAudit(Tables.embeddings(s, dir))),
     // off-manifold vectors: bottom-k cosine to own coarse centroid
     // (same shuffle-free codebook assignment as knnIvf; one
     // TakeOrderedAndProject cut)
     "q_embed_outliers" -> ((s, dir) =>
-      Similarity.embeddingOutliers(emb(s, dir))),
+      Similarity.embeddingOutliers(Tables.embeddings(s, dir))),
     // embedding-space decontamination: train vectors too close to the
     // (broadcast) eval set — the semantic twin of q_decontaminate
     "q_decontaminate_semantic" -> ((s, dir) =>
-      Similarity.semanticContaminationById(emb(s, dir))),
+      Similarity.semanticContaminationById(Tables.embeddings(s, dir))),
     // contrastive training triplets: best LSH near-pair positive +
     // deterministic salted-bucket hash negative (broadcast min table)
     "q_contrastive_triplets" -> ((s, dir) =>
-      Similarity.contrastiveTriplets(emb(s, dir))),
+      Similarity.contrastiveTriplets(Tables.embeddings(s, dir))),
     // self-measuring index quality: recall@k of LSH/IVF vs exact
     // brute force, integer-exact division per method
-    "q_ann_recall" -> ((s, dir) => Similarity.annRecall(emb(s, dir))),
+    "q_ann_recall" -> ((s, dir) => Similarity.annRecall(Tables.embeddings(s, dir))),
     // at-rest IVF cell-distribution profile: (cid, n, integer ppm) —
     // the drift monitor's baseline AND the codebook health check
-    "q_cell_baseline" -> ((s, dir) => Similarity.cellBaseline(emb(s, dir))),
+    "q_cell_baseline" -> ((s, dir) => Similarity.cellBaseline(Tables.embeddings(s, dir))),
     // batch drift report: reference vs current snapshot (deterministic
     // 2/3 subset) in the SAME reference-trained cell coordinates
     "q_cell_drift" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir)
       Similarity.cellDrift(e, e.filter(col("vec_id") % 3 =!= 0))
     }),
     // the injected-codebook IVF path: exercises knnIvf's `centroids`
@@ -471,7 +473,7 @@ object SparkEntry {
     // fold order across engines is why trained books can never be
     // hash-checked, per the r13/r14 verdicts.
     "q_embed_knn_ivf_trained" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir)
       Similarity.knnIvf(e, e.filter(col("vec_id") < 16), 5,
         centroids = Some(Similarity.trainCentroids(e, k = 16, iters = 0)))
     }),
@@ -484,7 +486,7 @@ object SparkEntry {
     // the codes table lives (rebuilt inline vs read from parquet).
     // Lloyd's-trained timing lives in q_embed_knn_ivfpq_train_bench.
     "q_embed_knn_ivfpq" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir)
       Similarity.knnIvfPq(e, e.filter(col("vec_id") < 16), 5, nProbes = 8,
         pqIters = 0)
     }),
@@ -501,7 +503,7 @@ object SparkEntry {
     // byte-identical either way, so the steady-state timing it exists
     // to measure is unchanged.
     "q_embed_knn_ivfpq_indexed" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir)
       val ix = ensureBuilt("pqidx", dir)(d =>
         Similarity.writePqIndex(e, d, pqIters = 0))
       Similarity.knnIvfPqIndexed(ix, e, e.filter(col("vec_id") < 16), 5,
@@ -509,22 +511,23 @@ object SparkEntry {
     }),
     // corpus-curation ops: deterministic split / sampling /
     // decontamination / canonical selection / dataset accounting
-    "q_split_stats" -> ((s, dir) => CorpusOps.splitStats(docs(s, dir))),
+    "q_split_stats" -> ((s, dir) => CorpusOps.splitStats(Tables.documents(s, dir))),
     "q_sample_stratified" -> ((s, dir) =>
-      CorpusOps.stratifiedSampleStats(docs(s, dir))),
-    "q_decontaminate" -> ((s, dir) => CorpusOps.decontaminateById(docs(s, dir))),
+      CorpusOps.stratifiedSampleStats(Tables.documents(s, dir))),
+    "q_decontaminate" -> ((s, dir) =>
+      CorpusOps.decontaminateById(Tables.documents(s, dir))),
     // Bloom-prefiltered twin: eval shingles fold into one fixed-size
     // sketch, train postings filter through might_contain before any
     // join — exact output (the join removes false positives), same oracle
     "q_decontaminate_bloom" -> ((s, dir) =>
-      CorpusOps.decontaminateBloomById(docs(s, dir))),
-    "q_cluster_best" -> ((s, dir) => CorpusOps.bestOfCluster(docs(s, dir))),
+      CorpusOps.decontaminateBloomById(Tables.documents(s, dir))),
+    "q_cluster_best" -> ((s, dir) => CorpusOps.bestOfCluster(Tables.documents(s, dir))),
     // dedup-aware split audit: near-dup clusters straddling
     // train/val/test — the contamination hash-splitting cannot see
-    "q_split_leakage" -> ((s, dir) => CorpusOps.splitLeakage(docs(s, dir))),
+    "q_split_leakage" -> ((s, dir) => CorpusOps.splitLeakage(Tables.documents(s, dir))),
     // the audit's fix: split re-derived from the near-dup cluster id,
     // so no cluster can straddle train/val/test by construction
-    "q_repair_splits" -> ((s, dir) => CorpusOps.repairSplits(docs(s, dir))),
+    "q_repair_splits" -> ((s, dir) => CorpusOps.repairSplits(Tables.documents(s, dir))),
     // write-once/derive-many: the SAME audits over the persisted label
     // table (Dedup.writeDedupLabels, built once per JVM+dir by the
     // first caller — Bench's untimed warmup / Verify's single pass).
@@ -538,23 +541,23 @@ object SparkEntry {
       CorpusOps.repairSplitsFromLabels(
         Dedup.readDedupLabels(s, labelsDir(s, dir)))),
     "q_cluster_best_indexed" -> ((s, dir) =>
-      CorpusOps.bestOfClusterFromLabels(docs(s, dir),
+      CorpusOps.bestOfClusterFromLabels(Tables.documents(s, dir),
         Dedup.readDedupLabels(s, labelsDir(s, dir)))),
     "q_quality_dup_profile_indexed" -> ((s, dir) =>
-      Dedup.qualityDupProfileFromLabels(docs(s, dir),
+      Dedup.qualityDupProfileFromLabels(Tables.documents(s, dir),
         Dedup.readDedupLabels(s, labelsDir(s, dir)))),
     // token-budget selection (histogram two-pass; oracle is the global window)
     "q_token_budget" -> ((s, dir) =>
-      CorpusOps.selectByTokenBudget(docs(s, dir))),
-    "q_source_stats" -> ((s, dir) => CorpusOps.sourceStats(docs(s, dir))),
+      CorpusOps.selectByTokenBudget(Tables.documents(s, dir))),
+    "q_source_stats" -> ((s, dir) => CorpusOps.sourceStats(Tables.documents(s, dir))),
     // one-row corpus health dashboard: exact-dup volume, lang/quality
     // pass counts, contamination + split-leakage audits as broadcast
     // 1-row aggregates; every column an exact integer
-    "q_corpus_health" -> ((s, dir) => CorpusOps.corpusHealth(docs(s, dir))),
+    "q_corpus_health" -> ((s, dir) => CorpusOps.corpusHealth(Tables.documents(s, dir))),
     // the dashboard off the persisted label table: leak count is a
     // label scan + aggregate, zero propagation rounds; same oracle
     "q_corpus_health_indexed" -> ((s, dir) =>
-      CorpusOps.corpusHealthFromLabels(docs(s, dir),
+      CorpusOps.corpusHealthFromLabels(Tables.documents(s, dir),
         Dedup.readDedupLabels(s, labelsDir(s, dir)))),
     // sketch-at-rest accounting: per-source HLL distinct-fingerprint
     // sketches + a union row (mergeable — the 100 TB bookkeeping
@@ -562,61 +565,61 @@ object SparkEntry {
     // estimate replay hash-exactly in the oracle; CorpusOpsSpec
     // still brackets estimates against exact distincts.
     "q_source_distinct_approx" -> ((s, dir) =>
-      CorpusOps.sourceDistinctApprox(docs(s, dir))),
+      CorpusOps.sourceDistinctApprox(Tables.documents(s, dir))),
     // the write-once/derive-many twin: dashboard off the PERSISTED
     // sketch table (~sources rows), zero corpus scans — registers are
     // deterministic, so it shares the recompute's oracle hash-exactly
     "q_source_distinct_indexed" -> ((s, dir) => {
       val sk = ensureBuilt("distsk", dir)(d =>
-        CorpusOps.writeDistinctSketches(docs(s, dir), d))
+        CorpusOps.writeDistinctSketches(Tables.documents(s, dir), d))
       CorpusOps.sourceDistinctFromSketches(
         CorpusOps.readDistinctSketches(s, sk))
     }),
-    "q_source_overlap" -> ((s, dir) => CorpusOps.sourceOverlap(docs(s, dir))),
+    "q_source_overlap" -> ((s, dir) => CorpusOps.sourceOverlap(Tables.documents(s, dir))),
     // snapshot diff against a deterministic synthetic "next crawl"
     "q_corpus_diff" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = Tables.documents(s, dir)
       CorpusOps.snapshotDiff(d, CorpusOps.syntheticNextSnapshot(d))
     }),
     // domain balancing: cap each source, keep highest-quality docs
-    "q_source_quota" -> ((s, dir) => CorpusOps.sourceQuota(docs(s, dir))),
+    "q_source_quota" -> ((s, dir) => CorpusOps.sourceQuota(Tables.documents(s, dir))),
     // distributed-rank twin: radix-histogram prefix + bounded per-bin
     // windows — the mega-source-safe formulation, same oracle
     "q_source_quota_dist" -> ((s, dir) =>
-      CorpusOps.sourceQuotaDistributed(docs(s, dir))),
+      CorpusOps.sourceQuotaDistributed(Tables.documents(s, dir))),
     "q_pii_redact" -> ((s, dir) =>
-      transformDigest(docs(s, dir),
+      transformDigest(Tables.documents(s, dir),
         graft.functions.TextFunctions.redactPii(col("text")), "redacted")),
-    "q_lang_confusion" -> ((s, dir) => CorpusOps.langConfusion(docs(s, dir))),
+    "q_lang_confusion" -> ((s, dir) => CorpusOps.langConfusion(Tables.documents(s, dir))),
     // sequence packing (concat-then-chunk bins) + keyword extraction
-    "q_pack_stats" -> ((s, dir) => CorpusOps.packStats(docs(s, dir))),
+    "q_pack_stats" -> ((s, dir) => CorpusOps.packStats(Tables.documents(s, dir))),
     // context-window prep: sliding token chunks with overlap
-    "q_doc_chunks" -> ((s, dir) => CorpusOps.docChunks(docs(s, dir))),
+    "q_doc_chunks" -> ((s, dir) => CorpusOps.docChunks(Tables.documents(s, dir))),
     // length-bucketed batching + pad-to-longest waste accounting
-    "q_batch_padding" -> ((s, dir) => CorpusOps.batchPadding(docs(s, dir))),
+    "q_batch_padding" -> ((s, dir) => CorpusOps.batchPadding(Tables.documents(s, dir))),
     // collator config sweep: padding waste per candidate bucket
     // granularity, one row per config, integer pad shares
-    "q_padding_sweep" -> ((s, dir) => CorpusOps.paddingSweep(docs(s, dir))),
+    "q_padding_sweep" -> ((s, dir) => CorpusOps.paddingSweep(Tables.documents(s, dir))),
     // temperature-style (alpha = 1/2) source mixture weights
-    "q_source_mixture" -> ((s, dir) => CorpusOps.sourceMixture(docs(s, dir))),
+    "q_source_mixture" -> ((s, dir) => CorpusOps.sourceMixture(Tables.documents(s, dir))),
     // the dedup-corrected twin: mixture weights from CANONICAL tokens
     // only (persisted label table), so near-copy padding cannot buy
     // sampling weight
     "q_source_mixture_effective" -> ((s, dir) =>
-      CorpusOps.sourceMixtureEffective(docs(s, dir),
+      CorpusOps.sourceMixtureEffective(Tables.documents(s, dir),
         Dedup.readDedupLabels(s, labelsDir(s, dir)))),
     // the weights APPLIED: per-source ppm keep rates + before/after
     // accounting (sampled tokens come out proportional to sqrt(tokens))
     "q_mixture_sample" -> ((s, dir) =>
-      CorpusOps.mixtureSampleStats(docs(s, dir))),
-    "q_doc_keywords" -> ((s, dir) => CorpusOps.docKeywords(docs(s, dir))),
+      CorpusOps.mixtureSampleStats(Tables.documents(s, dir))),
+    "q_doc_keywords" -> ((s, dir) => CorpusOps.docKeywords(Tables.documents(s, dir))),
     // grouping-sets breadth (CUBE margins) + decontaminated output table
-    "q_source_cube" -> ((s, dir) => CorpusOps.sourceCube(docs(s, dir))),
-    "q_clean_corpus" -> ((s, dir) => CorpusOps.cleanCorpusById(docs(s, dir))),
+    "q_source_cube" -> ((s, dir) => CorpusOps.sourceCube(Tables.documents(s, dir))),
+    "q_clean_corpus" -> ((s, dir) => CorpusOps.cleanCorpusById(Tables.documents(s, dir))),
     // end-to-end corpus filter: quality + language + canonical-of-cluster
     "q_corpus_filter" -> ((s, dir) => {
       import graft.functions.TextFunctions
-      val d = docs(s, dir)
+      val d = Tables.documents(s, dir)
       // canonical docs: a narrow filter directly on the checkpointed
       // label frame — filtering BEFORE the join keeps the join inputs
       // at (survivors × canonicals) instead of (survivors × corpus)
@@ -667,14 +670,14 @@ object SparkEntry {
     // end-to-end IVF with a 3-iteration Lloyd's coarse book — the
     // pre-r15 q_embed_knn_ivf_trained configuration, verbatim
     "q_embed_knn_ivf_train_bench" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir)
       Similarity.knnIvf(e, e.filter(col("vec_id") < 16), 5,
         centroids = Some(Similarity.trainCentroids(e, k = 16, iters = 3)))
     }),
     // end-to-end IVF-PQ with 2 PQ-training iterations — the pre-r15
     // q_embed_knn_ivfpq configuration, verbatim
     "q_embed_knn_ivfpq_train_bench" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir)
       Similarity.knnIvfPq(e, e.filter(col("vec_id") < 16), 5, nProbes = 8)
     }),
   )
@@ -812,13 +815,7 @@ object SparkEntry {
     }
 
   private def labelsDir(s: SparkSession, dir: String): String =
-    ensureBuilt("labels", dir)(d => Dedup.writeDedupLabels(docs(s, dir), d))
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "documents")
-
-  private def emb(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "embeddings")
+    ensureBuilt("labels", dir)(d => Dedup.writeDedupLabels(Tables.documents(s, dir), d))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.

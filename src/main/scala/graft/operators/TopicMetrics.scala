@@ -173,7 +173,10 @@ object TopicMetrics {
       (max(col("offset")) + 1).as("end_offset"))
       .orderBy(col("partition"))
 
-  /** Empty-topic guard (A4, `src/main.rs:98-101`): cheap limit-1 probe. */
+  /** Empty-topic guard (A4, `src/main.rs:98-101`) as a limit-1 probe.
+    * No engine path calls it any more: the CLI's stats pass is its
+    * empty guard (CliSpec pins two scans for `-c`). It is kept because
+    * the benchmark's `clitrace` mode replays the old probe. */
   def isEmpty(records: DataFrame): Boolean = records.isEmpty
 
   /** Offset-gap audit — the "did we lose messages?" check the

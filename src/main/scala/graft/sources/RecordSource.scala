@@ -106,14 +106,16 @@ object EventsAsRecords {
 
   /** The raw events table with `ts` as a proper micros TimestampType.
     * The driver's events.parquet has stored ts as TIMESTAMP(NANOS)
-    * (which Spark 4 rejects unless read as a raw long) and as
-    * TIMESTAMP_NTZ micros, depending on its writer version — so every
-    * reader must come through here.
+    * and as TIMESTAMP_NTZ micros, depending on its writer version — so
+    * every reader must come through here. A NANOS-encoded file reads
+    * (as a raw long) only on a session carrying
+    * [[graft.GraftSession.NanosAsLong]], which every GraftSession does;
+    * this reader never touches the session's conf, so any other
+    * session gets Spark's own `Illegal Parquet type` error for such a
+    * file.
     */
-  def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
-  }
+  def readEvents(spark: SparkSession, sfDir: String): DataFrame =
+    normalizeTs(Tables.read(spark, sfDir, "events"))
 
   /** Normalize `ts` to TimestampType whatever the parquet encoding
     * yielded: raw long nanos (the nanosAsLong fallback), TIMESTAMP_NTZ

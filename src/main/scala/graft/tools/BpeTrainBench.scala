@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.GraftSession
+import graft.sources.Tables
 
 /** Measures the BPE trainer's driver-sequenced-round cost at growing
   * merge counts — the evidence behind the documented O(numMerges)
@@ -19,7 +20,7 @@ object BpeTrainBench {
     val counts =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(50, 100, 200)
     val spark = GraftSession(GraftSession.BenchLayout)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Tables.documents(spark, sfDir)
     // warm the scan/codegen paths so the first count isn't penalized
     graft.operators.Bpe.trainMerges(docs, 5)
     counts.foreach { n =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.GraftSession
 import graft.operators.{CorpusOps, Dedup, Similarity}
-import graft.sources.EpochedTable
+import graft.sources.{EpochedTable, Tables}
 
 /** Generator + shared read surface for the persisted-format golden
   * store (`src/test/resources/golden/v1`). At 100 TB the persisted
@@ -45,19 +45,19 @@ object GoldenStoreGen {
   /** The deterministic probe frames both the generator and the spec
     * use — defined once so the hashes they produce are comparable. */
   def fixtureDocs(spark: SparkSession, fixtureDir: String): DataFrame =
-    spark.read.parquet(s"$fixtureDir/documents.parquet")
+    Tables.documents(spark, fixtureDir)
       .filter(col("doc_id") < 60)
 
   def fixtureBatch(spark: SparkSession, fixtureDir: String): DataFrame =
-    spark.read.parquet(s"$fixtureDir/documents.parquet")
+    Tables.documents(spark, fixtureDir)
       .filter(col("doc_id") >= 60 && col("doc_id") < 72)
 
   def fixtureEmb(spark: SparkSession, fixtureDir: String): DataFrame =
-    spark.read.parquet(s"$fixtureDir/embeddings.parquet")
+    Tables.embeddings(spark, fixtureDir)
       .filter(col("vec_id") < 96)
 
   def fixtureQueries(spark: SparkSession, fixtureDir: String): DataFrame =
-    spark.read.parquet(s"$fixtureDir/embeddings.parquet")
+    Tables.embeddings(spark, fixtureDir)
       .filter(col("vec_id") < 6)
 
   /** Every golden artifact's read path, (name, reader). Readers may

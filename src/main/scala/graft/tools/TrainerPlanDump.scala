@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftSession
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /** Dumps `.explain("formatted")` for the Lloyd's trainers'
   * per-iteration means aggregates ([[Similarity.centroidMeansFrame]] /
@@ -30,8 +31,7 @@ object TrainerPlanDump {
     val spark = GraftSession(GraftSession.BenchLayout)
     val m = Similarity.DefaultPqM
     val ksub = Similarity.DefaultPqKsub
-    val unit = Similarity.withUnit(
-        spark.read.parquet(s"$sfDir/embeddings.parquet"))
+    val unit = Similarity.withUnit(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("unit"))
       .filter(col("unit").isNotNull)
     val dims = unit.select(size(col("unit"))).head().getInt(0)

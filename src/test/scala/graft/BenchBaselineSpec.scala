@@ -111,16 +111,16 @@ class BenchBaselineSpec extends AnyFunSuite {
       "q_flat" -> 1.0,   // no drift
       "q_faster" -> 0.7) // improvement — never a suspect
     val baseWatch = Map("q_comp" -> 1.15, "q_gone" -> 1.3)
-    val got = Bench.selectSuspects(norm, baseWatch,
+    val (got, _) = Bench.selectSuspects(norm, baseWatch,
       watchThreshold = 1.1, suspectThreshold = 1.5, max = 12)
     assert(got == Seq("q_bigger" -> 3.0, "q_big" -> 2.0, "q_comp" -> 1.2),
       s"selection wrong: $got")
     // the cap keeps worst offenders
-    assert(Bench.selectSuspects(norm, baseWatch, 1.1, 1.5, 1) ==
+    assert(Bench.selectSuspects(norm, baseWatch, 1.1, 1.5, 1)._1 ==
       Seq("q_bigger" -> 3.0))
     // a baseline-watch entry that did NOT move again this run is not
     // promoted (q_gone), and an empty baseline watch promotes nothing
-    assert(Bench.selectSuspects(norm, Map.empty, 1.1, 1.5, 12) ==
+    assert(Bench.selectSuspects(norm, Map.empty, 1.1, 1.5, 12)._1 ==
       Seq("q_bigger" -> 3.0, "q_big" -> 2.0))
   }
 
@@ -133,17 +133,17 @@ class BenchBaselineSpec extends AnyFunSuite {
     val norm = (1 to 14).map(i => f"q_over_$i%02d" -> (1.6 + i * 0.01)).toMap ++
       Map("q_comp_a" -> 1.2, "q_comp_b" -> 1.15, "q_flat" -> 1.0)
     val baseWatch = Map("q_comp_a" -> 1.3, "q_comp_b" -> 1.12)
-    val qualifying = Bench.qualifyingSuspects(norm, baseWatch,
-      watchThreshold = 1.1, suspectThreshold = 1.5)
-    assert(qualifying.size == 16, s"expected 16 qualifying: $qualifying")
-    val capped = Bench.selectSuspects(norm, baseWatch, 1.1, 1.5, 12)
+    val (capped, overflow) = Bench.selectSuspects(norm, baseWatch,
+      watchThreshold = 1.1, suspectThreshold = 1.5, max = 12)
+    assert(capped.size + overflow == 16,
+      s"expected 16 qualifying: $capped + $overflow dropped")
     assert(capped.size == 12)
     // worst offenders survive the cap; the overflow count is exact
     assert(capped.head._1 == "q_over_14")
-    assert(qualifying.size - capped.size == 4)
+    assert(overflow == 4)
     // no overflow when everything fits
-    assert(Bench.qualifyingSuspects(Map("q" -> 2.0), Map.empty, 1.1, 1.5)
-      .size == 1)
+    assert(Bench.selectSuspects(Map("q" -> 2.0), Map.empty, 1.1, 1.5, 12) ==
+      (Seq("q" -> 2.0), 0))
   }
 
   test("drift normalization: a uniformly-slowed run yields zero watch entries") {

@@ -48,20 +48,9 @@ class EmptyFixtureSpec extends SparkSuite {
         }
       }
 
-  private def withNanosConf[A](body: => A): A = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   test("every registered query EXECUTES on an all-empty fixture") {
     val dst = java.nio.file.Files.createTempDirectory("graft-empty").toString
-    try withNanosConf {
+    try {
       tables.foreach { t =>
         spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet")
           .limit(0).coalesce(1)
@@ -91,7 +80,7 @@ class EmptyFixtureSpec extends SparkSuite {
       "embeddings" -> Set("embedding", "label"),
       "events" -> Set("ts", "event_type", "value", "props"))
     val dst = java.nio.file.Files.createTempDirectory("graft-nulls").toString
-    try withNanosConf {
+    try {
       tables.foreach { t =>
         val src = spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet")
         val out = nulled.get(t).fold(src) { cols =>
@@ -124,7 +113,7 @@ class EmptyFixtureSpec extends SparkSuite {
     // contracts (what gets filtered vs scored) are pinned per-operator.
     import org.apache.spark.sql.functions._
     val dst = java.nio.file.Files.createTempDirectory("graft-poison").toString
-    try withNanosConf {
+    try {
       tables.foreach { t =>
         val src = spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet")
         val out = t match {

@@ -1,17 +1,7 @@
 package graft
 class EntrySmokeSpec extends SparkSuite {
   test("entry() returns rows on sf0.001") {
-    // restore afterwards: the shared session serves every suite, and
-    // legacy parquet timestamp behavior must not leak into them
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val df = SparkEntry.entry(spark)
-      assert(df.count() > 0)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    val df = SparkEntry.entry(spark)
+    assert(df.count() > 0)
   }
 }

@@ -36,19 +36,11 @@ class EventAnalyticsSpec extends SparkSuite {
     // the scale variant must agree with the exact (oracle) variant up
     // to its rank-error bound: each approx pNN lies within the exact
     // [p-2%, p+2%] order-statistic bracket per event type
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val ev = graft.sources.EventsAsRecords
-        .readEvents(spark, "/root/testdata/sf0.01")
-      val ps = Seq(0.5, 0.9, 0.99)
-      assertPercentileBracket(ev,
-        EventAnalytics.valuePercentilesApprox(ev, ps).collect().toSeq, ps)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    val ev = graft.sources.EventsAsRecords
+      .readEvents(spark, "/root/testdata/sf0.01")
+    val ps = Seq(0.5, 0.9, 0.99)
+    assertPercentileBracket(ev,
+      EventAnalytics.valuePercentilesApprox(ev, ps).collect().toSeq, ps)
   }
 
   test("histogram percentiles land within one bin width of the exact values") {
@@ -56,34 +48,26 @@ class EventAnalyticsSpec extends SparkSuite {
     // width (the rank-t bin is exactly the bin the true order
     // statistic lives in), NOT the sketch's rank-error bound — in-bin
     // skew can push the interpolation anywhere inside the bin
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val ev = graft.sources.EventsAsRecords
-        .readEvents(spark, "/root/testdata/sf0.01")
-      val ps = Seq(0.5, 0.9, 0.99)
-      val bins = 1024
-      val got = EventAnalytics.valuePercentilesHistogram(ev, ps, bins)
-        .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
-      val exact = EventAnalytics.valuePercentiles(ev, ps)
-        .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
-      val widths = ev.filter(col("value").isNotNull)
-        .groupBy(col("event_type"))
-        .agg(((max(col("value")) - min(col("value"))) / bins).as("w"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      assert(got.nonEmpty && got.keySet == exact.keySet)
-      got.foreach { case (t, vals) =>
-        ps.indices.foreach { i =>
-          val a = vals(i).asInstanceOf[Double]
-          val e = exact(t)(i).asInstanceOf[Double]
-          assert(math.abs(a - e) <= widths(t) + 1e-9,
-            s"$t p${(ps(i) * 100).toInt}: hist=$a exact=$e width=${widths(t)}")
-        }
+    val ev = graft.sources.EventsAsRecords
+      .readEvents(spark, "/root/testdata/sf0.01")
+    val ps = Seq(0.5, 0.9, 0.99)
+    val bins = 1024
+    val got = EventAnalytics.valuePercentilesHistogram(ev, ps, bins)
+      .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+    val exact = EventAnalytics.valuePercentiles(ev, ps)
+      .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+    val widths = ev.filter(col("value").isNotNull)
+      .groupBy(col("event_type"))
+      .agg(((max(col("value")) - min(col("value"))) / bins).as("w"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(got.nonEmpty && got.keySet == exact.keySet)
+    got.foreach { case (t, vals) =>
+      ps.indices.foreach { i =>
+        val a = vals(i).asInstanceOf[Double]
+        val e = exact(t)(i).asInstanceOf[Double]
+        assert(math.abs(a - e) <= widths(t) + 1e-9,
+          s"$t p${(ps(i) * 100).toInt}: hist=$a exact=$e width=${widths(t)}")
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 
@@ -127,30 +111,22 @@ class EventAnalyticsSpec extends SparkSuite {
   test("domain-mode histogram: single-scan accuracy and end-bin clamping") {
     // fixed domain [0, 1024), width exactly 1.0 — value error ≤ 1.0
     // against the exact percentiles for in-domain data
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val ev = graft.sources.EventsAsRecords
-        .readEvents(spark, "/root/testdata/sf0.01")
-      val ps = Seq(0.5, 0.9, 0.99)
-      val got = EventAnalytics
-        .valuePercentilesHistogram(ev, ps, domain = Some((0.0, 1024.0)))
-        .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
-      val exact = EventAnalytics.valuePercentiles(ev, ps)
-        .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
-      assert(got.nonEmpty && got.keySet == exact.keySet)
-      got.foreach { case (t, vals) =>
-        ps.indices.foreach { i =>
-          val a = vals(i).asInstanceOf[Double]
-          val e = exact(t)(i).asInstanceOf[Double]
-          assert(math.abs(a - e) <= 1.0 + 1e-9,
-            s"$t p${(ps(i) * 100).toInt}: hist=$a exact=$e")
-        }
+    val ev = graft.sources.EventsAsRecords
+      .readEvents(spark, "/root/testdata/sf0.01")
+    val ps = Seq(0.5, 0.9, 0.99)
+    val got = EventAnalytics
+      .valuePercentilesHistogram(ev, ps, domain = Some((0.0, 1024.0)))
+      .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+    val exact = EventAnalytics.valuePercentiles(ev, ps)
+      .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+    assert(got.nonEmpty && got.keySet == exact.keySet)
+    got.foreach { case (t, vals) =>
+      ps.indices.foreach { i =>
+        val a = vals(i).asInstanceOf[Double]
+        val e = exact(t)(i).asInstanceOf[Double]
+        assert(math.abs(a - e) <= 1.0 + 1e-9,
+          s"$t p${(ps(i) * 100).toInt}: hist=$a exact=$e")
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
     // out-of-domain values clamp into the end bins: estimates stay
     // inside [lo, hi] instead of extrapolating, and nothing throws —
@@ -218,32 +194,27 @@ class EventAnalyticsSpec extends SparkSuite {
   }
 
   test("distributed radix-select percentiles equal the window variant at every depth") {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val ev = graft.sources.EventsAsRecords
-        .readEvents(spark, "/root/testdata/sf0.01")
-      val exact = rowsOf(EventAnalytics.valuePercentiles(ev))
-      // windowMaxRows=1 forces the full 6-level descent; 100000
-      // resolves at level 0 (terminal window only); 64 lands in
-      // between — parity must hold wherever a target stops refining
-      for (wmr <- Seq(1L, 64L, 100000L))
-        assert(rowsOf(EventAnalytics.valuePercentilesDistributed(
-          ev, windowMaxRows = wmr)) == exact, s"diverged at windowMaxRows=$wmr")
-      // the scale claim: no window (hence no sort) partitioned by the
-      // whole event type — the terminal window partitions per TARGET
-      // over a windowMaxRows-bounded candidate set
-      val p = EventAnalytics.valuePercentilesDistributed(ev)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      assert(!p.contains("windowspecdefinition(event_type"),
-        s"terminal window regressed to per-type:\n$p")
-      // the terminal candidate join must stay an equi-join (broadcast
-      // hash), never a nested loop of every row against every target
-      assert(!p.contains("BroadcastNestedLoopJoin"),
-        s"terminal pick regressed to a nested-loop join:\n$p")
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val ev = graft.sources.EventsAsRecords
+      .readEvents(spark, "/root/testdata/sf0.01")
+    val exact = rowsOf(EventAnalytics.valuePercentiles(ev))
+    // windowMaxRows=1 forces the full 6-level descent; 100000
+    // resolves at level 0 (terminal window only); 64 lands in
+    // between — parity must hold wherever a target stops refining
+    for (wmr <- Seq(1L, 64L, 100000L))
+      assert(rowsOf(EventAnalytics.valuePercentilesDistributed(
+        ev, windowMaxRows = wmr)) == exact, s"diverged at windowMaxRows=$wmr")
+    // the scale claim: no window (hence no sort) partitioned by the
+    // whole event type — the terminal window partitions per TARGET
+    // over a windowMaxRows-bounded candidate set
+    val p = EventAnalytics.valuePercentilesDistributed(ev)
+      .queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(!p.contains("windowspecdefinition(event_type"),
+      s"terminal window regressed to per-type:\n$p")
+    // the terminal candidate join must stay an equi-join (broadcast
+    // hash), never a nested loop of every row against every target
+    assert(!p.contains("BroadcastNestedLoopJoin"),
+      s"terminal pick regressed to a nested-loop join:\n$p")
     // negative values exercise the sign-flip branch of the bit mapping
     // at EVERY stopping depth — windowMaxRows=100000 resolves at level
     // 0, where the terminal window spans the double sign boundary
@@ -282,26 +253,21 @@ class EventAnalyticsSpec extends SparkSuite {
   }
 
   test("distributed spend deciles equal the global-window variant") {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val ev = graft.sources.EventsAsRecords
-        .readEvents(spark, "/root/testdata/sf0.01")
-      assert(rowsOf(EventAnalytics.userSpendDecilesDistributed(ev)) ==
-        rowsOf(EventAnalytics.userSpendDeciles(ev)))
-      // no global (partition-less) window anywhere in the plan — ranks
-      // come from the bin-prefix join + per-bin windows
-      val p = EventAnalytics.userSpendDecilesDistributed(ev)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      assert(!p.contains("windowspecdefinition(total_dec"),
-        s"rank regressed to the global window:\n$p")
-      // the bin-assignment join must be an equi-join (broadcast hash),
-      // never a nested loop over totals × bins
-      assert(!p.contains("BroadcastNestedLoopJoin"),
-        s"bin assignment regressed to a nested-loop join:\n$p")
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val ev = graft.sources.EventsAsRecords
+      .readEvents(spark, "/root/testdata/sf0.01")
+    assert(rowsOf(EventAnalytics.userSpendDecilesDistributed(ev)) ==
+      rowsOf(EventAnalytics.userSpendDeciles(ev)))
+    // no global (partition-less) window anywhere in the plan — ranks
+    // come from the bin-prefix join + per-bin windows
+    val p = EventAnalytics.userSpendDecilesDistributed(ev)
+      .queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(!p.contains("windowspecdefinition(total_dec"),
+      s"rank regressed to the global window:\n$p")
+    // the bin-assignment join must be an equi-join (broadcast hash),
+    // never a nested loop over totals × bins
+    assert(!p.contains("BroadcastNestedLoopJoin"),
+      s"bin assignment regressed to a nested-loop join:\n$p")
     // n < buckets edge: every user gets their own bucket, rank order
     val tiny = events(
       (0L, 1000L, 1L, "t", 5.0), (1L, 2000L, 2L, "t", 9.0),

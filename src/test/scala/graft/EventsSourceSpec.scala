@@ -13,8 +13,9 @@ import graft.sources.EventsAsRecords
   * micros — an encoding flip that once broke every `unix_micros`
   * consumer at analysis time. These tests pin: (a) `normalizeTs`
   * yields TimestampType with identical instants for ALL three
-  * encodings, and (b) the real fixture, whatever the current driver
-  * wrote, comes out of `readEvents` as TimestampType.
+  * encodings, (b) the real fixture, whatever the current driver
+  * wrote, comes out of `readEvents` as TimestampType, and (c) reading
+  * it sets nothing on the session's conf.
   */
 class EventsSourceSpec extends SparkSuite {
 
@@ -69,6 +70,18 @@ class EventsSourceSpec extends SparkSuite {
     // operators make and the one a TIMESTAMP_NTZ leak breaks
     assert(rowsOf(ev.select(max(unix_micros(col("ts"))).as("m")))
       .head("m").asInstanceOf[Long] > 0L)
+  }
+
+  test("records reads the fixture without touching the session's conf") {
+    // a private session without the legacy-nanos key, the one every
+    // GraftSession carries: the fixture's micros `ts` needs no legacy
+    // read, and the reader must leave the conf exactly as it found it
+    val s = spark.newSession()
+    s.conf.unset(GraftSession.NanosAsLong)
+    val before = s.conf.getAll
+    val rec = EventsAsRecords.records(s, "/root/testdata/sf0.001")
+    assert(rec.schema("timestamp").dataType == TimestampType)
+    assert(s.conf.getAll == before)
   }
 
   test("user-frame operators accept TIMESTAMP_NTZ input (entry guard)") {

@@ -27,17 +27,7 @@ class FixtureSchemaSpec extends SparkSuite {
   private val temporal: Set[DataType] = Set(TimestampType, TimestampNTZType)
 
   private def expect(table: String, cols: (String, Set[DataType])*): Unit = {
-    // save/restore: the session is shared by every suite and later
-    // tests may depend on the default (false) legacy-nanos behavior
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    val schema =
-      try spark.read.parquet(s"$dir/$table.parquet").schema
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
+    val schema = spark.read.parquet(s"$dir/$table.parquet").schema
     assert(schema.fieldNames.toSeq == cols.map(_._1),
       s"$table columns drifted: got ${schema.fieldNames.mkString(",")}")
     cols.foreach { case (name, allowed) =>

@@ -325,31 +325,23 @@ class PlanShapeSpec extends SparkSuite {
     // two scans are the algorithm; what must NOT appear is a shuffle
     // of the event stream for the stats join (broadcast both times)
     // or a value-ordered window (the cumulative sum orders BINS)
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val ev = graft.sources.EventsAsRecords
-        .readEvents(spark, "/root/testdata/sf0.001")
-      val df = graft.operators.EventAnalytics.valuePercentilesHistogram(ev)
-      val p = plan(df)
-      val windows = raw"\(\d+\) Window\b".r.findAllIn(p).length
-      assert(windows == 1, s"histogram grew windows ($windows):\n$p")
-      // the cumulative sum must order BINS: the one window spec's
-      // ordering clause names bin, never the raw value column
-      val wspec = raw"windowspecdefinition\([^)]*\)".r.findFirstIn(p)
-      assert(wspec.exists(w => w.contains("bin#") && !w.contains("value#")),
-        s"window lost its bin ordering: $wspec\n$p")
-      df.collect()
-      val executed = executedFinal(df)
-      assert(executed.contains("BroadcastHashJoin"),
-        s"stats join stopped broadcasting:\n${executed.take(3000)}")
-      assert(!executed.contains("SortMergeJoin"),
-        s"a stats join regressed to SMJ:\n${executed.take(3000)}")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    val ev = graft.sources.EventsAsRecords
+      .readEvents(spark, "/root/testdata/sf0.001")
+    val df = graft.operators.EventAnalytics.valuePercentilesHistogram(ev)
+    val p = plan(df)
+    val windows = raw"\(\d+\) Window\b".r.findAllIn(p).length
+    assert(windows == 1, s"histogram grew windows ($windows):\n$p")
+    // the cumulative sum must order BINS: the one window spec's
+    // ordering clause names bin, never the raw value column
+    val wspec = raw"windowspecdefinition\([^)]*\)".r.findFirstIn(p)
+    assert(wspec.exists(w => w.contains("bin#") && !w.contains("value#")),
+      s"window lost its bin ordering: $wspec\n$p")
+    df.collect()
+    val executed = executedFinal(df)
+    assert(executed.contains("BroadcastHashJoin"),
+      s"stats join stopped broadcasting:\n${executed.take(3000)}")
+    assert(!executed.contains("SortMergeJoin"),
+      s"a stats join regressed to SMJ:\n${executed.take(3000)}")
   }
 
   test("tpch q3 pushes filters, broadcasts the customer dim, top-ks without a global sort") {

@@ -29,43 +29,35 @@ class QueryContractSpec extends SparkSuite {
   }
 
   test("every registered query ANALYZES against the live sf0.001 fixture") {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val broken = (SparkEntry.queries ++ SparkEntry.benchQueries)
-        .toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
-          // constructing the frame and touching .schema forces full
-          // analysis (resolution + type checks) without executing the
-          // query — seconds for the whole registry, and exactly the
-          // stage where an encoding drift (unix_micros on NTZ, a cast
-          // on a vanished column) detonates. Iterative operators that
-          // execute during CONSTRUCTION (the label family, centroid
-          // training) run here at sf0.001 cost; release their
-          // embedded checkpoints like the driver mains do.
-          val r =
-            try {
-              val df = fn(spark, "/root/testdata/sf0.001")
-              assert(df.schema.fieldNames.nonEmpty)
-              StorageHygiene.releaseAndSweep(spark, "contract", name, Some(df))
-              None
-            } catch {
-              case e: Throwable =>
-                StorageHygiene.releaseAndSweep(spark, "contract", name, None,
-                  cleanRun = false)
-                // null/empty getMessage (bare NPE) must not crash the
-                // reporter whose whole job is naming the broken query
-                Some(name -> Option(e.getMessage).flatMap(
-                  _.linesIterator.nextOption()).getOrElse(e.getClass.getName))
-            }
-          r
-      }
-      assert(broken.isEmpty,
-        broken.map { case (n, m) => s"$n: $m" }.mkString("\n"))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    val broken = (SparkEntry.queries ++ SparkEntry.benchQueries)
+      .toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        // constructing the frame and touching .schema forces full
+        // analysis (resolution + type checks) without executing the
+        // query — seconds for the whole registry, and exactly the
+        // stage where an encoding drift (unix_micros on NTZ, a cast
+        // on a vanished column) detonates. Iterative operators that
+        // execute during CONSTRUCTION (the label family, centroid
+        // training) run here at sf0.001 cost; release their
+        // embedded checkpoints like the driver mains do.
+        val r =
+          try {
+            val df = fn(spark, "/root/testdata/sf0.001")
+            assert(df.schema.fieldNames.nonEmpty)
+            StorageHygiene.releaseAndSweep(spark, "contract", name, Some(df))
+            None
+          } catch {
+            case e: Throwable =>
+              StorageHygiene.releaseAndSweep(spark, "contract", name, None,
+                cleanRun = false)
+              // null/empty getMessage (bare NPE) must not crash the
+              // reporter whose whole job is naming the broken query
+              Some(name -> Option(e.getMessage).flatMap(
+                _.linesIterator.nextOption()).getOrElse(e.getClass.getName))
+          }
+        r
     }
+    assert(broken.isEmpty,
+      broken.map { case (n, m) => s"$n: $m" }.mkString("\n"))
   }
 }

@@ -153,4 +153,31 @@ class SourceDisciplineSpec extends AnyFunSuite {
     audit("session builder", raw"SparkSession\.builder\(", Map(
       "src/main/scala/graft/GraftSession.scala" -> 1), Paths.get("src"))
   }
+
+  test("no main-tree code sets a conf on a live session") {
+    // GraftSession resolves every session's conf before the session
+    // exists; a reader that set one on the session it was handed
+    // changed the conf of every later query on that session
+    audit("conf.set", raw"\.conf\.set\(", Map.empty)
+  }
+
+  test("fixture tables are read through Tables; other reads are own stores") {
+    // Tables holds the <dir>/<name>.parquet layout. Every other site
+    // reads back a store its own module persisted:
+    //   Similarity   readPqBooks' three PQ-index sidecars (coarse book,
+    //                PQ book, residual flag) + the epoched codes
+    //                table's active base
+    //   Dedup        nearDupClustersBucketed's final labels file +
+    //                the index and label stores' meta sidecars
+    //   EpochedTable the committed ingest batch dirs + the active
+    //                epoch's base dir
+    //   CorpusStore  readSlice over the hive-partitioned corpus store
+    //                its own write laid out
+    audit("read.parquet", raw"\.read\.parquet\(", Map(
+      "src/main/scala/graft/sources/Tables.scala" -> 1,
+      "src/main/scala/graft/operators/Similarity.scala" -> 4,
+      "src/main/scala/graft/operators/Dedup.scala" -> 3,
+      "src/main/scala/graft/sources/EpochedTable.scala" -> 2,
+      "src/main/scala/graft/sources/CorpusStore.scala" -> 1))
+  }
 }

@@ -125,7 +125,6 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("event-time windows run as a streaming query over the parquet fixture") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the file stream source wants a directory; link the fixture in
     val dir = java.nio.file.Files.createTempDirectory("ev_stream")
     java.nio.file.Files.createSymbolicLink(
@@ -686,32 +685,24 @@ class StreamingSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val ev = graft.sources.EventsAsRecords
-        .readEvents(spark, "/root/testdata/sf0.001")
-      val rows = ev.select(col("event_type"), col("value"))
-        .as[(String, Option[Double])].collect()
-      assert(rows.length > 10)
-      val mem = MemoryStream[(String, Option[Double])]
-      val q = graft.streaming.StreamingPercentiles.valuePercentiles(
-          mem.toDF().toDF("event_type", "value"))
-        .writeStream.format("memory").queryName("stream_pcts")
-        .outputMode("complete").start()
-      val (first, second) = rows.splitAt(rows.length / 2)
-      mem.addData(first.toIndexedSeq: _*)
-      q.processAllAvailable()
-      mem.addData(second.toIndexedSeq: _*)
-      q.processAllAvailable()
-      q.stop()
-      val streamed = spark.table("stream_pcts").collect().toSeq
-      assertPercentileBracket(ev, streamed, Seq(0.5, 0.9, 0.99))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    val ev = graft.sources.EventsAsRecords
+      .readEvents(spark, "/root/testdata/sf0.001")
+    val rows = ev.select(col("event_type"), col("value"))
+      .as[(String, Option[Double])].collect()
+    assert(rows.length > 10)
+    val mem = MemoryStream[(String, Option[Double])]
+    val q = graft.streaming.StreamingPercentiles.valuePercentiles(
+        mem.toDF().toDF("event_type", "value"))
+      .writeStream.format("memory").queryName("stream_pcts")
+      .outputMode("complete").start()
+    val (first, second) = rows.splitAt(rows.length / 2)
+    mem.addData(first.toIndexedSeq: _*)
+    q.processAllAvailable()
+    mem.addData(second.toIndexedSeq: _*)
+    q.processAllAvailable()
+    q.stop()
+    val streamed = spark.table("stream_pcts").collect().toSeq
+    assertPercentileBracket(ev, streamed, Seq(0.5, 0.9, 0.99))
   }
 
   test("streaming transitions equal the batch matrix on in-order batches") {

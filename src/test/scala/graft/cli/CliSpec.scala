@@ -151,29 +151,20 @@ class CliSpec extends AnyFunSuite {
 
   test("--parquet end-to-end: parse -> source -> analyze -> report, in the CLI core") {
     val spark = graft.SparkSuite.spark
-    // save/restore the shared session's legacy-nanos conf (suite order
-    // must not decide later tests' parquet timestamp behavior)
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    try {
-      val opts = Main.parse(
-        List("--parquet", "/root/testdata/sf0.001", "-c", "--compat"), Map.empty)
-      assert(!opts.contains("unknown") && !opts.contains("missing-value"))
-      val records =
-        graft.sources.EventsAsRecords.records(spark, opts("parquet"))
-      val out = Main.analyzeAndRender(records, opts, opts("parquet"),
-        System.nanoTime())
-      assert(out.isRight, s"CLI core failed: $out")
-      val report = out.toOption.get
-      // the full 15-column report rendered with the alive-key column
-      // populated (the -c path) and the compat legend present
-      assert(report.contains("K = Key, V = Value, P = Partition"))
-      assert(report.contains("/root/testdata/sf0.001"))
-      assert(report.linesIterator.size > 8)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    val opts = Main.parse(
+      List("--parquet", "/root/testdata/sf0.001", "-c", "--compat"), Map.empty)
+    assert(!opts.contains("unknown") && !opts.contains("missing-value"))
+    val records =
+      graft.sources.EventsAsRecords.records(spark, opts("parquet"))
+    val out = Main.analyzeAndRender(records, opts, opts("parquet"),
+      System.nanoTime())
+    assert(out.isRight, s"CLI core failed: $out")
+    val report = out.toOption.get
+    // the full 15-column report rendered with the alive-key column
+    // populated (the -c path) and the compat legend present
+    assert(report.contains("K = Key, V = Value, P = Partition"))
+    assert(report.contains("/root/testdata/sf0.001"))
+    assert(report.linesIterator.size > 8)
   }
 
   test("-c reads the source twice: the stats pass is the empty guard") {
@@ -181,22 +172,15 @@ class CliSpec extends AnyFunSuite {
     // separate isEmpty probe job would add a third full scan (the
     // EventsAsRecords offset window needs every row before limit 1)
     val spark = graft.SparkSuite.spark
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
     val opts = Main.parse(List("--parquet", "/root/testdata/sf0.001", "-c"),
       Map.empty)
     val records = graft.sources.EventsAsRecords.records(spark, opts("parquet"))
-    try {
-      val (out, run) = graft.RunRecorder(spark).window {
-        Main.analyzeAndRender(records, opts, "t", System.nanoTime())
-      }
-      assert(out.isRight, s"CLI core failed: $out")
-      assert(run.inputRecords == 2 * 1000L,
-        s"expected 2 scans of 1,000 records, read ${run.inputRecords}")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    val (out, run) = graft.RunRecorder(spark).window {
+      Main.analyzeAndRender(records, opts, "t", System.nanoTime())
     }
+    assert(out.isRight, s"CLI core failed: $out")
+    assert(run.inputRecords == 2 * 1000L,
+      s"expected 2 scans of 1,000 records, read ${run.inputRecords}")
   }
 
   test("--parquet end-to-end: the empty guard takes the compat exit text") {
