@@ -11,6 +11,9 @@ artifact now carries the means to separate the two:
     regimes are NOT comparable raw; this tool refuses them (exit 2)
     unless --force is given, and even then only prints the
     sentinel-normalized view.
+  * `sf` — the scale-factor dir the run measured. Artifacts at different
+    scale factors (or one with no `sf`) are refused the same way (exit 2
+    unless --force): their ratios compare data sizes, not plans.
   * `sentinel_s` — a fixed trivial query timed min-of-5 at the end of
     the run. Its plan never changes, so NEW.sentinel / OLD.sentinel
     estimates pure environment drift; dividing each per-query ratio by
@@ -56,6 +59,9 @@ def load(path):
     m = re.search(r'"sentinel_s":(-?[0-9.]+)', t)
     if m:
         out["sentinel_s"] = float(m.group(1))
+    m = re.search(r'"sf":"([^"]*)"', t)
+    if m:
+        out["sf"] = m.group(1)
     print(f"note: {path} is a driver tail fragment — only "
           f"{len(qs)} queries recovered; comparisons are partial")
     return out
@@ -68,6 +74,14 @@ if o_reg != n_reg and not force:
     print(f"REFUSING: regimes differ ({o_reg} vs {n_reg}) — raw ratios "
           "compare methodologies, not plans. Re-run with --force for the "
           "sentinel-normalized view only.")
+    sys.exit(2)
+
+o_sf, n_sf = old.get("sf"), new.get("sf")
+if (o_sf is None or o_sf != n_sf) and not force:
+    print(f"REFUSING: scale factors differ ({o_sf} vs {n_sf}) — raw ratios "
+          "compare data sizes, not plans, and the sentinel ratio would read "
+          "the size change as machine drift. Re-run with --force to compare "
+          "anyway.")
     sys.exit(2)
 
 o_sent, n_sent = old.get("sentinel_s"), new.get("sentinel_s")

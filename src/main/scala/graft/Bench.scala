@@ -62,10 +62,28 @@ object Bench {
   private val WatchRatio = 1.1
 
   /** A parsed prior artifact: per-query seconds, the sentinel
-    * yardstick, the regime tag ("" on pre-v2 artifacts), and the
-    * run's drift-watch list (empty when the artifact predates it). */
+    * yardstick, the regime tag ("" on pre-v2 artifacts), the run's
+    * drift-watch list (empty when the artifact predates it) and its
+    * scale-factor dir ("" when absent). */
   private[graft] case class Baseline(queries: Map[String, Double],
-      sentinel: Double, regime: String, watch: Map[String, Double])
+      sentinel: Double, regime: String, watch: Map[String, Double],
+      sf: String)
+
+  /** Why `b` cannot adjudicate a run of this regime over `sfDir`, or
+    * None when it can. Timings from another regime compare
+    * methodologies, not plans; timings from another scale factor
+    * compare data sizes, and their sentinel ratio reads as machine
+    * drift (an sf0.01 run against an sf0.1 baseline normalized every
+    * query by a phantom 1.86x). A baseline without an `sf` cannot show
+    * it matches, so it is skipped too. */
+  private[graft] def incomparable(b: Baseline, sfDir: String): Option[String] =
+    if (b.regime != Regime)
+      Some(s"regime '${b.regime}', this run is '$Regime' — cross-regime " +
+        "timings are not comparable")
+    else if (b.sf != sfDir)
+      Some(s"sf '${b.sf}', this run is '$sfDir' — timings at another " +
+        "scale factor are not comparable")
+    else None
 
   /** Suspect selection for the isolated re-timing pass, given this
     * run's sentinel-normalized per-query ratios vs the baseline and
@@ -170,8 +188,9 @@ object Bench {
   /** Parse a prior one-line bench artifact (the exact shape this main
     * emits at the bottom): per-query seconds from the flat
     * `"queries":{...}` object, the `"sentinel_s"` yardstick, the
-    * `"regime"` tag (empty string when absent — pre-v2 artifacts), and
-    * the `"drift_watch"` list (empty when absent — pre-r19 artifacts).
+    * `"regime"` tag (empty string when absent — pre-v2 artifacts), the
+    * `"drift_watch"` list (empty when absent — pre-r19 artifacts) and
+    * the `"sf"` dir (empty string when absent).
     * Returns None when the file is missing, unparseable, or carries no
     * usable sentinel — the suspect re-timing pass simply doesn't run
     * then. A ~20-line manual parse keeps the binary dependency-free;
@@ -189,10 +208,12 @@ object Bench {
           .findFirstMatchIn(text).map(_.group(1).toDouble)
         val regime = """"regime"\s*:\s*"([^"]*)"""".r
           .findFirstMatchIn(text).map(_.group(1)).getOrElse("")
+        val sf = """"sf"\s*:\s*"([^"]*)"""".r
+          .findFirstMatchIn(text).map(_.group(1)).getOrElse("")
         val qs = flatObj(text, "\"queries\":{")
         if (qs.isEmpty || sent.isEmpty) None
         else Some(Baseline(qs, sent.get, regime,
-          flatObj(text, "\"drift_watch\":{")))
+          flatObj(text, "\"drift_watch\":{"), sf))
       }
     } catch { case _: Throwable => None }
 
@@ -396,28 +417,25 @@ object Bench {
     val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE", "bench.json")
     // (name, sentinel-normalized ratio vs baseline) — recorded in the
     // artifact so suspect selection is auditable without a re-run.
-    // The baseline must share THIS run's regime: the file's own rule
-    // is that artifacts from different regimes are never compared raw
-    // — a procedure change shifts in-suite timings in ways the
-    // sentinel (a pure machine yardstick) cannot normalize, and every
-    // shifted query would become a phantom suspect burning 5 isolated
-    // re-timings. Skipping is loud, and self-heals the next run (this
-    // run commits a same-regime artifact).
+    // The baseline must share THIS run's regime and scale factor
+    // ([[incomparable]]): a procedure or data-size change shifts
+    // in-suite timings in ways the sentinel (a pure machine yardstick)
+    // cannot normalize, and every shifted query would become a phantom
+    // suspect burning 5 isolated re-timings. Skipping is loud, and a
+    // full run self-heals the regime (it commits a same-regime artifact).
     // (normalized ratios for every comparable query, baseline's watch
     // list, sentinel drift, drift actually used) — None when no usable
-    // same-regime baseline exists. Normalization divides each query's
+    // comparable baseline exists. Normalization divides each query's
     // raw ratio by [[robustDrift]] — the suite-median environment
     // estimator with the sentinel ratio as the small-N fallback (the
     // sentinel alone over-corrected; see robustDrift's scaladoc).
     val comparison: Option[(Map[String, Double], Map[String, Double], Double, Double)] =
-      loadBaseline(baselinePath) match {
-        case Some(b) if b.regime != Regime =>
-          System.err.println(
-            s"[bench] baseline $baselinePath is regime '${b.regime}', this " +
-              s"run is '$Regime' — cross-regime timings are not comparable; " +
-              "skipping the suspect re-timing pass")
+      loadBaseline(baselinePath).map(b => b -> incomparable(b, sfDir)) match {
+        case Some((_, Some(why))) =>
+          System.err.println(s"[bench] baseline $baselinePath is $why; " +
+            "skipping the suspect re-timing pass")
           None
-        case Some(b) if sentinel > 0 && b.sentinel > 0 =>
+        case Some((b, None)) if sentinel > 0 && b.sentinel > 0 =>
           val driftSentinel = sentinel / b.sentinel
           val raw = results.flatMap { case (name, t) =>
             b.queries.get(name) match {

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.model.{PartitionStats, TopicSummary}
 import graft.operators.{AliveKeys, TopicMetrics}
+import graft.operators.TopicMetrics.{Summary, SummaryBuf}
 import graft.report.Report
 
 /** The engine's user-facing facade: the reference's whole program
@@ -27,30 +28,30 @@ object TopicAnalyzer {
     * probe job — and an empty topic has 0 alive keys without a scan.
     */
   def analyze(records: DataFrame, countAliveKeys: Boolean = false): Result = {
-    // ONE collect of the per-partition frame (stats + the min/max
-    // partials); both the report rows and the global summary derive
-    // from it driver-side — the data is scanned exactly once, as the
-    // design doc promises. A second, key-partitioned aggregation runs
-    // only for -c alive keys.
-    val derived = TopicMetrics.withDerived(
-      TopicMetrics.partitionStats(records))
-    val rows = derived.collect()
-    val idx = derived.columns.zipWithIndex.toMap
-    def l(r: org.apache.spark.sql.Row, c: String): Long =
-      r.getLong(idx(c))
-    val stats = rows.toSeq.map { r =>
-      PartitionStats(r.getInt(idx("partition")), l(r, "start_offset"),
-        l(r, "end_offset"), l(r, "total"), l(r, "alive"), l(r, "tombstones"),
-        r.getDouble(idx("dirty_ratio")), l(r, "key_null"), l(r, "key_non_null"),
-        l(r, "p_bytes"), l(r, "key_bytes"), l(r, "value_bytes"),
-        l(r, "avg_key_size"), l(r, "avg_value_size"), l(r, "avg_msg_size"))
-    }.sortBy(_.partition)
-    val summary = TopicMetrics.summaryFromPartials(rows.toSeq, idx)
+    // ONE collect of the per-partition frame; each row decodes once into
+    // its report row and its D1-D6 buffer, and the buffers fold with the
+    // merge q_topic_summary runs — the data is scanned exactly once, as
+    // the design doc promises. A second, key-partitioned aggregation
+    // runs only for -c alive keys.
+    val (stats, bufs) = TopicMetrics.withDerived(
+      TopicMetrics.partitionStats(records)).collect().toSeq.map(decode).unzip
     val alive =
       if (!countAliveKeys) None
-      else if (rows.isEmpty) Some(0L)
+      else if (stats.isEmpty) Some(0L)
       else Some(AliveKeys.exact(records))
-    Result(stats, summary, alive)
+    Result(stats.sortBy(_.partition),
+      Summary.finish(bufs.foldLeft(Summary.zero)(Summary.merge)), alive)
+  }
+
+  private def decode(r: Row): (PartitionStats, SummaryBuf) = {
+    def l(c: String): Long = r.getAs[Long](c)
+    (PartitionStats(r.getAs[Int]("partition"), l("start_offset"),
+        l("end_offset"), l("total"), l("alive"), l("tombstones"),
+        r.getAs[Double]("dirty_ratio"), l("key_null"), l("key_non_null"),
+        l("p_bytes"), l("key_bytes"), l("value_bytes"),
+        l("avg_key_size"), l("avg_value_size"), l("avg_msg_size")),
+      SummaryBuf(l("total"), l("p_bytes"), l("min_alive_msg"),
+        l("max_alive_msg"), l("min_ts"), l("max_ts")))
   }
 
   def report(result: Result, topic: String, elapsedSecs: Long,

@@ -14,32 +14,6 @@ case class KafkaRecord(
     key: Array[Byte],
     value: Array[Byte])
 
-object Timestamps {
-  /** Epoch micros from whatever temporal object a Row yields —
-    * `java.sql.Timestamp` by default, `java.time.Instant` when the
-    * session enables `spark.sql.datetime.java8API.enabled`. ONE
-    * definition shared by every driver-side reduction.
-    */
-  def toMicros(v: Any): Long = v match {
-    case t: java.sql.Timestamp =>
-      t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-    case i: java.time.Instant =>
-      java.lang.Math.addExact(
-        java.lang.Math.multiplyExact(i.getEpochSecond, 1000000L),
-        i.getNano / 1000L)
-    case d: java.time.LocalDateTime =>
-      // TIMESTAMP_NTZ's external type; sessions here pin UTC, so the
-      // wall-clock value IS the instant
-      java.lang.Math.addExact(
-        java.lang.Math.multiplyExact(
-          d.toEpochSecond(java.time.ZoneOffset.UTC), 1000000L),
-        d.getNano / 1000L)
-    case other =>
-      throw new IllegalArgumentException(
-        s"unsupported temporal value: ${other.getClass}")
-  }
-}
-
 object RecordSchema {
   /** StructType mirror of the record model — a strict subset of Spark's
     * Kafka source schema, so a `spark.read.format("kafka")` frame can be

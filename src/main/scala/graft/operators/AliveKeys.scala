@@ -43,33 +43,13 @@ object AliveKeys {
       .agg(LastWrite.dead(col("partition"), col("offset"), col("tomb"))
         .as("dead_at_end"))
 
-  /** Per-key last-write state: key, deadAtEnd flag. */
-  def lastWritePerKey(records: DataFrame): DataFrame =
-    lastWriteBy(records, col("key"), "key")
-
   /** Exact alive-key count, as a 1-row/1-column frame. */
   def exactFrame(records: DataFrame): DataFrame =
-    lastWritePerKey(records)
+    lastWriteBy(records, col("key"), "key")
       .agg(count_if(!col("dead_at_end")).as("alive_keys"))
 
   def exact(records: DataFrame): Long =
     exactFrame(records).collect()(0).getLong(0)
-
-  /** Approximate variant for memory-bounded scans at extreme key
-    * cardinality: identical last-write-wins reduction, but over a 64-bit
-    * `xxhash64(key)` instead of the raw key bytes — the idiomatic
-    * stand-in for the reference's 32-bit FNV-variant bitset index
-    * (`src/fnv32.rs:74-102`; SURVEY §2.F1 says do NOT replicate that
-    * hash bit-for-bit). Collision rate at 64 bits is ~n²/2⁶⁵ —
-    * negligible up to billions of keys — while the shuffle rows shrink
-    * from arbitrary key bytes to 8 bytes.
-    */
-  def approxFrame(records: DataFrame): DataFrame =
-    lastWriteBy(records, xxhash64(col("key")), "hash")
-      .agg(count_if(!col("dead_at_end")).as("alive_keys_approx"))
-
-  def approx(records: DataFrame): Long =
-    approxFrame(records).collect()(0).getLong(0)
 
   /** Per-partition post-compaction footprint estimate — the natural
     * "what would compaction buy me" companion to the dirty ratio

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.model.TopicSummary
@@ -16,7 +17,9 @@ import graft.model.TopicSummary
   * data; map-side partial aggregation means each of the N scan tasks
   * emits one row per Kafka partition it read. Global summary metrics
   * (SURVEY §2.D) are re-reduced from the per-partition frame (§4.3
-  * option b) — no second scan of the data, ever.
+  * option b) — no second scan of the data, ever — by ONE fold,
+  * [[Summary]]'s merge and read-out, which the CLI runs driver-side
+  * and `q_topic_summary` runs as an aggregate.
   */
 object TopicMetrics {
 
@@ -46,12 +49,18 @@ object TopicMetrics {
     val aggs = Seq(
       min(col("offset")).as("start_offset"),
       (max(col("offset")) + 1).as("end_offset")) ++ counterAggs ++ Seq(
-      // partials for the global (topic-level) reduce; min/max message
+      // partials for the global (topic-level) reduce, in [[SummaryBuf]]'s
+      // encoding (epoch micros; the empty-min/max sentinels where a
+      // partition has no alive record or no timestamp); min/max message
       // size count non-tombstones only (`src/metric.rs:249-251`)
-      min(when(col("value").isNotNull, msgSize)).as("min_alive_msg"),
-      max(when(col("value").isNotNull, msgSize)).as("max_alive_msg"),
-      min(col("timestamp")).as("min_ts"),
-      max(col("timestamp")).as("max_ts"))
+      coalesce(min(when(col("value").isNotNull, msgSize)),
+        lit(Long.MaxValue)).as("min_alive_msg"),
+      coalesce(max(when(col("value").isNotNull, msgSize)),
+        lit(Long.MinValue)).as("max_alive_msg"),
+      coalesce(unix_micros(min(col("timestamp"))),
+        lit(Long.MaxValue)).as("min_ts"),
+      coalesce(unix_micros(max(col("timestamp"))),
+        lit(Long.MinValue)).as("max_ts"))
     records.groupBy(col("partition")).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -99,63 +108,60 @@ object TopicMetrics {
         col("avg_key_size"), col("avg_value_size"), col("avg_msg_size"))
       .orderBy(col("partition"))
 
-  /** Global topic summary (D1-D6), re-reduced from the per-partition
-    * partials — O(#partitions) rows in, 1 row out; every metric is a
-    * commutative monoid so the re-reduction is exact (SURVEY §3.2).
-    * Sentinel parity: all-tombstone topic reports smallest=largest=0
-    * (the reference's u64::MAX sentinel readout, `src/metric.rs:177-183`).
+  /** Global topic summary (D1-D6) as a 1-row frame: [[Summary]] over
+    * the per-partition buffers — O(#partitions) rows in, 1 row out, no
+    * second scan. `q_topic_summary` runs it; the CLI folds the same
+    * buffers driver-side ([[graft.TopicAnalyzer.analyze]]).
     */
   def summaryFrame(stats: DataFrame): DataFrame =
-    stats.agg(
-      // coalesce ALL of them: over an empty stats frame the sums are
-      // NULL where every min/max already reads out 0 — summarize's
-      // getLong would NPE, and summaryFromPartials (pinned to agree)
-      // returns zeros for the same input
-      coalesce(sum(col("total")), lit(0L)).as("overall_count"),
-      coalesce(sum(col("key_bytes") + col("value_bytes")), lit(0L))
-        .as("overall_bytes"),
-      coalesce(min(col("min_alive_msg")), lit(0L)).as("smallest_msg"),
-      coalesce(max(col("max_alive_msg")), lit(0L)).as("largest_msg"),
-      // all-null timestamps read out as 0, like the size sentinels
-      coalesce(unix_micros(min(col("min_ts"))), lit(0L)).as("earliest_us"),
-      coalesce(unix_micros(max(col("max_ts"))), lit(0L)).as("latest_us"))
+    stats.select(udaf(Summary, Encoders.product[SummaryBuf])(
+        col("total"), col("key_bytes") + col("value_bytes"),
+        col("min_alive_msg"), col("max_alive_msg"),
+        col("min_ts"), col("max_ts")).as("s"))
+      .select(col("s.*"))
 
-  def summarize(stats: DataFrame): TopicSummary = {
-    val r = summaryFrame(stats).collect()(0)
-    TopicSummary(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-      r.getLong(4), r.getLong(5))
-  }
+  /** D1-D6's partial buffer, in the encoding [[partitionStats]] emits
+    * per partition (its fields are named after those columns;
+    * `p_bytes` = key_bytes + value_bytes). */
+  final case class SummaryBuf(total: Long, p_bytes: Long,
+      min_alive_msg: Long, max_alive_msg: Long, min_ts: Long, max_ts: Long)
 
-  /** The D1-D6 reduction over ALREADY-COLLECTED per-partition rows
-    * (the output of [[withDerived]]([[partitionStats]])) — the
-    * single-scan path used by the report facade. ONE definition of the
-    * driver-side re-reduce; must agree with [[summaryFrame]] (pinned
-    * by AnalyzerSpec).
+  /** D1-D6 as a typed `Aggregator` over per-partition buffers — the
+    * Spark-native form of the reference's `MetricHandler`
+    * (`src/kafka.rs:18-20`: state, update, end-of-scan read-out). The
+    * stats pass has already folded each partition's records, so its
+    * update is [[merge]] too. Every metric is a commutative monoid, so
+    * the merge is exact in any order (SURVEY §3.2). An empty min is
+    * `Long.MaxValue` and an empty max `Long.MinValue`, the reference's
+    * sentinels (`src/metric.rs:39-62`); [[finish]] reads them out as 0,
+    * so an all-tombstone topic reports smallest = largest = 0
+    * (`src/metric.rs:177-183`) and all-null timestamps read
+    * earliest = latest = 0.
     */
-  def summaryFromPartials(rows: Seq[org.apache.spark.sql.Row],
-      idx: Map[String, Int]): TopicSummary = {
-    def longs(c: String): Seq[Long] =
-      rows.filterNot(_.isNullAt(idx(c))).map(_.getLong(idx(c)))
-    def tsUs(c: String): Seq[Long] =
-      rows.filterNot(_.isNullAt(idx(c)))
-        .map(r => graft.model.Timestamps.toMicros(r.get(idx(c))))
-    val minAlive = longs("min_alive_msg")
-    val maxAlive = longs("max_alive_msg")
-    val minTs = tsUs("min_ts")
-    val maxTs = tsUs("max_ts")
-    TopicSummary(
-      overall_count = longs("total").sum,
-      overall_bytes = longs("p_bytes").sum,
-      smallest_msg = if (minAlive.isEmpty) 0L else minAlive.min,
-      largest_msg = if (maxAlive.isEmpty) 0L else maxAlive.max,
-      earliest_us = if (minTs.isEmpty) 0L else minTs.min,
-      latest_us = if (maxTs.isEmpty) 0L else maxTs.max)
+  object Summary extends Aggregator[SummaryBuf, SummaryBuf, TopicSummary] {
+    def zero: SummaryBuf = SummaryBuf(0L, 0L,
+      Long.MaxValue, Long.MinValue, Long.MaxValue, Long.MinValue)
+    def reduce(b: SummaryBuf, part: SummaryBuf): SummaryBuf = merge(b, part)
+    def merge(a: SummaryBuf, b: SummaryBuf): SummaryBuf =
+      SummaryBuf(a.total + b.total, a.p_bytes + b.p_bytes,
+        math.min(a.min_alive_msg, b.min_alive_msg),
+        math.max(a.max_alive_msg, b.max_alive_msg),
+        math.min(a.min_ts, b.min_ts), math.max(a.max_ts, b.max_ts))
+    def finish(b: SummaryBuf): TopicSummary = {
+      def lo(v: Long) = if (v == Long.MaxValue) 0L else v
+      def hi(v: Long) = if (v == Long.MinValue) 0L else v
+      TopicSummary(b.total, b.p_bytes, lo(b.min_alive_msg),
+        hi(b.max_alive_msg), lo(b.min_ts), hi(b.max_ts))
+    }
+    def bufferEncoder: Encoder[SummaryBuf] = Encoders.product[SummaryBuf]
+    def outputEncoder: Encoder[TopicSummary] = Encoders.product[TopicSummary]
   }
 
   /** Per-partition rows AND the grand-total row in one pass —
     * `rollup(partition)` (SURVEY §4.3 option c). The null-partition row
     * is the whole-topic aggregate. Demonstrates the grouping-sets path;
-    * `report` + `summaryFrame` is the default engine surface.
+    * the default engine surface is `report` plus the D1-D6 fold over
+    * the same stats pass ([[graft.TopicAnalyzer.analyze]], [[summaryFrame]]).
     */
   def rollupStats(records: DataFrame): DataFrame =
     records.rollup(col("partition"))

@@ -4,15 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** A source of record-log DataFrames in the [[graft.model.RecordSchema]]
-  * shape. Two impls: Kafka (the reference's only source,
-  * `src/kafka.rs:22-54`) and a deterministic parquet mapping used by the
-  * test/verification tiers.
-  */
-trait RecordSource {
-  def records(spark: SparkSession): DataFrame
-}
-
 /** Batch Kafka source — the Spark-native form of the reference's bounded
   * scan (`src/kafka.rs:60-72` watermark snapshot + `src/kafka.rs:74-137`
   * poll loop). Spark's Kafka batch source snapshots end offsets at
@@ -27,8 +18,7 @@ trait RecordSource {
 final class KafkaRecordSource(
     bootstrapServers: String,
     topic: String,
-    extraOptions: Map[String, String] = Map.empty)
-  extends RecordSource {
+    extraOptions: Map[String, String] = Map.empty) {
 
   def records(spark: SparkSession): DataFrame = {
     val opts = KafkaRecordSource.batchOptions(bootstrapServers, topic, extraOptions)

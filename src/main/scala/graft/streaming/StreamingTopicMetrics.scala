@@ -56,7 +56,7 @@ object StreamingTopicMetrics {
     * division for oracle exactness — `window()` here is the native
     * streaming form of the same tumbling bucket FOR NON-NEGATIVE
     * epochs (the Kafka path guarantees them:
-    * `RecordSource.normalizeTimestamp` clamps pre-epoch input). A
+    * `KafkaRecordSource.normalizeTimestamp` clamps pre-epoch input). A
     * pre-1970 event time would diverge: `window()` floors, the batch
     * `div` truncates toward zero.
     */

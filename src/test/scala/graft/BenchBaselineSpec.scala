@@ -200,6 +200,28 @@ class BenchBaselineSpec extends AnyFunSuite {
     assert(s2.contains("\"sf\":\"/x\""))
   }
 
+  test("a baseline at another scale factor, or with no sf, skips the suspect pass") {
+    val line = (sf: String) =>
+      s"""{"metric":"total","queries":{"q_agg":1.25},$sf"regime":"${Bench.Regime}","sentinel_s":0.1}"""
+    withTemp(line(""""sf":"/data/sf0.1",""")) { path =>
+      val Some(b) = Bench.loadBaseline(path)
+      assert(b.sf == "/data/sf0.1")
+      assert(Bench.incomparable(b, "/data/sf0.1").isEmpty)
+      val why = Bench.incomparable(b, "/data/sf0.01")
+      assert(why.exists(w => w.contains("/data/sf0.1") && w.contains("/data/sf0.01")),
+        s"an sf0.01 run was adjudicated against an sf0.1 baseline: $why")
+    }
+    withTemp(line("")) { path =>
+      val Some(b) = Bench.loadBaseline(path)
+      assert(b.sf == "" && Bench.incomparable(b, "/data/sf0.1").isDefined)
+    }
+    // the regime arm still wins over a matching sf
+    withTemp(line(""""sf":"/data/sf0.1",""").replace(Bench.Regime, "v4")) { path =>
+      val Some(b) = Bench.loadBaseline(path)
+      assert(Bench.incomparable(b, "/data/sf0.1").exists(_.contains("regime")))
+    }
+  }
+
   test("missing file, missing sentinel, empty queries, garbage → None") {
     assert(Bench.loadBaseline("/nonexistent/bench.json").isEmpty)
     withTemp("""{"queries":{"q":1.0}}""") { p =>

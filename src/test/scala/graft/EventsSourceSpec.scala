@@ -4,7 +4,6 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.model.Timestamps
 import graft.sources.EventsAsRecords
 
 /** Regression pins for the events-source timestamp contract. The
@@ -106,17 +105,5 @@ class EventsSourceSpec extends SparkSuite {
     val att = rowsOf(graft.streaming.StreamingJoins.attribution(click, buy))
     assert(att.head("click_ts_us") == micros)
     assert(att.head("purchase_ts_us") == micros + 5L * 60L * 1000000L)
-  }
-
-  test("Timestamps.toMicros covers all three external temporal types") {
-    val t = new java.sql.Timestamp(micros / 1000L)
-    t.setNanos(((micros % 1000000L) * 1000L).toInt)
-    assert(Timestamps.toMicros(t) == micros)
-    assert(Timestamps.toMicros(java.time.Instant.ofEpochSecond(
-      micros / 1000000L, (micros % 1000000L) * 1000L)) == micros)
-    assert(Timestamps.toMicros(java.time.LocalDateTime.ofEpochSecond(
-      micros / 1000000L, (micros % 1000000L).toInt * 1000,
-      java.time.ZoneOffset.UTC)) == micros)
-    intercept[IllegalArgumentException](Timestamps.toMicros("nope"))
   }
 }

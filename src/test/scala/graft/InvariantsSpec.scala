@@ -36,8 +36,7 @@ class InvariantsSpec extends SparkSuite {
         val dr = p("dirty_ratio").asInstanceOf[Double]
         assert(dr >= 0.0 && dr <= 100.0)
       }
-      val summary = TopicMetrics.summarize(
-        TopicMetrics.partitionStats(records(rows: _*)))
+      val summary = TopicAnalyzer.analyze(records(rows: _*)).summary
       assert(summary.overall_count == rows.length.toLong)
       assert(summary.overall_count == stats.map(_("total").asInstanceOf[Long]).sum)
       assert(summary.overall_bytes == stats.map(_("p_bytes").asInstanceOf[Long]).sum)
@@ -79,7 +78,7 @@ class InvariantsSpec extends SparkSuite {
     // Each layout runs again with the hash aggregate forced into its
     // sort-based fallback after 2 rows, which merges LastWrite buffers
     // through mergeExpressions instead of the hash map.
-    import org.apache.spark.sql.functions.{col, xxhash64}
+    import org.apache.spark.sql.functions.col
     val parts = Seq(Int.MinValue, -1, 0, Int.MaxValue)
     val offs = Seq(Long.MinValue, -1L, 0L, 1L << 40, Long.MaxValue)
     val pinned = Seq(
@@ -104,14 +103,12 @@ class InvariantsSpec extends SparkSuite {
           .repartition(n)
         assert(recs.rdd.getNumPartitions == n)
         assert(maxByAlive(recs, col("key")) == expected.toLong)
-        val approx = maxByAlive(recs, xxhash64(col("key")))
         val fnv = maxByAlive(recs, graft.functions.Fnv32.fnv32(col("key")))
         for (fallback <- Seq(None, Some("1,2"))) {
           val ctx = s"seed=$seed partitions=$n fallback=$fallback"
           fallback.foreach(spark.conf.set(fallbackKey, _))
           try {
             assert(AliveKeys.exact(recs) == expected.toLong, ctx)
-            assert(AliveKeys.approx(recs) == approx, ctx)
             assert(rowsOf(AliveKeys.approxFnv32Frame(recs))
               .head("alive_keys_fnv32") == fnv, ctx)
           } finally spark.conf.unset(fallbackKey)

@@ -946,7 +946,6 @@ class PlanShapeSpec extends SparkSuite {
         .write.mode("overwrite").parquet(dir)
       val recs = spark.read.parquet(dir)
       Seq("key" -> AliveKeys.exactFrame(recs),
-          "hash" -> AliveKeys.approxFrame(recs),
           "bucket" -> AliveKeys.approxFnv32Frame(recs)).foreach {
         case (group, df) =>
           assert(df.collect()(0).getLong(0) == 1L)

@@ -61,7 +61,7 @@ class SourceDisciplineSpec extends AnyFunSuite {
   test("every driver-side collect() is a bounded one") {
     // bounds, per file (the round-5 verdict's audit, now executable):
     //   TopicAnalyzer    O(#partitions) report rows
-    //   AliveKeys        two 1-row aggregates
+    //   AliveKeys        one 1-row aggregate
     //   CorpusOps        O(bins) histogram longs (token budget) + the
     //                    serialized eval-shingle Bloom sketch
     //                    (numBits/8 bytes, never rows — decontaminateBloom)
@@ -77,7 +77,6 @@ class SourceDisciplineSpec extends AnyFunSuite {
     //                    sidecars + the probed-cell id list
     //                    (≤ queries × nProbes values, the static
     //                    partition-pruning predicate)
-    //   TopicMetrics     1-row global summary
     //   Bpe              ONE row per merge round (the argmax pair) —
     //                    the codebook pattern, never word rows
     //   Dedup            assignDedupLabels' driver-local closure:
@@ -95,7 +94,7 @@ class SourceDisciplineSpec extends AnyFunSuite {
       // deliberately tiny committed fixture (≤60 rows) to hash it —
       // never a corpus path
       "src/main/scala/graft/tools/GoldenStoreGen.scala" -> 1,
-      "src/main/scala/graft/operators/AliveKeys.scala" -> 2,
+      "src/main/scala/graft/operators/AliveKeys.scala" -> 1,
       "src/main/scala/graft/operators/Bpe.scala" -> 1,
       "src/main/scala/graft/operators/CorpusOps.scala" -> 2,
       // Dedup: assignDedupLabels' and labelPropagate's bounded-graph
@@ -103,8 +102,7 @@ class SourceDisciplineSpec extends AnyFunSuite {
       // already-materialized edge checkpoint, never corpus rows
       "src/main/scala/graft/operators/Dedup.scala" -> 2,
       "src/main/scala/graft/operators/EventAnalytics.scala" -> 4,
-      "src/main/scala/graft/operators/Similarity.scala" -> 9,
-      "src/main/scala/graft/operators/TopicMetrics.scala" -> 1))
+      "src/main/scala/graft/operators/Similarity.scala" -> 9))
   }
 
   test("every crossJoin is a broadcast 1-row scalar subquery") {

@@ -72,7 +72,7 @@ class TopicMetricsSpec extends SparkSuite {
       (0, 0L, 5000L, "k", "vvvv"),   // size 5
       (0, 1L, 1000L, "kk", "v"),     // size 3
       (1, 0L, 9000L, "huge-key", null)) // tombstone: excluded from min/max
-    val s = TopicMetrics.summarize(TopicMetrics.partitionStats(df))
+    val s = TopicAnalyzer.analyze(df).summary
     assert(s.overall_count == 3L)
     assert(s.overall_bytes == 5 + 3 + 8)
     assert(s.smallest_msg == 3L && s.largest_msg == 5L)
@@ -81,7 +81,7 @@ class TopicMetricsSpec extends SparkSuite {
 
   test("all-tombstone topic: smallest/largest read as 0 (sentinel parity)") {
     val df = records((0, 0L, 1L, "k", null))
-    val s = TopicMetrics.summarize(TopicMetrics.partitionStats(df))
+    val s = TopicAnalyzer.analyze(df).summary
     assert(s.smallest_msg == 0L && s.largest_msg == 0L)
   }
 
@@ -110,7 +110,6 @@ class TopicMetricsSpec extends SparkSuite {
       (1, 0L, 6L, null, "v"),   // null key: skipped entirely
       (1, 1L, 7L, "d", null))   // d dead
     assert(AliveKeys.exact(df) == 2L) // b, c
-    assert(AliveKeys.approx(df) == 2L)
   }
 
   test("compaction estimate: per-PARTITION last writes, tombstones and null keys excluded") {
