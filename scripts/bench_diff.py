@@ -41,17 +41,41 @@ force = ns.force
 threshold = ns.threshold
 
 
+def tail_queries(t):
+    """Per-query seconds from the flat `"queries":{...}` object of a tail
+    fragment, anchored on that marker the way Bench.loadBaseline anchors
+    its parse: the first '}' after it closes the object. Every other
+    query-keyed object in the artifact (`isolated_pending`,
+    `isolated_cleaned_n`, `construct_s`, ...) carries counts or
+    sub-timings, not the query's seconds. None when the fragment holds
+    no complete `"queries"` object."""
+    marker = '"queries":{'
+    start = t.find(marker)
+    end = t.find("}", start) if start >= 0 else -1
+    if end < 0:
+        return None
+    return {m.group(1): float(m.group(2)) for m in
+            re.finditer(r'"(q_[A-Za-z0-9_]+)":(-?[0-9.eE+-]+)',
+                        t[start + len(marker):end])}
+
+
 def load(path):
     """Accept either the raw Bench JSON line (has "queries") or the
     driver's BENCH_r*.json wrapper, whose "tail" holds only the LAST
-    2000 chars of run output — reconstruct whatever query timings
-    survive in the fragment and warn that coverage is partial."""
+    2000 chars of run output — recover the query timings only when the
+    fragment still holds the whole `"queries"` object, and say so."""
     d = json.load(open(path))
     if "queries" in d:
         return d
     t = d.get("tail", "") or ""
-    qs = {m.group(1): float(m.group(2)) for m in
-          re.finditer(r'"(q_[A-Za-z0-9_]+)":(-?[0-9.]+)', t)}
+    qs = tail_queries(t)
+    if qs is None:
+        print(f"note: {path} is a tail fragment with no complete "
+              '"queries" object — no query timings recovered')
+        qs = {}
+    else:
+        print(f"note: {path} is a tail fragment — "
+              f"{len(qs)} queries recovered")
     out = {"queries": qs}
     m = re.search(r'"regime":"([^"]+)"', t)
     if m:
@@ -62,8 +86,6 @@ def load(path):
     m = re.search(r'"sf":"([^"]*)"', t)
     if m:
         out["sf"] = m.group(1)
-    print(f"note: {path} is a driver tail fragment — only "
-          f"{len(qs)} queries recovered; comparisons are partial")
     return out
 
 
@@ -101,6 +123,10 @@ else:
 # flagging suspects there would re-litigate exactly the
 # machine/methodology false regressions this tool exists to end.
 can_judge = (o_reg == n_reg) or (drift is not None)
+
+if not old["queries"] or not new["queries"]:
+    print("one artifact has no query timings — nothing to compare")
+    sys.exit(0)
 
 shared = sorted(set(old["queries"]) & set(new["queries"]))
 only_old = sorted(set(old["queries"]) - set(new["queries"]))

@@ -8,6 +8,9 @@
 # Writes: /tmp/verify_<tag>.log, /tmp/oracle_<tag>.log,
 #         /tmp/verify_out_<tag>/ (parquet dumps)
 # Sets:   overall=1 on any failure (caller initializes overall=0).
+# Knobs whose effect is checked against Verify's VERIFY_CONF line:
+#   SPARK_GRAFT_SHUFFLE_PARTITIONS=n -> shuffle=n, SPARK_GRAFT_AQE=b ->
+#   aqe=b, SPARK_GRAFT_SPILL=1 -> spill=forced.
 run_verify_gate() {
   local tag="$1" sfdir="$2"; shift 2
   local out="/tmp/verify_out_$tag"
@@ -28,6 +31,7 @@ run_verify_gate() {
     case "$kv" in
       SPARK_GRAFT_SHUFFLE_PARTITIONS=*) want="shuffle=${kv#*=}" ;;
       SPARK_GRAFT_AQE=*) want="aqe=${kv#*=}" ;;
+      SPARK_GRAFT_SPILL=1) want="spill=forced" ;;
       *) continue ;;
     esac
     # anchored, allowing sbt's "[info] " prefix on forked-run stdout —
@@ -63,4 +67,33 @@ run_verify_gate() {
     grep '^FAIL' "/tmp/oracle_$tag.log" | head -20
     overall=1
   fi
+}
+
+# The forced-spill sweeps' fired-guard (spill_sweep.sh,
+# spill_layout_sweep.sh), after `run_verify_gate <tag> ...
+# SPARK_GRAFT_SPILL=1` has checked spill=forced took effect: the spills
+# must also have FIRED (metric-level). The sweep is vacuous only when
+# BOTH counters are zero — a disk-only run (mem=0, disk>0) still
+# exercised the spill/merge paths and passes. Then the per-query
+# attribution (round 20): the session-wide total alone can stay green
+# on OTHER queries' bytes after a plan change routes one operator
+# around its spill fallback, so the coverage split and the top
+# spillers make per-query firing visible in the sweep log.
+# Usage:  spill_fired_guard <tag>
+# Sets:   overall=1 on failure.
+spill_fired_guard() {
+  local tag="$1" log="/tmp/verify_$1.log" spill_line
+  spill_line=$(grep -o "VERIFY_SPILL mem=[0-9]* disk=[0-9]*" "$log" | tail -1)
+  if [ -z "$spill_line" ]; then
+    echo "FAIL  $tag: no VERIFY_SPILL line (Verify crashed before stop?)"
+    overall=1
+  elif echo "$spill_line" | grep -q "mem=0 disk=0$"; then
+    echo "FAIL  $tag: zero bytes spilled — the sweep ran a plain re-dump" \
+      "($spill_line)"
+    overall=1
+  else
+    echo "$spill_line"
+  fi
+  grep -o "VERIFY_SPILL_COVERAGE.*" "$log" | tail -1
+  grep -o "VERIFY_SPILL_QUERY.*" "$log" | head -10
 }

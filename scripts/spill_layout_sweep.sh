@@ -10,8 +10,8 @@
 # already composed (r19); this is the other orthogonal pair.
 #
 # Fired-guards: spill=forced AND shuffle=1 AND aqe=false must all echo
-# in VERIFY_CONF (the lib asserts the latter two from the env list),
-# and nonzero bytes must actually have spilled.
+# in VERIFY_CONF (the lib asserts all three from the env list), and
+# nonzero bytes must actually have spilled (spill_fired_guard).
 #
 # Usage: scripts/spill_layout_sweep.sh [sfdir]   (default sf0.01;
 #        DELIBERATELY slow — sort-based aggregation on one partition)
@@ -30,26 +30,5 @@ run_verify_gate spill_layout "$sfdir" \
   "SPARK_GRAFT_AQE=false" \
   "SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g}" \
   "SPARK_GRAFT_EXTRA_JVM_OPTS=-XX:MaxDirectMemorySize=24g"
-if ! grep -q "^\(\[info\] \)*VERIFY_CONF .*\bspill=forced\b" \
-    /tmp/verify_spill_layout.log; then
-  echo "FAIL  spill_layout: VERIFY_CONF does not show spill=forced — the" \
-    "knob did not take effect"
-  overall=1
-fi
-spill_line=$(grep -o "VERIFY_SPILL mem=[0-9]* disk=[0-9]*" \
-  /tmp/verify_spill_layout.log | tail -1)
-if [ -z "$spill_line" ]; then
-  echo "FAIL  spill_layout: no VERIFY_SPILL line (Verify crashed before stop?)"
-  overall=1
-elif echo "$spill_line" | grep -q "mem=0 disk=0$"; then
-  echo "FAIL  spill_layout: zero bytes spilled — the sweep ran a plain" \
-    "re-dump ($spill_line)"
-  overall=1
-else
-  echo "$spill_line"
-fi
-# per-query attribution (round 20): surface the coverage split and the
-# top spillers so a query whose spill path stops firing is visible
-grep -o "VERIFY_SPILL_COVERAGE.*" /tmp/verify_spill_layout.log | tail -1
-grep -o "VERIFY_SPILL_QUERY.*" /tmp/verify_spill_layout.log | head -10
+spill_fired_guard spill_layout
 exit $overall

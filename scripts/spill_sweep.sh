@@ -20,7 +20,7 @@
 # memory/diskBytesSpilled across all tasks and prints
 # `VERIFY_SPILL mem=<B> disk=<B>`; a run where both are zero never
 # entered a spill path — a plain re-dump masquerading as a spill
-# pass — and the sweep FAILS.
+# pass — and the sweep FAILS (spill_fired_guard, lib_verify_gate.sh).
 #
 # Usage: scripts/spill_sweep.sh [sfdir]   (default sf0.01, ~10 min —
 #        sort-based aggregation is deliberately slower)
@@ -40,32 +40,7 @@ overall=0
 run_verify_gate spill "$sfdir" "SPARK_GRAFT_SPILL=1" \
   "SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g}" \
   "SPARK_GRAFT_EXTRA_JVM_OPTS=-XX:MaxDirectMemorySize=24g"
-# the knobs must have TAKEN EFFECT (conf-level guard)...
-if ! grep -q "^\(\[info\] \)*VERIFY_CONF .*\bspill=forced\b" \
-    /tmp/verify_spill.log; then
-  echo "FAIL  spill: VERIFY_CONF does not show spill=forced — the knob" \
-    "did not take effect"
-  overall=1
-fi
-# ...and the spills must have FIRED (metric-level guard): the sweep is
-# vacuous only when BOTH counters are zero — a hypothetical disk-only
-# run (mem=0, disk>0) still exercised the spill/merge paths and passes
-spill_line=$(grep -o "VERIFY_SPILL mem=[0-9]* disk=[0-9]*" \
-  /tmp/verify_spill.log | tail -1)
-if [ -z "$spill_line" ]; then
-  echo "FAIL  spill: no VERIFY_SPILL line (Verify crashed before stop?)"
-  overall=1
-elif echo "$spill_line" | grep -q "mem=0 disk=0$"; then
-  echo "FAIL  spill: zero bytes spilled — the sweep ran a plain re-dump" \
-    "($spill_line)"
-  overall=1
-else
-  echo "$spill_line"
-fi
-# per-query attribution (round 20): the session-wide total alone can
-# stay green on OTHER queries' bytes after a plan change routes one
-# operator around its spill fallback — the coverage split and top
-# spillers make per-query firing visible in the sweep log
-grep -o "VERIFY_SPILL_COVERAGE.*" /tmp/verify_spill.log | tail -1
-grep -o "VERIFY_SPILL_QUERY.*" /tmp/verify_spill.log | head -10
+# the knob took effect (spill=forced, checked by run_verify_gate) and
+# the spills FIRED
+spill_fired_guard spill
 exit $overall

@@ -11,7 +11,7 @@ import graft.sources.Tables
   *
   * Block-manager hygiene: after every query execution (warmup and
   * timed, outside the timed window) the embedded checkpoint storage is
-  * released via [[StorageHygiene.releaseAndSweep]] and the session is
+  * released via [[StorageHygiene.run]]'s release step and the session is
   * asserted back to its persistent-RDD fixed point (empty). Without
   * this, iterative operators' label checkpoints accumulate across the
   * suite and block-manager pressure bleeds into every LATER query's
@@ -219,6 +219,22 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // the bench measures the correctness registry PLUS the bench-only
+    // train-time twins (Lloyd's paths — recall-gated in specs, never
+    // oracle-checkable, but their cost is worth tracking round over
+    // round; see SparkEntry.benchQueries). Because they live in this
+    // SAME registry, the v4 suspect pass adjudicates them exactly like
+    // registry queries — in-suite vs baseline, sentinel-normalized,
+    // isolated re-timing on breach. (They had no adjudication in r15
+    // only because they were new: no baseline entry existed to compare
+    // against. The baseline has carried them since ef2ba89.)
+    // SPARK_GRAFT_ONLY is an optional comma-separated query filter for
+    // targeted iteration; an unknown name fails here, before the
+    // session or the warmup, and no artifact is written
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val ordered = SparkEntry.select(only.getOrElse(Nil),
+      SparkEntry.queries ++ SparkEntry.benchQueries)
     val spark = GraftSession(GraftSession.BenchLayout)
     val cpus = spark.sparkContext.defaultParallelism.toString
     // the one fixed trivial frame behind the warmup, every quiesce and
@@ -236,60 +252,19 @@ object Bench {
     // sizes (broadcast vs sort-merge), and a different physical plan
     // compiles different generated classes, missing the cache.
     sentinelFrame().count()
-    // the bench measures the correctness registry PLUS the bench-only
-    // train-time twins (Lloyd's paths — recall-gated in specs, never
-    // oracle-checkable, but their cost is worth tracking round over
-    // round; see SparkEntry.benchQueries). Because they live in this
-    // SAME registry, the v4 suspect pass adjudicates them exactly like
-    // registry queries — in-suite vs baseline, sentinel-normalized,
-    // isolated re-timing on breach. (They had no adjudication in r15
-    // only because they were new: no baseline entry existed to compare
-    // against. The baseline has carried them since ef2ba89.)
-    val registry = SparkEntry.queries ++ SparkEntry.benchQueries
-    // optional comma-separated query filter for targeted iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach(_.diff(registry.keySet).foreach(k =>
-      System.err.println(s"[bench] WARNING: SPARK_GRAFT_ONLY names unknown query '$k'")))
-    val queries = only
-      .fold(registry)(ks => registry.filter(kv => ks(kv._1)))
-    // queries whose plans embed persisted checkpoints (the near-dup
-    // label family) are released here; a straggler after a release is
-    // counted as an operator fixed-point violation in the artifact —
-    // debris from a CRASHED run is swept too, but not counted as an
-    // operator bug (the frame was bound before the failing action, so
-    // its own checkpoints still get a targeted release)
-    var leaked = 0L
-    def release(name: String, df: Option[org.apache.spark.sql.DataFrame],
-        ok: Boolean): Unit = {
-      val swept = StorageHygiene.releaseAndSweep(spark, "bench", name, df, ok)
-      if (ok) leaked += swept
-    }
     // one run into the noop sink: forces full materialization of every
     // output column (a bare count() lets Catalyst prune projection-only
-    // plans away). The frame is bound BEFORE the action so a failed save
-    // still gets a targeted checkpoint release instead of polluting the
-    // leaked counter. (ok, frame, seconds the registry function took)
-    def runOnce(failure: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Boolean, Option[org.apache.spark.sql.DataFrame], Double) = {
-      var df: Option[org.apache.spark.sql.DataFrame] = None
-      var construct = -1.0
-      val ok =
-        try {
-          val c0 = System.nanoTime()
-          val d = fn(spark, sfDir); df = Some(d)
-          construct = (System.nanoTime() - c0) / 1e9
-          d.write.mode("overwrite").format("noop").save(); true
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $failure: ${e.getMessage}")
-          false
-        }
-      (ok, df, construct)
-    }
-    queries.foreach { case (name, fn) =>
-      val (ok, df, _) = runOnce(s"warmup $name failed", fn)
-      release(name, df, ok)
+    // plans away). StorageHygiene.run binds the frame BEFORE the action,
+    // so a failed save still gets a targeted checkpoint release
+    def runOnce(tag: String, name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame) =
+      StorageHygiene.run(spark, tag, name)(fn(spark, sfDir))(
+        _.write.mode("overwrite").format("noop").save())
+    // a straggler after a run's release is an operator fixed-point
+    // violation, counted in the artifact (a CRASHED run's debris is not)
+    var leaked = 0L
+    ordered.foreach { case (name, fn) =>
+      leaked += runOnce("bench warmup", name, fn).release().leaked
     }
     // quiesce: the warmup sweep just executed EVERY query once, leaving
     // an async backlog (ContextCleaner queue, shuffle-file deletion, GC
@@ -309,7 +284,6 @@ object Bench {
     // GC pauses and scheduler jitter only ever ADD time, so the min is
     // the least-noisy view of the plan's cost
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
-    val ordered = queries.toSeq.sortBy(_._1)
     // every timed window is a RunRecorder window: its record carries
     // the JVM-global mechanism diagnostics (GC, JIT, ContextCleaner
     // drain and pending depth) that separate a heavy NEIGHBOR's backlog
@@ -329,17 +303,16 @@ object Bench {
     // no JIT/cleaner/GC activity" for a window that never ran clean
     val CrashedDiag = Diag(-1.0, -1.0, RunRecorder.Unmeasured)
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Diag = {
-      val ((ok, df, construct), rec) =
-        recorder.window(runOnce(s"$name FAILED", fn))
+      val (run, rec) = recorder.window(runOnce("bench", name, fn))
       // checkpoint release runs OUTSIDE the timed window: timings
       // measure the plan, and every query starts from the same empty
       // block manager (the "isolated" condition) instead of inheriting
       // earlier queries' leaked storage pressure
-      release(name, df, ok)
+      leaked += run.release().leaked
       // a failed query must be loud IN THE JSON too: -1 is
       // unmistakably not a timing, so consumers cannot mistake a
       // crash for speed
-      if (ok) Diag(rec.seconds, construct, rec) else Diag(-1.0, -1.0, rec)
+      if (run.ok) Diag(rec.seconds, run.constructSeconds, rec) else Diag(-1.0, -1.0, rec)
     }
     // pass-major with a rotated start per pass: any residual boundary
     // overhead a quiesce misses lands on a DIFFERENT query each pass, so
@@ -479,7 +452,7 @@ object Bench {
     // window lacks, that load IS the in-suite/isolated gap, measured
     val isolated: Seq[(String, Diag)] = suspects.map { case (name, _) =>
       quiesce()
-      val fn = queries(name)
+      val fn = ordered.find(_._1 == name).get._2
       val ds = (0 until 5).map(_ => timeOnce(name, fn))
       name -> (if (ds.exists(_.sec < 0)) CrashedDiag
                else ds.minBy(_.sec))

@@ -17,6 +17,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     TopicMetrics.report(EventsAsRecords.records(spark, "/root/testdata/sf0.001"))
 
+  /** The entries of `from` (the registry the caller runs) named in
+    * `names`, sorted by name — all of them when `names` is empty. An
+    * unknown name is an error naming every unknown entry, so a typo
+    * fails the run instead of silently shrinking it. Bench, Verify
+    * and ExplainDump select through here. */
+  def select[V](names: Seq[String], from: Map[String, V]): Seq[(String, V)] = {
+    val unknown = names.distinct.filterNot(from.contains)
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"unknown registry entries: ${unknown.mkString(", ")}")
+    val wanted = names.toSet
+    from.toSeq.filter(kv => wanted.isEmpty || wanted(kv._1)).sortBy(_._1)
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.C + §2.E + §2.G1: the 15-column per-partition report

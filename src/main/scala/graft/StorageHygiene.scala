@@ -1,15 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** Execution-boundary storage hygiene shared by the driver-contract
-  * mains (Bench/Verify): after a query's last action, release the
-  * checkpoints its plan embeds (the near-dup label family's storage
-  * contract — see `Dedup.nearDupLabels`) and assert the session is
-  * back at its persistent-RDD fixed point, sweeping loudly if not.
-  * One definition so release semantics (blocking, failure handling,
-  * reporting) cannot drift between the two callers.
+/** Execution-boundary storage hygiene for every registry walker
+  * (Bench, Verify, ExplainDump, GoldenStoreGen, the registry-wide
+  * specs): [[run]] builds a query's frame and runs the caller's action;
+  * its [[Run.release]] step frees the checkpoints the plan embeds (the
+  * near-dup label family's storage contract — see
+  * `Dedup.nearDupLabels`) and asserts the session is back at its
+  * persistent-RDD fixed point, sweeping loudly if not. One definition,
+  * so failure reporting and leak accounting cannot drift apart.
   */
 object StorageHygiene {
 
@@ -44,30 +45,74 @@ object StorageHygiene {
     }
   }
 
-  /** Release `df`'s embedded checkpoints — BLOCKING, so the next
-    * measurement genuinely starts from a clean block manager rather
-    * than racing asynchronous block removal — then sweep stragglers.
-    *
-    * Returns the number of persistent RDDs the sweep had to absorb.
-    * `cleanRun` says whether the query's action completed normally:
-    * after a clean run + release, any non-zero return is an operator
-    * storage-contract violation (a checkpoint the release handle could
-    * not reach) and is blamed as such; after a crash, leftovers are
-    * expected debris — still released (targeted when the frame was
-    * bound before the failing action) and swept, but not blamed on the
-    * operator. Callers should count only clean-run sweeps as leaks.
-    */
-  def releaseAndSweep(spark: SparkSession, tag: String, ctx: String,
-      df: Option[Dataset[_]], cleanRun: Boolean = true): Int = {
-    df.foreach(ColumnBridge.unpersistCheckpoint(_, blocking = true))
-    val left = spark.sparkContext.getPersistentRDDs
-    if (left.nonEmpty) {
-      val blame =
-        if (cleanRun) "after checkpoint release — sweeping (fix the operator!)"
-        else "behind a failed run — sweeping (crash debris, not an operator bug)"
-      System.err.println(s"[$tag] $ctx left ${left.size} persistent RDD(s) $blame")
-      left.values.foreach(_.unpersist(blocking = true))
+  /** One query run by [[run]]: the action's value or its failure, and
+    * the build's seconds (-1 when the build failed). [[release]] is
+    * every caller's next step — Bench's outside its timed window. */
+  final class Run[A] private[StorageHygiene] (spark: SparkSession,
+      tag: String, name: String, frame: Option[DataFrame],
+      outcome: Either[Throwable, A], val constructSeconds: Double) {
+    def ok: Boolean = outcome.isRight
+    /** The first message line, or the class name when it is null. */
+    def failure: Option[String] = outcome.left.toOption.map(describe)
+    /** The action's value; rethrows the failure. */
+    def get: A = outcome match { case Right(a) => a; case Left(t) => throw t }
+    private var released = false
+    private var swept = 0
+    /** Persistent RDDs the release swept after a CLEAN run — operator
+      * storage-contract violations. Debris behind a failed run is
+      * swept but not counted. */
+    def leaked: Int = swept
+    /** Release the frame's embedded checkpoints — BLOCKING, so the next
+      * measurement starts from a clean block manager instead of racing
+      * asynchronous removal — then sweep and count stragglers. */
+    def release(): Run[A] = {
+      if (!released) {
+        released = true
+        val left = releaseAndSweep()
+        if (ok) swept = left
+      }
+      this
     }
-    left.size
+
+    private def releaseAndSweep(): Int = {
+      frame.foreach(ColumnBridge.unpersistCheckpoint(_, blocking = true))
+      val left = spark.sparkContext.getPersistentRDDs
+      if (left.nonEmpty) {
+        val blame =
+          if (ok) "after checkpoint release — sweeping (fix the operator!)"
+          else "behind a failed run — sweeping (crash debris, not an operator bug)"
+        System.err.println(s"[$tag] $name left ${left.size} persistent RDD(s) $blame")
+        left.values.foreach(_.unpersist(blocking = true))
+      }
+      left.size
+    }
   }
+
+  /** Run one registry query: time `build` (the registry function), bind
+    * its frame BEFORE `action` so a failed action still gets a targeted
+    * release, and catch any failure, reported as `[tag] name FAILED:
+    * <first line>` on stderr. Every action over the frame must happen
+    * inside `action` (see [[scoped]]'s contract). */
+  def run[A](spark: SparkSession, tag: String, name: String)(
+      build: => DataFrame)(action: DataFrame => A): Run[A] = {
+    var frame: Option[DataFrame] = None
+    var construct = -1.0
+    val outcome =
+      try {
+        val c0 = System.nanoTime()
+        val df = build
+        construct = (System.nanoTime() - c0) / 1e9
+        frame = Some(df)
+        Right(action(df))
+      } catch {
+        case t: Throwable =>
+          System.err.println(s"[$tag] $name FAILED: ${describe(t)}")
+          Left(t)
+      }
+    new Run(spark, tag, name, frame, outcome, construct)
+  }
+
+  private def describe(t: Throwable): String =
+    Option(t.getMessage).flatMap(_.linesIterator.nextOption())
+      .getOrElse(t.getClass.getName)
 }

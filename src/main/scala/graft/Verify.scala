@@ -167,73 +167,59 @@ object Verify {
     }.orElse(r.dependencies.view
       .flatMap(d => upstreamShuffleId(d.rdd)).headOption)
 
-  /** Run the named queries (all when `names` is empty), dump each to
-    * `outDir/<name>` parquet, release per-query storage. Returns each
-    * query's recorder window: session-wide `VERIFY_SPILL` alone can
-    * keep a sweep green on OTHER queries' bytes after a plan change
-    * routes one operator around its fallback, so main() reports spill
-    * COVERAGE per query. */
+  /** Run the named queries (all when `names` is empty; an unknown name
+    * fails before any runs, see [[SparkEntry.select]]), dump each to
+    * `outDir/<name>` parquet and release its storage inside the
+    * query's window. Returns each query's recorder window: session-wide
+    * `VERIFY_SPILL` alone can keep a sweep green on OTHER queries'
+    * bytes after a plan change routes one operator around its
+    * fallback, so main() reports spill COVERAGE per query. */
   def dumpQueries(spark: SparkSession, sfDir: String, outDir: String,
       names: Seq[String] = Nil): Seq[(String, RunRecorder.Record)] = {
+    val selected = SparkEntry.select(names, SparkEntry.queries)
     new java.io.File(outDir).mkdirs()
-    val selected =
-      if (names.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter(kv => names.contains(kv._1))
     val recorder = RunRecorder(spark)
-    selected.toSeq.map { case (name, fn) =>
+    selected.map { case (name, fn) =>
       name -> recorder.window {
-        // hold the frame so its embedded checkpoint storage (near-dup
-        // label family) can be released after the write — the execution
-        // boundary is the ONE place a lazily-consumed result's
-        // checkpoints can be freed (see Dedup.nearDupLabels' contract);
-        // without this the suite accumulates one persisted frame per
-        // label-consuming query for the session lifetime
-        var df: Option[org.apache.spark.sql.DataFrame] = None
-        val ok =
-          try {
-            val d = fn(spark, sfDir); df = Some(d)
-            // SPARK_GRAFT_FETCH_CHAOS=1: the registry-wide
-            // stage-resubmission axis. The written frame is routed
-            // through the plan's RDD with a wrapper that throws a REAL
-            // FetchFailedException (naming the nearest upstream shuffle)
-            // from partition 0's first attempt of the first stage
-            // attempt — the scheduler unregisters that map output,
-            // RESUBMITS the upstream stage, and re-runs only the failed
-            // partition against regenerated output while sibling
-            // partitions keep the original. The parquet the oracle
-            // compares is therefore the MIXED-PROVENANCE result, for
-            // every shuffle-bearing query in the registry (no-shuffle
-            // plans have no lineage to regenerate — written plain,
-            // counted in the noshuffle guard). createDataFrame over the
-            // wrapped RDD with the original schema preserves columns
-            // and nullability, so the compare contract is unchanged.
-            val toWrite =
-              if (!sys.env.get("SPARK_GRAFT_FETCH_CHAOS").contains("1"))
-                d.coalesce(1)
-              else {
-                val rows = d.rdd
-                upstreamShuffleId(rows) match {
-                  case None =>
-                    fetchNoShuffle.incrementAndGet(); d.coalesce(1)
-                  case Some(sid) =>
-                    val injected = rows.mapPartitionsWithIndex { (i, it) =>
-                      val tc = org.apache.spark.TaskContext.get()
-                      if (i == 0 && tc != null &&
-                          tc.stageAttemptNumber() == 0 &&
-                          tc.attemptNumber() == 0)
-                        org.apache.spark.graftbridge.FetchFailureBridge
-                          .inject(sid, s"fetch chaos sweep: $name")
-                      it
-                    }
-                    spark.createDataFrame(injected, d.schema).coalesce(1)
-                }
+        StorageHygiene.run(spark, "verify", name)(fn(spark, sfDir)) { d =>
+          // SPARK_GRAFT_FETCH_CHAOS=1: the registry-wide
+          // stage-resubmission axis. The written frame is routed
+          // through the plan's RDD with a wrapper that throws a REAL
+          // FetchFailedException (naming the nearest upstream shuffle)
+          // from partition 0's first attempt of the first stage
+          // attempt — the scheduler unregisters that map output,
+          // RESUBMITS the upstream stage, and re-runs only the failed
+          // partition against regenerated output while sibling
+          // partitions keep the original. The parquet the oracle
+          // compares is therefore the MIXED-PROVENANCE result, for
+          // every shuffle-bearing query in the registry (no-shuffle
+          // plans have no lineage to regenerate — written plain,
+          // counted in the noshuffle guard). createDataFrame over the
+          // wrapped RDD with the original schema preserves columns
+          // and nullability, so the compare contract is unchanged.
+          val toWrite =
+            if (!sys.env.get("SPARK_GRAFT_FETCH_CHAOS").contains("1"))
+              d.coalesce(1)
+            else {
+              val rows = d.rdd
+              upstreamShuffleId(rows) match {
+                case None =>
+                  fetchNoShuffle.incrementAndGet(); d.coalesce(1)
+                case Some(sid) =>
+                  val injected = rows.mapPartitionsWithIndex { (i, it) =>
+                    val tc = org.apache.spark.TaskContext.get()
+                    if (i == 0 && tc != null &&
+                        tc.stageAttemptNumber() == 0 &&
+                        tc.attemptNumber() == 0)
+                      org.apache.spark.graftbridge.FetchFailureBridge
+                        .inject(sid, s"fetch chaos sweep: $name")
+                    it
+                  }
+                  spark.createDataFrame(injected, d.schema).coalesce(1)
               }
-            toWrite.write.mode("overwrite").parquet(s"$outDir/$name"); true
-          } catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-            false
-          }
-        StorageHygiene.releaseAndSweep(spark, "verify", name, df, ok)
+            }
+          toWrite.write.mode("overwrite").parquet(s"$outDir/$name")
+        }.release()
       }._2
     }
   }
@@ -255,10 +241,7 @@ object Verify {
   /** Dump the oracle map (all entries, or only `names`) as the
     * oracle_sql.json the comparing harness consumes. */
   def dumpOracleSql(outDir: String, names: Seq[String] = Nil): Unit = {
-    val selected =
-      if (names.isEmpty) SparkEntry.oracleSql
-      else SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
-    val json = selected
+    val json = SparkEntry.select(names, SparkEntry.oracleSql)
       .map { case (k, v) => s"${jsonEscape(k)}: ${jsonEscape(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -266,6 +249,8 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, names) = (args(0), args(1), args.drop(2).toSeq)
+    // an unknown name fails here, before a session exists
+    SparkEntry.select(names, SparkEntry.queries)
     val spark = session()
     val recorder = RunRecorder(spark)
     val perQuery = dumpQueries(spark, sfDir, outDir, names)

@@ -74,10 +74,6 @@ object TextFunctions {
   def langHits(text: Column): Column =
     TextExprs.stopword_hits(normText(text), Langs.map(Stopwords))
 
-  /** Count of tokens that are members of `words` (fused). */
-  def stopwordHits(text: Column, words: Seq[String]): Column =
-    element_at(TextExprs.stopword_hits(normText(text), Seq(words)), 1)
-
   /** Predicted language from a materialized [[langHits]] array: argmax
     * of per-language hits, ties broken by `Langs` order; no hits at
     * all → "und" (undetermined).

@@ -177,10 +177,6 @@ object Bpe {
       .orderBy(col("doc_id"))
   }
 
-  /** Train-then-encode in one call — the end-to-end spec surface. */
-  def encodeQuery(docs: DataFrame, numMerges: Int = 20): DataFrame =
-    encodeCounts(docs, trainMerges(docs, numMerges))
-
   /** The shipped tokenizer: a FIXED merge table, pinned from one
     * [[trainMerges]] run over the reference corpus (sf0.01 documents,
     * numMerges = 24) — the deployment reality that a tokenizer is

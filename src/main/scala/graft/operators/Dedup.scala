@@ -64,18 +64,6 @@ object Dedup {
       .agg(min(col("doc_id")).as("canonical_doc_id"),
         count(lit(1)).as("dup_count"))
 
-  /** MinHash signature column: `numHashes` universal-hash permutations
-    * of the shingle hashes, each reduced to its min — one fused
-    * projection ([[ArrayHashExprs.ShingleHashExpr]] +
-    * [[ArrayHashExprs.MinHashSigExpr]]), no UDF, no shuffle.
-    */
-  def withMinhashSignature(docs: DataFrame, numHashes: Int = 16,
-      shingleN: Int = 3): DataFrame =
-    docs.withColumn("minhash",
-      ArrayHashExprs.minhash_sig(
-        ArrayHashExprs.shingle_hashes(
-          TextFunctions.normText(col("text")), shingleN), numHashes))
-
   /** Declarative (HOF-composition) minhash — semantically identical to
     * the native [[ArrayHashExprs.MinHashSigExpr]] on NULL-FREE arrays
     * (the only kind the engine produces); kept as the parity oracle

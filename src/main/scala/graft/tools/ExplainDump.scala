@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.GraftSession
+import graft.{GraftSession, SparkEntry, StorageHygiene}
 
 /** Dumps `.explain("formatted")` for every SparkEntry query (or the
   * ones named in args) — the per-operator plan-review loop: check
@@ -12,15 +12,14 @@ import graft.GraftSession
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
+    val selected = SparkEntry.select(args.drop(1).toSeq, SparkEntry.queries)
     val spark = GraftSession(GraftSession.BenchLayout)
-    graft.SparkEntry.queries
-      .filter { case (n, _) => names.isEmpty || names(n) }
-      .toSeq.sortBy(_._1)
-      .foreach { case (name, fn) =>
-        println(s"\n========== $name ==========")
-        fn(spark, sfDir).explain("formatted")
-      }
+    val failed = selected.count { case (name, fn) =>
+      println(s"\n========== $name ==========")
+      !StorageHygiene.run(spark, "explain", name)(fn(spark, sfDir))(
+        _.explain("formatted")).release().ok
+    }
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.GraftSession
+import graft.{GraftSession, StorageHygiene}
 import graft.operators.{CorpusOps, Dedup, Similarity}
 import graft.sources.{EpochedTable, Tables}
 
@@ -80,6 +80,15 @@ object GoldenStoreGen {
       CorpusOps.sourceDistinctFromSketches(
         CorpusOps.readDistinctSketches(spark, s"$goldenDir/sketches"))))
 
+  /** Each artifact's canonical hash as the spec's pinned-map line. */
+  private def printHashes(spark: SparkSession, goldenDir: String,
+      fixtureDir: String): Unit =
+    readers(spark, goldenDir, fixtureDir).foreach { case (name, rd) =>
+      val (n, h) = StorageHygiene.run(spark, "golden", name)(rd())(
+        canonicalHash).release().get
+      println(s"""GOLDEN "$name" -> ($n""" + s"""L, "$h"),""")
+    }
+
   def main(args: Array[String]): Unit = {
     // the arity check must cover BOTH forms: a bare `--hashes` would
     // otherwise reach args(1) and die with ArrayIndexOutOfBounds
@@ -93,12 +102,7 @@ object GoldenStoreGen {
       val goldenDir = args(1)
       val fixtureDir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
       val spark = GraftSession(GraftSession.BenchLayout)
-      readers(spark, goldenDir, fixtureDir).foreach { case (name, rd) =>
-        val df = rd()
-        val (n, h) = canonicalHash(df)
-        graft.StorageHygiene.releaseAndSweep(spark, "golden-hashes", name, Some(df))
-        println(s"""GOLDEN "$name" -> ($n""" + s"""L, "$h"),""")
-      }
+      printHashes(spark, goldenDir, fixtureDir)
       spark.stop()
       return
     }
@@ -131,12 +135,7 @@ object GoldenStoreGen {
     Similarity.writePqIndex(emb, s"$out/pq")
     CorpusOps.writeDistinctSketches(docs, s"$out/sketches")
 
-    readers(spark, out, fixtureDir).foreach { case (name, rd) =>
-      val df = rd()
-      val (n, h) = canonicalHash(df)
-      graft.StorageHygiene.releaseAndSweep(spark, "golden-gen", name, Some(df))
-      println(s"""GOLDEN "$name" -> ($n""" + s"""L, "$h"),""")
-    }
+    printHashes(spark, out, fixtureDir)
     spark.stop()
   }
 }

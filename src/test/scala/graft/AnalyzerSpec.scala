@@ -1,9 +1,13 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.functions.{col, udaf}
 
 import graft.model.{KafkaRecord, TopicSummary}
 import graft.operators.TopicMetrics
+import graft.operators.TopicMetrics.{Summary, SummaryBuf}
 
 /** End-to-end facade, and the topic summary's two call paths: the
   * CLI's driver-side fold ([[TopicAnalyzer.analyze]]) and the
@@ -76,5 +80,51 @@ class AnalyzerSpec extends SparkSuite {
       KafkaRecord(0, 0L, null, b("k"), b("v")),
       KafkaRecord(1, 0L, null, b("kk"), b("vv"))).toDS().toDF()) ==
       TopicSummary(2L, 6L, 2L, 4L, 0L, 0L))
+  }
+
+  test("Summary's sort-based fallback merge equals the driver-side fold, per group") {
+    // q_topic_summary has no grouping key, so its ObjectHashAggregate
+    // holds one buffer and never falls back. Grouped, with SpillConf's
+    // threshold of 2 keys, every task holding 3+ groups sorts its
+    // partial buffers and merges them with Summary.merge instead.
+    val fb = spark.newSession()
+    fb.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2")
+    import fb.implicits._
+    val (noMin, noMax) = (Long.MaxValue, Long.MinValue)
+    // 4 groups round the 48 rows, so each of the local scan's
+    // contiguous slices holds all 4; every 5th buffer is a
+    // tombstone-only partition's, and group 3 has no timestamp at all
+    val bufs = (0 until 48).map { i =>
+      val g = i % 4
+      val dead = i % 5 == 0
+      g -> SummaryBuf(i + 1L, 3L * i,
+        if (dead) noMin else 10L + i % 7, if (dead) noMax else 20L + i,
+        if (g == 3) noMin else 1000L * i, if (g == 3) noMax else 1000L * i + 5)
+    }
+    val out = bufs.toDF("g", "b")
+      .groupBy(col("g"))
+      .agg(udaf(Summary, Encoders.product[SummaryBuf])(
+        col("b.total"), col("b.p_bytes"), col("b.min_alive_msg"),
+        col("b.max_alive_msg"), col("b.min_ts"), col("b.max_ts")).as("s"))
+      .select(col("g").as("_1"), col("s").as("_2"))
+      .as[(Int, TopicSummary)]
+    val got = out.collect().toMap
+    // the fallback fired: ObjectHashAggregateExec counts the tasks
+    // that switched to sort-based aggregation
+    val fellBack = new AdaptiveSparkPlanHelper {}
+      .collect(out.queryExecution.executedPlan) {
+        case a: ObjectHashAggregateExec => a.metrics("numTasksFallBacked").value
+      }.sum
+    assert(fellBack > 0, "no task fell back to sort-based aggregation")
+    // the expected fold is written out field by field, independent of
+    // Summary.merge, so a wrong merge cannot agree with itself
+    val want = bufs.groupBy(_._1).map { case (g, xs) =>
+      val bs = xs.map(_._2)
+      g -> Summary.finish(SummaryBuf(bs.map(_.total).sum, bs.map(_.p_bytes).sum,
+        bs.map(_.min_alive_msg).min, bs.map(_.max_alive_msg).max,
+        bs.map(_.min_ts).min, bs.map(_.max_ts).max))
+    }
+    assert(got == want)
+    assert(want(3).earliest_us == 0L && want(3).latest_us == 0L)
   }
 }

@@ -33,19 +33,8 @@ class EmptyFixtureSpec extends SparkSuite {
   private def executeRegistry(dir: String): Seq[(String, String)] =
     (SparkEntry.queries ++ SparkEntry.benchQueries)
       .toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-        var df: Option[org.apache.spark.sql.DataFrame] = None
-        try {
-          val d = fn(spark, dir); df = Some(d)
-          d.collect()
-          StorageHygiene.releaseAndSweep(spark, "degenerate", name, df)
-          None
-        } catch {
-          case e: Throwable =>
-            StorageHygiene.releaseAndSweep(spark, "degenerate", name, df,
-              cleanRun = false)
-            Some(name -> Option(e.getMessage).flatMap(
-              _.linesIterator.nextOption()).getOrElse(e.getClass.getName))
-        }
+        StorageHygiene.run(spark, "degenerate", name)(fn(spark, dir))(
+          _.collect()).release().failure.map(name -> _)
       }
 
   test("every registered query EXECUTES on an all-empty fixture") {

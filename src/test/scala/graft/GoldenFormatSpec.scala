@@ -95,9 +95,8 @@ class GoldenFormatSpec extends SparkSuite {
         assert(readers.map(_._1).sorted == pinned.keys.toSeq.sorted,
           s"$version: generator read surface and pinned hashes diverged")
         readers.foreach { case (name, rd) =>
-          val df = rd()
-          val (n, h) = GoldenStoreGen.canonicalHash(df)
-          StorageHygiene.releaseAndSweep(spark, "golden-spec", name, Some(df))
+          val (n, h) = StorageHygiene.run(spark, "golden-spec", name)(rd())(
+            GoldenStoreGen.canonicalHash).release().get
           assert((n, h) == pinned(name),
             s"$version/$name: persisted-format drift — read ($n, $h), " +
               s"pinned ${pinned(name)}. If the at-rest format changed on " +

@@ -605,9 +605,11 @@ class PlanShapeSpec extends SparkSuite {
       "shinglehashexpr", "minhashsigexpr", "simhashexpr", "unitvectorexpr")
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        val p = plan(fn(spark, "/root/testdata/sf0.001"))
-        val hits = p.linesIterator.filter(_.contains("Condition"))
-          .flatMap(l => expensive.filter(l.contains)).toSeq.distinct
+        val hits = StorageHygiene.run(spark, "plan-shape", name)(
+          fn(spark, "/root/testdata/sf0.001")) { df =>
+          plan(df).linesIterator.filter(_.contains("Condition"))
+            .flatMap(l => expensive.filter(l.contains)).toSeq.distinct
+        }.release().get
         if (hits.isEmpty) None else Some(s"$name: ${hits.mkString(",")}")
     }
     assert(offenders.isEmpty,
@@ -669,14 +671,17 @@ class PlanShapeSpec extends SparkSuite {
       "q_split_leakage_indexed" -> 4)
     val (offenders, sortAggOffenders) = SparkEntry.queries.toSeq.sortBy(_._1)
       .map { case (name, fn) =>
-        val qe = fn(spark, "/root/testdata/sf0.001").queryExecution
-        val n = qe.optimizedPlan.collect {
+        val (n, sa) = StorageHygiene.run(spark, "plan-shape", name)(
+          fn(spark, "/root/testdata/sf0.001")) { df =>
+          val qe = df.queryExecution
+          (qe.optimizedPlan.collect {
             case w: org.apache.spark.sql.catalyst.plans.logical.Window
               if w.partitionSpec.isEmpty => w
-          }.length
-        val sa = qe.sparkPlan.collect {
-          case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
-        }.length
+          }.length,
+           qe.sparkPlan.collect {
+            case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
+          }.length)
+        }.release().get
         (if (n > allow.getOrElse(name, 0)) Some(s"$name: $n global windows")
           else None,
          if (sa != allowSortAgg.getOrElse(name, 0))

@@ -30,8 +30,7 @@ class QueryContractSpec extends SparkSuite {
 
   test("every registered query ANALYZES against the live sf0.001 fixture") {
     val broken = (SparkEntry.queries ++ SparkEntry.benchQueries)
-      .toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
+      .toSeq.sortBy(_._1).flatMap { case (name, fn) =>
         // constructing the frame and touching .schema forces full
         // analysis (resolution + type checks) without executing the
         // query — seconds for the whole registry, and exactly the
@@ -40,23 +39,11 @@ class QueryContractSpec extends SparkSuite {
         // execute during CONSTRUCTION (the label family, centroid
         // training) run here at sf0.001 cost; release their
         // embedded checkpoints like the driver mains do.
-        val r =
-          try {
-            val df = fn(spark, "/root/testdata/sf0.001")
-            assert(df.schema.fieldNames.nonEmpty)
-            StorageHygiene.releaseAndSweep(spark, "contract", name, Some(df))
-            None
-          } catch {
-            case e: Throwable =>
-              StorageHygiene.releaseAndSweep(spark, "contract", name, None,
-                cleanRun = false)
-              // null/empty getMessage (bare NPE) must not crash the
-              // reporter whose whole job is naming the broken query
-              Some(name -> Option(e.getMessage).flatMap(
-                _.linesIterator.nextOption()).getOrElse(e.getClass.getName))
-          }
-        r
-    }
+        StorageHygiene.run(spark, "contract", name)(
+          fn(spark, "/root/testdata/sf0.001"))(
+          df => assert(df.schema.fieldNames.nonEmpty))
+          .release().failure.map(name -> _)
+      }
     assert(broken.isEmpty,
       broken.map { case (n, m) => s"$n: $m" }.mkString("\n"))
   }

@@ -64,11 +64,9 @@ class RetryDeterminismSpec extends SparkSuite {
       it
     }(Encoders.row(df.schema))
 
-  private def canon(df: DataFrame): Seq[String] = {
-    val rows = df.collect().map(_.toString).sorted.toSeq
-    StorageHygiene.releaseAndSweep(spark, "retry-spec", "canon", Some(df))
-    rows
-  }
+  private def canon(df: => DataFrame): Seq[String] =
+    StorageHygiene.run(spark, "retry-spec", "canon")(df)(
+      _.collect().map(_.toString).sorted.toSeq).release().get
 
   private def check(name: String, input: DataFrame)(
       f: DataFrame => DataFrame): Unit = {

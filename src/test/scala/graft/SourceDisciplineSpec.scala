@@ -152,6 +152,14 @@ class SourceDisciplineSpec extends AnyFunSuite {
       "src/main/scala/graft/GraftSession.scala" -> 1), Paths.get("src"))
   }
 
+  test("StorageHygiene's runner is the only caller of its release-and-sweep, main and test trees alike") {
+    // every registry walker selects, runs and releases through
+    // StorageHygiene.run; a hand-written release loop elsewhere is how
+    // failure reporting and leak accounting drifted apart before
+    audit("releaseAndSweep", raw"releaseAndSweep\(", Map(
+      "src/main/scala/graft/StorageHygiene.scala" -> 2), Paths.get("src"))
+  }
+
   test("no main-tree code sets a conf on a live session") {
     // GraftSession resolves every session's conf before the session
     // exists; a reader that set one on the session it was handed
