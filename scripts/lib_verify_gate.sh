@@ -4,7 +4,9 @@
 # so a fix to the counting or guard never has to land twice — the two
 # gates cannot silently diverge.
 #
-# Usage:  run_verify_gate <tag> <sfdir> [ENV=VAL ...]
+# Usage:  run_verify_gate <tag> <sfdir> [ENV=VAL ...] [-- query ...]
+#         (query names after `--` are the only queries run and compared;
+#         none means the whole registry)
 # Writes: /tmp/verify_<tag>.log, /tmp/oracle_<tag>.log,
 #         /tmp/verify_out_<tag>/ (parquet dumps)
 # Sets:   overall=1 on any failure (caller initializes overall=0).
@@ -13,10 +15,16 @@
 #   aqe=b, SPARK_GRAFT_SPILL=1 -> spill=forced.
 run_verify_gate() {
   local tag="$1" sfdir="$2"; shift 2
+  local envs=() queries=""
+  while [ $# -gt 0 ]; do
+    [ "$1" = "--" ] && { shift; queries="$*"; break; }
+    envs+=("$1"); shift
+  done
+  set -- "${envs[@]}"
   local out="/tmp/verify_out_$tag"
   rm -rf "$out"
-  echo "== $tag ($sfdir${*:+; $*}): Spark Verify =="
-  env "$@" sbt -batch "runMain graft.Verify $sfdir $out" \
+  echo "== $tag ($sfdir${*:+; $*}${queries:+; only $queries}): Spark Verify =="
+  env "$@" sbt -batch "runMain graft.Verify $sfdir $out${queries:+ $queries}" \
     >"/tmp/verify_$tag.log" 2>&1
   if [ $? -ne 0 ]; then
     echo "FAIL  $tag: Verify main crashed (see /tmp/verify_$tag.log)"

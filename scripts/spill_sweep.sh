@@ -9,12 +9,14 @@
 # buffers spill and merge in sorted-key order; a sketch whose
 # serialize/merge round-trip loses state only shows it when the
 # ObjectHashAggregate falls back). SPARK_GRAFT_SPILL=1 (GraftSession's
-# spill conf, all public Spark confs) forces: TungstenAggregate
-# sort-fallback after 5 keys, ObjectHashAggregate fallback after 2
-# groups, window/SMJ/session-window/cartesian buffers external+spill
-# at 16 rows, and UnsafeExternalSorter force-spill every 2000
-# elements. Hash-exact under all that = results are functions of the
-# data, not of whether partial state stayed in memory.
+# SpillConf, all public Spark confs, whose scaladoc gives the reasons
+# for each number) forces: TungstenAggregate sort-fallback
+# (testFallbackStartsAt=64,8192), ObjectHashAggregate fallback after 2
+# groups, window/SMJ/session-window/cartesian buffers external at 16
+# rows and file-spilling at 262144, and UnsafeExternalSorter
+# force-spill every 262144 elements. Hash-exact under all that =
+# results are functions of the data, not of whether partial state
+# stayed in memory.
 #
 # The fired-guard is metric-based: Verify's session sums
 # memory/diskBytesSpilled across all tasks and prints
@@ -22,8 +24,10 @@
 # entered a spill path — a plain re-dump masquerading as a spill
 # pass — and the sweep FAILS (spill_fired_guard, lib_verify_gate.sh).
 #
-# Usage: scripts/spill_sweep.sh [sfdir]   (default sf0.01, ~10 min —
-#        sort-based aggregation is deliberately slower)
+# Usage: scripts/spill_sweep.sh [sfdir] [query...]
+#        (default sf0.01, ~10 min for the whole registry — sort-based
+#        aggregation is deliberately slower). Query names run and
+#        compare only those queries, e.g. the ones a change touches.
 set -u
 cd "$(dirname "$0")/.."
 . scripts/lib_verify_gate.sh
@@ -39,7 +43,7 @@ overall=0
 # SpillConf scaladoc
 run_verify_gate spill "$sfdir" "SPARK_GRAFT_SPILL=1" \
   "SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g}" \
-  "SPARK_GRAFT_EXTRA_JVM_OPTS=-XX:MaxDirectMemorySize=24g"
+  "SPARK_GRAFT_EXTRA_JVM_OPTS=-XX:MaxDirectMemorySize=24g" -- "${@:2}"
 # the knob took effect (spill=forced, checked by run_verify_gate) and
 # the spills FIRED
 spill_fired_guard spill

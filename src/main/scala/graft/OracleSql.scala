@@ -2028,7 +2028,7 @@ object OracleSql {
   /** Mirrors [[graft.operators.Similarity.semanticContaminationById]]:
     * id split, unit vectors, pairwise index-order-fold dot, per-train
     * verdict with arg-max via row_number (ties toward smaller eval id,
-    * same as the engine's `max_by(eval_id, struct(score, -eval_id))`).
+    * same as the engine's arg-max over the (score, -eval_id) order).
     */
   def semanticContamination(evalMaxId: Long = 50,
       threshold: Double = 0.4): String =

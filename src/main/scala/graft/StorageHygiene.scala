@@ -60,7 +60,10 @@ object StorageHygiene {
     private var swept = 0
     /** Persistent RDDs the release swept after a CLEAN run — operator
       * storage-contract violations. Debris behind a failed run is
-      * swept but not counted. */
+      * swept but not counted. Spark keeps `getPersistentRDDs` by weak
+      * reference, so a persisted RDD that nothing references any more
+      * can drop out of it before the release: the ContextCleaner frees
+      * that one, and it is never swept here nor counted. */
     def leaked: Int = swept
     /** Release the frame's embedded checkpoints — BLOCKING, so the next
       * measurement starts from a clean block manager instead of racing

@@ -40,7 +40,7 @@ object AliveKeys {
       .select(group.as(name), col("partition"), col("offset"),
         col("value").isNull.as("tomb"))
       .groupBy(col(name))
-      .agg(LastWrite.dead(col("partition"), col("offset"), col("tomb"))
+      .agg(LastWrite.argMax(col("tomb"), col("partition"), col("offset"))
         .as("dead_at_end"))
 
   /** Exact alive-key count, as a 1-row/1-column frame. */
@@ -63,24 +63,29 @@ object AliveKeys {
     * records are invalid on compacted topics and count only toward the
     * pre-compaction totals.
     *
-    * Scale: one (partition, key) shuffle whose `max_by` buffer carries
-    * the value bytes — a BINARY buffer, so this one plans as a
-    * sort-based aggregate — re-reduced per partition; totals re-use the partition
-    * grouping. Output is O(#partitions) rows of exact BIGINTs.
+    * Scale: one (partition, key) shuffle of [[LastWrite]] buffers whose
+    * payload is the last write's `length(value)` (null for a
+    * tombstone): `retained_bytes` needs only that length, so the value
+    * bytes never reach the shuffle and the reduction is a map-side
+    * partial hash aggregate; re-reduced per partition; totals re-use
+    * the partition grouping. Output is O(#partitions) rows of exact
+    * BIGINTs.
     */
   def compactionEstimate(records: DataFrame): DataFrame = {
     val totals = records.groupBy(col("partition")).agg(
       count(lit(1)).as("n_records"),
       (coalesce(sum(length(col("key"))), lit(0L)) +
         coalesce(sum(length(col("value"))), lit(0L))).as("total_bytes"))
-    val retained = records.filter(col("key").isNotNull)
+    // a record without an offset has no place in the log's order
+    val retained = records
+      .filter(col("key").isNotNull && col("offset").isNotNull)
       .groupBy(col("partition"), col("key"))
-      .agg(max_by(col("value"), col("offset")).as("last_value"))
-      .filter(col("last_value").isNotNull)
+      .agg(LastWrite.argMax(length(col("value")), col("offset"))
+        .as("last_len"))
+      .filter(col("last_len").isNotNull)
       .groupBy(col("partition"))
       .agg(count(lit(1)).as("alive_keys"),
-        sum(length(col("key")) + length(col("last_value")))
-          .as("retained_bytes"))
+        sum(length(col("key")) + col("last_len")).as("retained_bytes"))
     totals.join(retained, Seq("partition"), "left")
       .select(col("partition"), col("n_records"), col("total_bytes"),
         coalesce(col("alive_keys"), lit(0L)).as("alive_keys"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Fnv32, TextFunctions}
+import graft.functions.{Fnv32, LastWrite, TextFunctions}
 
 /** Corpus-curation operators for large-scale training-data pipelines:
   * deterministic train/val/test splitting, hash-Bernoulli (stratified)
@@ -270,8 +270,8 @@ object CorpusOps {
     * The production alternative to min-id canonicalization — dedup
     * should keep the *best* copy, not an arbitrary one.
     *
-    * `max_by` over a (quality, -doc_id) ordering struct is a partial-
-    * aggregable one-shuffle plan — no per-cluster window sort. The
+    * [[LastWrite]] over the (quality, -doc_id) order is a one-shuffle
+    * hash aggregate with map-side partials — no per-cluster sort. The
     * quality arithmetic is [[TextFunctions.qualityScore]], already
     * bit-matched by its oracle, so the argmax is engine-stable.
     */
@@ -289,8 +289,7 @@ object CorpusOps {
         TextFunctions.qualityScore(col("text")).as("quality")), Seq("doc_id"))
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_docs"),
-        max_by(col("doc_id"), struct(col("quality"), -col("doc_id")))
-          .as("best_doc_id"),
+        LastWrite.bestId(col("doc_id"), col("quality")).as("best_doc_id"),
         max(col("quality")).as("best_quality"))
       .orderBy(col("cluster"))
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
+import graft.functions.LastWrite
 import graft.sources.EpochedTable
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -249,7 +250,7 @@ object Similarity {
     * benchmarks are tiny (10³–10⁵ vectors) against a 100 TB corpus, so
     * the eval side is broadcast once and the plan is ONE corpus scan ×
     * |eval| fused dot products per row with a partial-aggregable
-    * (count / max / max_by) reduction on `train_id` — no shuffle
+    * (count / max / [[LastWrite]]) reduction on `train_id` — no shuffle
     * carries a vector, and the output is bounded by the contaminated
     * set. All arithmetic is the index-order double fold ([[dot]]), so
     * the DuckDB oracle reproduces scores bit-exactly.
@@ -266,8 +267,7 @@ object Similarity {
         dot(col("tu"), col("eu")).as("score"))
       .groupBy(col("train_id"))
       .agg(count(lit(1)).as("n_eval_hits"),
-        max_by(col("eval_id"), struct(col("score"), -col("eval_id")))
-          .as("top_eval_id"),
+        LastWrite.bestId(col("eval_id"), col("score")).as("top_eval_id"),
         round(max(col("score")), 6).as("top_score"))
       .orderBy(col("train_id"))
   }
@@ -767,10 +767,11 @@ object Similarity {
       .unionAll(pairs
         .select(col("vec_b").as("anchor"), col("vec_a").as("pos"),
           col("score")))
+    // the winner's score is the group's max: NaN highest in both, and
+    // every pair scores >= a positive threshold, so no signed zero
     val positives = sym.groupBy(col("anchor"))
-      .agg(max(struct(col("score"), (-col("pos")).as("npos"))).as("m"))
-      .select(col("anchor"), (-col("m.npos")).as("positive_id"),
-        col("m.score").as("pos_score"))
+      .agg(LastWrite.bestId(col("pos"), col("score")).as("positive_id"),
+        max(col("score")).as("pos_score"))
     val bmin = corpus.filter(col("embedding").isNotNull)
       .select(CorpusOps.hashBucket(col("vec_id"), negBuckets).as("bucket"),
         col("vec_id"))

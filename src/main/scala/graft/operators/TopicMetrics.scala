@@ -72,27 +72,26 @@ object TopicMetrics {
     *  - dirty_ratio is the tombstone percentage, 0.0 when either term
     *    is 0 (`src/metric.rs:159-167`).
     */
-  def withDerived(stats: DataFrame): DataFrame =
-    stats
-      .withColumn("p_bytes", col("key_bytes") + col("value_bytes"))
-      .withColumn("dirty_ratio",
-        when(col("total") > 0 && col("tombstones") > 0,
-          col("tombstones") * 100.0 / col("total")).otherwise(0.0))
-      // TRUE integer division (the reference's src/metric.rs u64
-      // division), not floor(double quotient): past 2^53 bytes the
-      // correctly-rounded double can cross an integer boundary and
-      // floor() then disagrees with integer div — the same 2^53
-      // exactness bound this engine treats as hard everywhere else.
-      // Oracle mirrors with `//`.
-      .withColumn("avg_key_size",
-        when(col("alive") > 0 && col("key_bytes") > 0,
-          expr("key_bytes div alive")).otherwise(0L).cast("long"))
-      .withColumn("avg_value_size",
-        when(col("alive") > 0 && col("value_bytes") > 0,
-          expr("value_bytes div alive")).otherwise(0L).cast("long"))
-      .withColumn("avg_msg_size",
-        when(col("alive") > 0 && col("p_bytes") > 0,
-          expr("p_bytes div alive")).otherwise(0L).cast("long"))
+  def withDerived(stats: DataFrame): DataFrame = {
+    val pBytes = col("key_bytes") + col("value_bytes")
+    // TRUE integer division (the reference's src/metric.rs u64
+    // division), not floor(double quotient): past 2^53 bytes the
+    // correctly-rounded double can cross an integer boundary and
+    // floor() then disagrees with integer div — the same 2^53
+    // exactness bound this engine treats as hard everywhere else.
+    // Oracle mirrors with `//`.
+    def perAlive(bytes: Column): Column =
+      when(col("alive") > 0 && bytes > 0,
+        call_function("div", bytes, col("alive"))).otherwise(0L).cast("long")
+    // one projection: a withColumn chain re-analyses the plan per column
+    stats.select(col("*"), pBytes.as("p_bytes"),
+      when(col("total") > 0 && col("tombstones") > 0,
+        col("tombstones") * 100.0 / col("total")).otherwise(0.0)
+        .as("dirty_ratio"),
+      perAlive(col("key_bytes")).as("avg_key_size"),
+      perAlive(col("value_bytes")).as("avg_value_size"),
+      perAlive(pBytes).as("avg_msg_size"))
+  }
 
   /** The full 15-column report frame, ordered by partition id (G1,
     * `src/main.rs:103-106`); column set mirrors the reference's table

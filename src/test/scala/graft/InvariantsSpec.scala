@@ -2,6 +2,8 @@ package graft
 
 import scala.util.Random
 
+import org.apache.spark.sql.Column
+
 import graft.operators.{AliveKeys, TopicMetrics}
 
 /** Randomized invariant tests (SURVEY §5.2(2)): metric identities and
@@ -115,6 +117,127 @@ class InvariantsSpec extends SparkSuite {
         }
       }
     }
+  }
+
+  /** `df`'s rows in a canonical order, each double as its bits (NaN
+    * equals NaN, -0.0 differs from 0.0), except that the `byValue`
+    * columns read a zero of either sign as 0.0. */
+  private def exactRows(df: org.apache.spark.sql.DataFrame,
+      byValue: Set[String] = Set.empty): Seq[Seq[Any]] = {
+    val cols = df.columns.toSeq
+    df.collect().toSeq.map(r => cols.indices.map(i => r.get(i) match {
+      case d: Double if byValue(cols(i)) && d == 0.0 => 0L
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case v => v
+    })).sortBy(_.mkString(","))
+  }
+
+  test("LastWrite.bestId and compactionEstimate pick the rows the max_by/max(struct) forms they replaced pick") {
+    // The Spark forms each site ran before LastWrite, kept here only as
+    // the reference. Best-of-cluster, semantic decontamination and
+    // contrastive positives each reduce with LastWrite.bestId beside a
+    // count or max; each of those aggregate lists runs against its old
+    // form. Scores cover null (lowest), NaN (highest, equal to NaN),
+    // -0.0 = 0.0, all-null groups, null ids and ties broken by the id;
+    // compaction keys end on a tombstone, a zero-length value, or live
+    // on two partitions. Each layout runs at 1, 3 and 7 input
+    // partitions, then again with the hash aggregate forced into its
+    // sort-based fallback after 2 rows, which merges buffers through
+    // mergeExpressions.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.functions.LastWrite
+    val s = spark
+    import s.implicits._
+    val nan = Double.NaN
+    val scored = Seq[(Long, Option[Long], Option[Double])](
+      (1L, Some(4L), None), (1L, Some(2L), None), (1L, Some(9L), None),
+      (2L, Some(1L), None), (2L, Some(6L), Some(0.25)), (2L, Some(3L), Some(-1.0)),
+      (3L, Some(5L), Some(nan)), (3L, Some(2L), Some(Double.PositiveInfinity)),
+      (3L, Some(8L), Some(nan)), (3L, Some(1L), None),
+      (4L, Some(5L), Some(0.0)), (4L, Some(3L), Some(-0.0)),
+      (4L, Some(9L), Some(-1e-300)),
+      (5L, Some(7L), Some(0.5)), (5L, Some(2L), Some(0.5)),
+      (5L, Some(9L), Some(0.5)), (5L, Some(4L), Some(0.4999)),
+      (6L, None, Some(1.0)), (6L, Some(4L), Some(0.5)),
+      (7L, Some(11L), Some(Double.NegativeInfinity)),
+      (8L, None, None), (8L, None, None))
+    // (site, its aggregates over (g, id, score), their old form). The
+    // `top` max compares by value: Spark's max keeps the first of -0.0
+    // and 0.0 it meets, so its sign depends on the plan's row order;
+    // the old max(struct) took the positive's score from the winner.
+    def by(aggs: Column*): DataFrame => DataFrame =
+      _.groupBy(col("g")).agg(aggs.head, aggs.tail: _*)
+    val best = LastWrite.bestId(col("id"), col("score")).as("best")
+    val maxBy = max_by(col("id"), struct(col("score"), -col("id"))).as("best")
+    val sites = Seq[(String, DataFrame => DataFrame, DataFrame => DataFrame)](
+      ("CorpusOps.bestOfClusterFromLabels",
+        by(count(lit(1)).as("n"), best, max(col("score")).as("top")),
+        by(count(lit(1)).as("n"), maxBy, max(col("score")).as("top"))),
+      ("Similarity.semanticContamination",
+        by(count(lit(1)).as("n"), best, round(max(col("score")), 6).as("top")),
+        by(count(lit(1)).as("n"), maxBy, round(max(col("score")), 6).as("top"))),
+      ("Similarity.contrastiveTriplets",
+        by(best, max(col("score")).as("top")),
+        by(max(struct(col("score"), (-col("id")).as("nid"))).as("m"))
+          .andThen(_.select(col("g"), (-col("m.nid")).as("best"),
+            col("m.score").as("top")))))
+    def compactionBefore(records: DataFrame): DataFrame = {
+      val totals = records.groupBy(col("partition")).agg(
+        count(lit(1)).as("n_records"),
+        (coalesce(sum(length(col("key"))), lit(0L)) +
+          coalesce(sum(length(col("value"))), lit(0L))).as("total_bytes"))
+      val retained = records.filter(col("key").isNotNull)
+        .groupBy(col("partition"), col("key"))
+        .agg(max_by(col("value"), col("offset")).as("last_value"))
+        .filter(col("last_value").isNotNull)
+        .groupBy(col("partition"))
+        .agg(count(lit(1)).as("alive_keys"),
+          sum(length(col("key")) + length(col("last_value")))
+            .as("retained_bytes"))
+      totals.join(retained, Seq("partition"), "left")
+        .select(col("partition"), col("n_records"), col("total_bytes"),
+          coalesce(col("alive_keys"), lit(0L)).as("alive_keys"),
+          coalesce(col("retained_bytes"), lit(0L)).as("retained_bytes"))
+    }
+    val log = Seq(
+      (0, 1L, 0L, "t", "a"), (0, 5L, 0L, "t", null),
+      (0, 2L, 0L, "z", "abc"), (0, 7L, 0L, "z", ""),
+      (1, 3L, 0L, "z", null), (1, 1L, 0L, "z", "q"),
+      (1, Long.MinValue, 0L, "m", "x"), (1, Long.MaxValue, 0L, "m", "yy"),
+      (1, 0L, 0L, "m", null), (0, 9L, 0L, null, "nokey"),
+      (1, 8L, 0L, null, null), (2, 4L, 0L, "e", null), (0, -1L, 0L, "w", ""))
+    val fallbackKey = "spark.sql.TungstenAggregate.testFallbackStartsAt"
+    for (seed <- 1L to 2L; n <- Seq(1, 3, 7)) {
+      val rnd = new Random(seed * 31 + n)
+      val input = rnd.shuffle(scored).toDF("g", "id", "score").repartition(n)
+      // plus a key whose only record has no offset, which max_by skipped
+      val recs = records(rnd.shuffle(log): _*)
+        .union(records((2, 0L, 0L, "n", "v"))
+          .withColumn("offset", lit(null).cast("long")))
+        .repartition(n)
+      assert(input.rdd.getNumPartitions == n && recs.rdd.getNumPartitions == n)
+      val cases = sites.map { case (name, site, reference) =>
+        (name, () => exactRows(site(input), Set("top")),
+          exactRows(reference(input), Set("top")))
+      } :+ ("compactionEstimate",
+        () => exactRows(AliveKeys.compactionEstimate(recs)),
+        exactRows(compactionBefore(recs)))
+      for (fallback <- Seq(None, Some("1,2"))) {
+        fallback.foreach(spark.conf.set(fallbackKey, _))
+        try cases.foreach { case (name, got, expected) =>
+          assert(got() == expected,
+            s"$name seed=$seed partitions=$n fallback=$fallback")
+        } finally spark.conf.unset(fallbackKey)
+      }
+    }
+    // a variable-width input is refused at analysis, never planned as
+    // a sort-based aggregate
+    val refused = intercept[org.apache.spark.sql.AnalysisException](
+      scored.toDF("g", "id", "score").groupBy(col("g"))
+        .agg(LastWrite.argMax(
+          col("id").cast("string"), col("score"))).collect())
+    assert(refused.getMessage.contains("graft_last_write"))
   }
 
   test("metrics invariant under cross-partition record permutation") {

@@ -645,23 +645,11 @@ class PlanShapeSpec extends SparkSuite {
     // twice would double this test's time). A SortAggregate sorts its
     // whole input on both sides of the shuffle — the plan Spark falls
     // back to when an aggregate buffer cannot live in a hash map (a
-    // struct, string or binary max_by/min_by). Each remaining site
-    // needs a reason here; a fixed-width aggregate (LastWrite) is the
-    // usual way out.
+    // struct, string or binary buffer). Each remaining site needs a
+    // reason here. A group's winning row is LastWrite's job (a
+    // fixed-width hash aggregate); SourceDisciplineSpec keeps the
+    // struct-ordered max_by/max forms out of the main tree.
     val allowSortAgg = Map(
-      // max_by(eval_id, struct(score, -eval_id)) tie-break ordering,
-      // Similarity.semanticContamination, over the post-join hit rows
-      "q_decontaminate_semantic" -> 2,
-      // max_by(doc_id, struct(quality, -doc_id)) tie-break ordering,
-      // CorpusOps.bestOfClusterFromLabels, one row per labelled doc
-      "q_cluster_best" -> 2,
-      "q_cluster_best_indexed" -> 2,
-      // compactionEstimate's max_by(value, offset): the retained value
-      // bytes ARE the output (retained_bytes), so they ride the buffer
-      "q_compaction_estimate" -> 2,
-      // max(struct(score, -pos)) best-positive ordering,
-      // Similarity.contrastiveTriplets, over the LSH near-pair rows
-      "q_contrastive_triplets" -> 2,
       // min/max(source) STRING fold of each melted pair's two rows,
       // CorpusOps.sourceOverlap — two rows per group
       "q_source_overlap" -> 2,
@@ -935,9 +923,11 @@ class PlanShapeSpec extends SparkSuite {
 
   test("alive-key reductions: codegen'd hash aggregates, no sort, no value in a shuffle") {
     // LastWrite's fixed-width buffer keeps each AliveKeys reduction a
-    // map-side-partial HashAggregate; the struct-ordered max_by it
-    // replaced planned Sort → SortAggregate on both sides of the
-    // shuffle, with every record's value bytes in the map-side sort
+    // map-side-partial HashAggregate; the max_by forms it replaced
+    // planned Sort → SortAggregate on both sides of the shuffle, with
+    // every record's value bytes in the map-side sort
+    // (compactionEstimate's max_by carried them through the shuffle)
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.execution.{SortExec, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
       SortAggregateExec}
@@ -950,14 +940,23 @@ class PlanShapeSpec extends SparkSuite {
         (0, 1L, 1000L, "b", "y"), (1, 6L, 1000L, null, "z"))
         .write.mode("overwrite").parquet(dir)
       val recs = spark.read.parquet(dir)
-      Seq("key" -> AliveKeys.exactFrame(recs),
-          "bucket" -> AliveKeys.approxFnv32Frame(recs)).foreach {
-        case (group, df) =>
-          assert(df.collect()(0).getLong(0) == 1L)
+      // (grouping, frame, its rows, the SortExecs it must not plan)
+      val anySort: SortExec => Boolean = _ => true
+      Seq((Seq("key"), AliveKeys.exactFrame(recs), Seq(Row(1L)), anySort),
+          (Seq("bucket"), AliveKeys.approxFnv32Frame(recs), Seq(Row(1L)), anySort),
+          // "a" is dead on partition 1 but alive on partition 0. The
+          // final orderBy and the totals join may sort the O(#partitions)
+          // per-partition rows; no sort may carry a key, offset or value.
+          (Seq("partition", "key"), AliveKeys.compactionEstimate(recs),
+            Seq(Row(0, 2L, 4L, 2L, 4L), Row(1, 2L, 2L, 0L, 0L)),
+            (s: SortExec) => s.output.exists(a =>
+              Set("key", "offset", "value")(a.name)))).foreach {
+        case (group, df, rows, forbidden) =>
+          assert(df.collect().toSeq == rows, group)
           val p = df.queryExecution.executedPlan
           val keyed = aqe.collect(p) {
             case a: HashAggregateExec
-              if a.groupingExpressions.map(_.name) == Seq(group) => a
+              if a.groupingExpressions.map(_.name) == group => a
           }
           assert(keyed.size == 2, s"$group: expected partial + final:\n$p")
           val codegen = aqe.collect(p) {
@@ -969,7 +968,7 @@ class PlanShapeSpec extends SparkSuite {
             s"$group: aggregate fell out of whole-stage codegen:\n$p")
           val sorts = aqe.collect(p) {
             case a: SortAggregateExec => a
-            case s: SortExec => s
+            case s: SortExec if forbidden(s) => s
           }
           assert(sorts.isEmpty, s"$group: sort-based plan:\n$p")
           val valueShuffles = aqe.collect(p) {

@@ -160,6 +160,15 @@ class SourceDisciplineSpec extends AnyFunSuite {
       "src/main/scala/graft/StorageHygiene.scala" -> 2), Paths.get("src"))
   }
 
+  test("LastWrite is the one arg-max: no max_by, min_by or struct max/min") {
+    // a struct-ordered max_by/min_by or max/min over struct(...) keeps
+    // its buffer out of the hash map and plans a sort-based aggregate
+    // that sorts every input row; graft.functions.LastWrite picks a
+    // group's winning row with a fixed-width hash-aggregate buffer
+    audit("arg-max", raw"\b(?:max_by|min_by)\(|\b(?:max|min)\(struct\(",
+      Map.empty)
+  }
+
   test("no main-tree code sets a conf on a live session") {
     // GraftSession resolves every session's conf before the session
     // exists; a reader that set one on the session it was handed
