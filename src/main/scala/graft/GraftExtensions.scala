@@ -1,8 +1,21 @@
 package graft
 
+import scala.annotation.tailrec
+import scala.collection.mutable
+
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AtLeastNNonNulls,
+  Attribute, AttributeSet, CaseWhen, Coalesce, ConditionalExpression, ExprId,
+  Expression, ExpressionInfo, HigherOrderFunction, If, In, IsNotNull, IsNull,
+  Length, Literal, NamedExpression, OctetLength, Or, SubqueryExpression,
+  Unevaluable, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
+  AggregateFunction}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter,
+  LogicalPlan, Project, Window}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.WINDOW
 
 import graft.functions.ArrayHashExprs.{DotProductExpr, MinHashSigExpr, PolyHash31Expr, ShingleHashExpr, SimHashExpr, UnitVectorExpr}
 import graft.functions.Fnv32.Fnv32Expr
@@ -10,11 +23,12 @@ import graft.functions.TextExprs.{BpePunctCountsExpr, CleanTextExpr, RollingHash
 import graft.functions.TextFunctions
 import graft.operators.CorpusOps
 
-/** SQL surface for graft's custom Catalyst expressions. Two ways in:
-  *
-  *  - config: `spark.sql.extensions=graft.GraftExtensions` (the
-  *    `SparkSessionExtensions` injection path);
-  *  - runtime: `GraftExtensions.register(spark)` on any live session.
+/** graft's Catalyst extension: the SQL surface for its custom
+  * expressions, and one optimizer rule, [[GraftExtensions.NarrowWindowInputs]].
+  * Every [[GraftSession]] loads it through `spark.sql.extensions`, so
+  * the functions and the rule are in every session the engine builds.
+  * `GraftExtensions.register(spark)` adds the functions (not the rule)
+  * to any other live session.
   *
   * Registered functions:
   *   graft_poly_hash31(str)      31-bit polynomial string hash
@@ -40,10 +54,12 @@ import graft.operators.CorpusOps
   * `graft_lang_hits(lower(trim(regexp_replace(text, '\\s+', ' '))))`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  def apply(e: SparkSessionExtensions): Unit =
+  def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       e.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    e.injectOptimizerRule(_ => GraftExtensions.NarrowWindowInputs)
+  }
 }
 
 object GraftExtensions {
@@ -137,6 +153,168 @@ object GraftExtensions {
   // survive to codegen and throw (see ColumnBridge.catalystExpression)
   private def expr(c: org.apache.spark.sql.Column) =
     org.apache.spark.sql.graftbridge.ColumnBridge.catalystExpression(c)
+
+  /** Moves what a Window's consumer reads of a wide pass-through
+    * column below the Window, so the column leaves the window's
+    * exchange and sort. The record log's offset window
+    * (`EventsAsRecords.records`) passes every record's `key` and
+    * `value` bytes through, while the stats pass reads only their
+    * lengths and null flags and the alive-key pass only `value IS NULL`.
+    * Computed below the Window, those are a few fixed-width columns,
+    * and `ColumnPruning` drops the bytes from the window's input.
+    *
+    * Shape: a consumer (`Project` or `Aggregate`) over zero or more
+    * deterministic `Project`/`Filter` nodes (the chain) over a `Window`.
+    * A consumer subexpression moves when, with the chain's aliases
+    * inlined, it is deterministic, has a fixed-width result, holds no
+    * aggregate, window or subquery, reads only the Window's input, and
+    * reads a variable-width input column that neither the Window (its
+    * partition, order and functions) nor a chain Filter reads. Only
+    * maximal such subexpressions move, and only when every wide column
+    * they read is then read nowhere above the Window. Each moves as an
+    * alias in a `Project` under the Window and rides up the chain.
+    *
+    * ANSI guard: a moved expression runs on every window row. Below a
+    * chain Filter that includes rows the Filter drops, and out of a
+    * lazily evaluated position (a later branch of `If`, `CaseWhen`,
+    * `Coalesce`, the right side of `And`/`Or`, an `IN` list, an
+    * aggregate's input under a FILTER clause) it runs where it would
+    * not have. There only expressions that cannot raise move: `IsNull`,
+    * `IsNotNull`, `Length`, `OctetLength`, `Coalesce`, `If`, `CaseWhen`,
+    * literals and attributes. An always-evaluated expression, such as
+    * an aggregate's input, moves whole.
+    */
+  object NarrowWindowInputs extends Rule[LogicalPlan] {
+
+    def apply(plan: LogicalPlan): LogicalPlan =
+      plan.transformUpWithPruning(_.containsPattern(WINDOW)) {
+        case c @ (_: Project | _: Aggregate) => narrow(c).getOrElse(c)
+      }
+
+    /** The Project/Filter chain under `n`, top down, and the node below it. */
+    @tailrec private def chainUnder(n: LogicalPlan,
+        acc: List[LogicalPlan] = Nil): (List[LogicalPlan], LogicalPlan) =
+      n match {
+        case _: Project | _: Filter => chainUnder(n.children.head, n :: acc)
+        case _ => (acc.reverse, n)
+      }
+
+    private def cannotRaise(e: Expression): Boolean = e match {
+      case _: Attribute | _: Literal => true
+      case _: IsNull | _: IsNotNull | _: Length | _: OctetLength |
+          _: Coalesce | _: If | _: CaseWhen => e.children.forall(cannotRaise)
+      case _ => false
+    }
+
+    /** Whether each child of `e` is evaluated only on some rows. */
+    private def lazyChildren(e: Expression): Seq[Boolean] = e match {
+      case c: ConditionalExpression
+          if c.alwaysEvaluatedInputs.size == 1 &&
+            (c.alwaysEvaluatedInputs.head eq c.children.head) =>
+        false +: c.children.tail.map(_ => true)
+      case _: ConditionalExpression | _: AtLeastNNonNulls =>
+        e.children.map(_ => true)
+      case _: And | _: Or | _: In => false +: e.children.tail.map(_ => true)
+      case a: AggregateExpression => a.children.map(_ => a.filter.isDefined)
+      case _ => e.children.map(_ => false)
+    }
+
+    private def narrow(consumer: LogicalPlan): Option[LogicalPlan] =
+      chainUnder(consumer.children.head) match {
+        case (chain, w: Window)
+            if chain.forall(_.expressions.forall(_.deterministic)) =>
+          val wide = AttributeSet(
+            w.child.output.filterNot(a => UnsafeRow.isFixedLength(a.dataType)))
+          if (wide.isEmpty) None else rewrite(consumer, chain, w, wide)
+        case _ => None
+      }
+
+    private def rewrite(consumer: LogicalPlan, chain: List[LogicalPlan],
+        w: Window, wide: AttributeSet): Option[LogicalPlan] = {
+      // each chain alias in terms of the Window's output, bottom up
+      val defs = chain.reverse.foldLeft(Map.empty[ExprId, Expression]) {
+        case (m, Project(list, _)) => m ++ list.collect {
+          case a: Alias => a.exprId -> inline(m, a.child)
+        }
+        case (m, _) => m
+      }
+      def inlined(e: Expression) = inline(defs, e)
+      val filters = chain.collect { case f: Filter => f }
+      val readBelow = AttributeSet(
+        w.references ++ filters.flatMap(f => inlined(f.condition).references))
+      val (exprs, grouping) = consumer match {
+        case p: Project => (p.projectList, Nil)
+        case a: Aggregate => (a.aggregateExpressions, a.groupingExpressions)
+      }
+
+      // one rewrite of the consumer's expressions, moving no expression
+      // that reads a `blocked` column
+      def attempt(blocked: AttributeSet): (Seq[NamedExpression], Seq[Alias]) = {
+        val moved = mutable.LinkedHashMap.empty[Expression, Alias]
+        def movable(x: Expression, guarded: Boolean): Boolean = {
+          val wideRead = x.references.intersect(wide)
+          !x.isInstanceOf[NamedExpression] && x.deterministic &&
+            UnsafeRow.isFixedLength(x.dataType) &&
+            x.references.subsetOf(w.child.outputSet) &&
+            wideRead.nonEmpty && !wideRead.exists(blocked.contains) &&
+            !x.exists {
+              case _: Attribute => false
+              case _: Unevaluable | _: AggregateFunction |
+                  _: SubqueryExpression => true
+              case _ => false
+            } &&
+            (!guarded || cannotRaise(x))
+        }
+        def visit(e: Expression, guarded: Boolean): Expression = {
+          val x = inlined(e)
+          if (movable(x, guarded))
+            moved.getOrElseUpdate(x.canonicalized,
+              Alias(x, s"_nw${moved.size}")()).toAttribute
+          else e match {
+            case _: Attribute | _: HigherOrderFunction | _: SubqueryExpression => e
+            case _ => e.withNewChildren(e.children.zip(lazyChildren(e)).map {
+              case (c, lazily) => visit(c, guarded || lazily)
+            })
+          }
+        }
+        val out = exprs.map { ne =>
+          visit(ne, filters.nonEmpty) match {
+            case n: NamedExpression if n.exprId == ne.exprId => n
+            case other => Alias(other, ne.name)(ne.exprId, ne.qualifier)
+          }
+        }
+        (out, moved.values.toSeq)
+      }
+
+      // a wide column still read above the Window blocks every move
+      // that reads it; settle on the set of such columns
+      @tailrec def settle(blocked: AttributeSet): (Seq[NamedExpression], Seq[Alias]) = {
+        val (out, moved) = attempt(blocked)
+        val stillRead = AttributeSet((out ++ grouping).flatMap(e => inlined(e).references))
+        val more = stillRead.intersect(wide) -- blocked
+        if (more.isEmpty) (out, moved) else settle(blocked ++ more)
+      }
+      val (out, moved) = settle(readBelow.intersect(wide))
+      if (moved.isEmpty) None
+      else {
+        val passed = moved.map(_.toAttribute)
+        val window: LogicalPlan =
+          w.copy(child = Project(w.child.output ++ moved, w.child))
+        val newChain = chain.foldRight(window) {
+          case (p: Project, below) =>
+            p.copy(projectList = p.projectList ++ passed, child = below)
+          case (f: Filter, below) => f.copy(child = below)
+        }
+        Some(consumer match {
+          case p: Project => p.copy(projectList = out, child = newChain)
+          case a: Aggregate => a.copy(aggregateExpressions = out, child = newChain)
+        })
+      }
+    }
+
+    private def inline(defs: Map[ExprId, Expression], e: Expression): Expression =
+      e.transformUp { case a: Attribute if defs.contains(a.exprId) => defs(a.exprId) }
+  }
 
   /** Register on an already-running session. */
   def register(spark: SparkSession): Unit =

@@ -37,12 +37,15 @@ object GraftSession {
   /** The conf every session carries. The generated-class cache is sized
     * to the registry (Bench r21): ~143 plans compile far more classes
     * than the default 100 entries hold, so with the default every warm
-    * query paid Janino + C2 again for classes already compiled once. */
+    * query paid Janino + C2 again for classes already compiled once.
+    * [[GraftExtensions]] brings graft's SQL functions and its window
+    * narrowing rule into every session. */
   private val SharedConf = Map(
     "spark.app.name" -> "graft-topic-analyzer",
     "spark.sql.session.timeZone" -> "UTC",
     NanosAsLong -> "true",
     "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.sql.extensions" -> classOf[GraftExtensions].getName,
     "spark.ui.enabled" -> "false")
 
   /** SPARK_GRAFT_SPILL=1: at sf≤0.1 hash-aggregate sort-fallback,

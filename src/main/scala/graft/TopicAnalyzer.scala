@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import java.util.concurrent.{ExecutionException, Executors}
+
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions
+import org.apache.spark.sql.execution.SQLExecution
 
 import graft.model.{PartitionStats, TopicSummary}
 import graft.operators.{AliveKeys, TopicMetrics}
@@ -20,27 +26,52 @@ object TopicAnalyzer {
       aliveKeys: Option[Long])
 
   /** Analyze a record-log frame ([[graft.model.RecordSchema]] shape).
-    * One scan for all C/D/E metrics; a second, key-partitioned hash
-    * aggregation ([[AliveKeys.exact]]) only when `countAliveKeys`
-    * (mirroring the reference's optional `-c` handler registration,
-    * `src/main.rs:77-80`) and the stats found at least one record. Zero
-    * stats rows is how callers detect an empty topic — no separate
-    * probe job — and an empty topic has 0 alive keys without a scan.
+    * One scan for all C/D/E metrics; with `countAliveKeys` (the
+    * reference's optional `-c` handler registration,
+    * `src/main.rs:77-80`) a second, key-partitioned hash aggregation
+    * ([[AliveKeys.exact]]) runs beside it, on its own thread, and the
+    * call returns once both jobs have ended. If either fails, its
+    * failure is rethrown after the other has ended, so no job outlives
+    * the call. Zero stats rows is how callers detect an empty topic —
+    * no separate probe job — and an empty topic's alive count is the
+    * alive job's 0.
     */
   def analyze(records: DataFrame, countAliveKeys: Boolean = false): Result = {
     // ONE collect of the per-partition frame; each row decodes once into
     // its report row and its D1-D6 buffer, and the buffers fold with the
-    // merge q_topic_summary runs — the data is scanned exactly once, as
-    // the design doc promises. A second, key-partitioned aggregation
-    // runs only for -c alive keys.
-    val (stats, bufs) = TopicMetrics.withDerived(
+    // merge q_topic_summary runs
+    def statsPass() = TopicMetrics.withDerived(
       TopicMetrics.partitionStats(records)).collect().toSeq.map(decode).unzip
-    val alive =
-      if (!countAliveKeys) None
-      else if (stats.isEmpty) Some(0L)
-      else Some(AliveKeys.exact(records))
+    val ((stats, bufs), alive) =
+      if (!countAliveKeys) (statsPass(), None)
+      else {
+        val (s, a) = alongside(records.sparkSession)(
+          statsPass(), AliveKeys.exact(records))
+        (s, Some(a))
+      }
     Result(stats.sortBy(_.partition),
       Summary.finish(bufs.foldLeft(Summary.zero)(Summary.merge)), alive)
+  }
+
+  /** Runs `side` on a thread of its own while `main` runs on the
+    * caller's, and returns both results once both have ended. The side
+    * thread carries the caller's local properties, so its jobs fall in
+    * the caller's job group and `RunRecorder` window. A failure of
+    * either is rethrown only after the other has ended. */
+  private def alongside[A, B](spark: SparkSession)(main: => A, side: => B): (A, B) = {
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val pending = SQLExecution.withThreadLocalCaptured(
+        ClassicConversions.castToImpl(spark), pool)(side)
+      def sideResult(): B =
+        try pending.get() catch { case e: ExecutionException => throw e.getCause }
+      val a = try main catch {
+        case e: Throwable =>
+          Try(sideResult()).failed.foreach(e.addSuppressed)
+          throw e
+      }
+      (a, sideResult())
+    } finally pool.shutdown()
   }
 
   private def decode(r: Row): (PartitionStats, SummaryBuf) = {

@@ -90,6 +90,14 @@ object KafkaRecordSource {
   * The `row_number` window exists only because parquet rows have no
   * native offset; the real source (Kafka) provides offsets without any
   * shuffle. Do not cargo-cult this window into a 100 TB path.
+  *
+  * What rides the window's exchange and sort is the partition, the
+  * `event_id` order key, and whatever a query reads above the window:
+  * `key` and `value` cross it only when read bare (the alive-key pass
+  * groups by `key`). A query reading only their lengths and null flags,
+  * as the stats pass does, gets those computed below the window as
+  * fixed-width columns by [[graft.GraftExtensions.NarrowWindowInputs]],
+  * so the value bytes never cross it.
   */
 object EventsAsRecords {
   val NumPartitions = 8

@@ -25,6 +25,37 @@ class AnalyzerSpec extends SparkSuite {
     assert(result.partitionStats.map(_.total).sum == result.summary.overall_count)
   }
 
+  test("analyze with -c equals the stats fold and AliveKeys.exact run one after the other") {
+    val topics = Seq(
+      "sf0.001" -> sources.EventsAsRecords.records(spark, "/root/testdata/sf0.001"),
+      "sf0.01" -> sources.EventsAsRecords.records(spark, "/root/testdata/sf0.01"),
+      "empty" -> records(),
+      "all-tombstone" -> records((0, 0L, 1000L, "k", null), (1, 0L, 2000L, "kk", null)))
+    topics.foreach { case (name, rec) =>
+      val sequential = TopicAnalyzer.analyze(rec)
+        .copy(aliveKeys = Some(operators.AliveKeys.exact(rec)))
+      assert(TopicAnalyzer.analyze(rec, countAliveKeys = true) == sequential, name)
+    }
+    val empty = TopicAnalyzer.analyze(records(), countAliveKeys = true)
+    assert(empty.partitionStats.isEmpty && empty.aliveKeys.contains(0L))
+  }
+
+  test("analyze with -c: a failing pass propagates, and no job outlives the call") {
+    import org.apache.spark.sql.functions.{lit, raise_error, when}
+    val rec = sources.EventsAsRecords.records(spark, "/root/testdata/sf0.001")
+    // the key fails both passes; the timestamp only the stats pass, so
+    // the alive-key job runs on after the failure
+    Seq("key" -> "boom-key", "timestamp" -> "boom-ts").foreach { case (c, msg) =>
+      val bad = rec.withColumn(c,
+        when(col("offset") === 7L, raise_error(lit(msg))).otherwise(col(c)))
+      val e = intercept[Exception](TopicAnalyzer.analyze(bad, countAliveKeys = true))
+      assert(e.getMessage.contains(msg), e)
+      org.apache.spark.graftbridge.ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
+      val active = spark.sparkContext.statusTracker.getActiveJobIds
+      assert(active.isEmpty, s"$c: jobs ${active.mkString(",")} outlived analyze")
+    }
+  }
+
   /** The single row of a `q_topic_summary`-shaped frame. */
   private def row(frame: DataFrame): TopicSummary = {
     val s = spark

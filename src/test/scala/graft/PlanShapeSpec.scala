@@ -981,6 +981,150 @@ class PlanShapeSpec extends SparkSuite {
     }
   }
 
+  /** Aliases the window narrowing rule put under a Window. */
+  private def narrowed(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window =>
+        w.child.expressions.collect {
+          case a: org.apache.spark.sql.catalyst.expressions.Alias
+            if a.name.startsWith("_nw") => a
+        }
+    }.flatten
+
+  /** `f` over `df` as written to and read back from parquet: a scan,
+    * unlike a local relation, keeps the projection under the Window. */
+  private def onDisk[T](df: org.apache.spark.sql.DataFrame)(
+      f: org.apache.spark.sql.DataFrame => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-narrow").toString
+    try {
+      df.write.mode("overwrite").parquet(dir)
+      f(spark.read.parquet(dir))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  /** (group, offset, s, t) rows, on disk, with the row number `rn` over
+    * each group by offset. */
+  private def windowed[T](rows: (Int, Long, String, String)*)(
+      f: org.apache.spark.sql.DataFrame => T): T = {
+    val s = spark
+    import s.implicits._
+    onDisk(rows.toDF("g", "o", "s", "t"))(df => f(df.withColumn("rn",
+      row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("g")).orderBy(col("o"))))))
+  }
+
+  /** The record-log frames over sf0.001 whose window the narrowing
+    * rule rewrites: (name, frame, columns no exchange may carry,
+    * whether the plan keeps the offset window). q_topic_summary reads
+    * no offset, so its window is pruned whole. */
+  private def recordLogFrames = {
+    import graft.operators.{AliveKeys, TopicMetrics}
+    val dir = "/root/testdata/sf0.001"
+    val rec = sources.EventsAsRecords.records(spark, dir)
+    val stats = Set("props", "value", "key")
+    val alive = Set("props", "value")
+    Seq(
+      ("q_partition_stats", SparkEntry.queries("q_partition_stats")(spark, dir), stats, true),
+      ("q_topic_summary", SparkEntry.queries("q_topic_summary")(spark, dir), stats, false),
+      ("q_alive_keys", SparkEntry.queries("q_alive_keys")(spark, dir), alive, true),
+      ("CLI stats pass", TopicMetrics.withDerived(TopicMetrics.partitionStats(rec)), stats, true),
+      ("CLI alive pass", AliveKeys.exactFrame(rec), alive, true))
+  }
+
+  test("record-log window: its exchange carries no props, value or (stats pass) key") {
+    // the offset window passes each record's key and value bytes
+    // through; the passes above it read only lengths and null flags,
+    // which GraftExtensions.NarrowWindowInputs computes under it
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    object aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    recordLogFrames.foreach { case (name, df, forbidden, hasWindow) =>
+      val p = df.queryExecution.executedPlan
+      val windows = aqe.collect(p) { case w: WindowExec => w }
+      assert(windows.size == (if (hasWindow) 1 else 0), s"$name:\n$p")
+      windows.foreach { w =>
+        assert(aqe.collect(w.child) { case e: ShuffleExchangeExec => e }.size == 1,
+          s"$name: expected the window's exchange:\n$p")
+      }
+      val carried = aqe.collect(p) { case e: ShuffleExchangeExec => e }
+        .flatMap(_.output.map(_.name)).filter(forbidden)
+      assert(carried.isEmpty, s"$name: an exchange carries $carried:\n$p")
+    }
+  }
+
+  test("window narrowing: no rewrite while the wide column is still read bare above") {
+    windowed((0, 0L, "ab", "x"), (0, 1L, "cde", "y")) { df =>
+      // length(s) alone moves; beside a bare s it cannot, as s must
+      // cross the window anyway
+      assert(narrowed(df.select(length(col("s")).as("n"), col("rn"))).size == 1)
+      val bare = df.select(length(col("s")).as("n"), col("s"), col("rn"))
+      assert(narrowed(bare).isEmpty, bare.queryExecution.optimizedPlan)
+      assert(bare.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
+        .sorted.toSeq == Seq((2, "ab", 1), (3, "cde", 2)))
+    }
+  }
+
+  test("window narrowing: partition and order columns never move") {
+    val s = spark
+    import s.implicits._
+    onDisk(Seq(("a", "k1", "xyz"), ("a", "k2", "w"), ("bb", "k1", ""))
+        .toDF("p", "o", "t")) { rows =>
+      val df = rows
+        .withColumn("rn", row_number().over(org.apache.spark.sql.expressions
+          .Window.partitionBy(col("p")).orderBy(col("o"))))
+        .select((length(col("p")) + length(col("o")) + length(col("t")))
+          .as("n"), col("rn"))
+      // the sum reads p and o, so it stays; its length(t) term moves
+      val moved = narrowed(df)
+      assert(moved.size == 1 && moved.head.references.map(_.name).toSet == Set("t"),
+        df.queryExecution.optimizedPlan)
+      assert(df.collect().map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq ==
+        Seq((4, 1), (4, 2), (6, 1)))
+    }
+  }
+
+  test("window narrowing: a second optimizer pass changes nothing") {
+    recordLogFrames.foreach { case (name, df, _, hasWindow) =>
+      val once = df.queryExecution.optimizedPlan
+      assert(narrowed(df).nonEmpty == hasWindow, s"$name:\n$once")
+      val twice = spark.sessionState.optimizer.execute(once)
+      assert(twice == once, s"$name, first:\n$once\nsecond:\n$twice")
+    }
+  }
+
+  test("window narrowing under ANSI: no cast moves past a filter or out of its branch") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    // "xx" does not cast to INT: only rows that never reach the cast hold it
+    windowed((0, 0L, "1", "ok"), (0, 1L, "xx", "drop"), (1, 0L, "3", "ok")) { df =>
+      def castStays(q: org.apache.spark.sql.DataFrame) = {
+        val moved = narrowed(q)
+        assert(!moved.exists(_.exists(_.isInstanceOf[
+          org.apache.spark.sql.catalyst.expressions.Cast])),
+          q.queryExecution.optimizedPlan)
+        moved
+      }
+      // the filter reads s itself
+      val bySelf = df.filter(col("s") =!= "xx")
+        .select(col("s").cast("int").as("n"), col("rn"))
+      castStays(bySelf)
+      assert(bySelf.collect().map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq ==
+        Seq((1, 1), (3, 1)))
+      // the filter reads another column: only the guard keeps the cast
+      // above it, while length(s), which cannot raise, moves
+      val kept = df.filter(col("t") =!= "drop")
+      assert(narrowed(kept.select(length(col("s")).as("n"), col("rn"))).size == 1)
+      val byOther = kept.select(col("s").cast("int").as("n"), col("rn"))
+      castStays(byOther)
+      assert(byOther.collect().map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq ==
+        Seq((1, 1), (3, 1)))
+      // the cast runs only in its branch, on the rows where rn = 1
+      val branch = df.select(when(col("rn") === 1, col("s").cast("int")).as("n"))
+      castStays(branch)
+      assert(branch.collect().map(r => Option(r.get(0))).toSeq.sortBy(_.toString) ==
+        Seq(None, Some(1), Some(3)))
+    }
+  }
+
   test("sharedSpans: island window partitions by pair AND diagonal") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val p = plan(graft.operators.Dedup.sharedSpans(docs))

@@ -176,6 +176,15 @@ class SourceDisciplineSpec extends AnyFunSuite {
     audit("conf.set", raw"\.conf\.set\(", Map.empty)
   }
 
+  test("plan rules load one way: GraftExtensions, which every GraftSession loads") {
+    // an optimizer rule changes every plan of the session it joins; a
+    // reader registering one would also be a reader changing session
+    // state, which readers never do
+    audit("plan-rule registration",
+      raw"\binjectOptimizerRule\(|\bwithExtensions\(|\bextraOptimizations\b",
+      Map("src/main/scala/graft/GraftExtensions.scala" -> 1))
+  }
+
   test("fixture tables are read through Tables; other reads are own stores") {
     // Tables holds the <dir>/<name>.parquet layout. Every other site
     // reads back a store its own module persisted:
