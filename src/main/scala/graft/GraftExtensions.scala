@@ -5,17 +5,14 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AtLeastNNonNulls,
-  Attribute, AttributeSet, CaseWhen, Coalesce, ConditionalExpression, ExprId,
-  Expression, ExpressionInfo, HigherOrderFunction, If, In, IsNotNull, IsNull,
-  Length, Literal, NamedExpression, OctetLength, Or, SubqueryExpression,
-  Unevaluable, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
-  AggregateFunction}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
+  AttributeSet, ExprId, Expression, ExpressionInfo, IsNotNull, IsNull, Length,
+  NamedExpression, OctetLength, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter,
   LogicalPlan, Project, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.WINDOW
+import org.apache.spark.sql.types.{BinaryType, StringType}
 
 import graft.functions.ArrayHashExprs.{DotProductExpr, MinHashSigExpr, PolyHash31Expr, ShingleHashExpr, SimHashExpr, UnitVectorExpr}
 import graft.functions.Fnv32.Fnv32Expr
@@ -154,35 +151,32 @@ object GraftExtensions {
   private def expr(c: org.apache.spark.sql.Column) =
     org.apache.spark.sql.graftbridge.ColumnBridge.catalystExpression(c)
 
-  /** Moves what a Window's consumer reads of a wide pass-through
-    * column below the Window, so the column leaves the window's
-    * exchange and sort. The record log's offset window
-    * (`EventsAsRecords.records`) passes every record's `key` and
-    * `value` bytes through, while the stats pass reads only their
-    * lengths and null flags and the alive-key pass only `value IS NULL`.
-    * Computed below the Window, those are a few fixed-width columns,
-    * and `ColumnPruning` drops the bytes from the window's input.
+  /** Computes what a Window's consumer reads of a wide pass-through
+    * column, when that is only its length or null flag, below the
+    * Window, so the column leaves the window's exchange and sort. The
+    * record log's offset window (`EventsAsRecords.records`) passes
+    * every record's `key` and `value` bytes through, while the stats
+    * pass reads only their lengths and null flags and the alive-key
+    * pass only `value IS NULL`.
     *
     * Shape: a consumer (`Project` or `Aggregate`) over zero or more
     * deterministic `Project`/`Filter` nodes (the chain) over a `Window`.
-    * A consumer subexpression moves when, with the chain's aliases
-    * inlined, it is deterministic, has a fixed-width result, holds no
-    * aggregate, window or subquery, reads only the Window's input, and
-    * reads a variable-width input column that neither the Window (its
-    * partition, order and functions) nor a chain Filter reads. Only
-    * maximal such subexpressions move, and only when every wide column
-    * they read is then read nowhere above the Window. Each moves as an
-    * alias in a `Project` under the Window and rides up the chain.
+    * A string or binary column of the Window's input moves when, with
+    * the chain's aliases inlined, the consumer reads it only through
+    * `length`, `octet_length`, `IS NULL` and `IS NOT NULL`, and neither
+    * the Window (its partition, order and functions) nor a chain Filter
+    * reads it. Its one length is computed as `_nwN` in a `Project` under
+    * the Window and rides up the chain; the null tests read that
+    * length, which is null exactly when the column is. A binary's
+    * `length` is its `octet_length`, and a column read only through
+    * null tests carries `octet_length`. A string read through both
+    * `length` and `octet_length` stays.
     *
-    * ANSI guard: a moved expression runs on every window row. Below a
-    * chain Filter that includes rows the Filter drops, and out of a
-    * lazily evaluated position (a later branch of `If`, `CaseWhen`,
-    * `Coalesce`, the right side of `And`/`Or`, an `IN` list, an
-    * aggregate's input under a FILTER clause) it runs where it would
-    * not have. There only expressions that cannot raise move: `IsNull`,
-    * `IsNotNull`, `Length`, `OctetLength`, `Coalesce`, `If`, `CaseWhen`,
-    * literals and attributes. An always-evaluated expression, such as
-    * an aggregate's input, moves whole.
+    * So each moved column gives way to one int: its 8-byte UnsafeRow
+    * slot replaces the column's slot and bytes, and no window row gets
+    * wider. None of these expressions can raise, so computing them on
+    * rows that a chain Filter, a Limit or a conditional branch would
+    * have kept them from changes no answer and raises no error.
     */
   object NarrowWindowInputs extends Rule[LogicalPlan] {
 
@@ -199,38 +193,29 @@ object GraftExtensions {
         case _ => (acc.reverse, n)
       }
 
-    private def cannotRaise(e: Expression): Boolean = e match {
-      case _: Attribute | _: Literal => true
-      case _: IsNull | _: IsNotNull | _: Length | _: OctetLength |
-          _: Coalesce | _: If | _: CaseWhen => e.children.forall(cannotRaise)
-      case _ => false
-    }
-
-    /** Whether each child of `e` is evaluated only on some rows. */
-    private def lazyChildren(e: Expression): Seq[Boolean] = e match {
-      case c: ConditionalExpression
-          if c.alwaysEvaluatedInputs.size == 1 &&
-            (c.alwaysEvaluatedInputs.head eq c.children.head) =>
-        false +: c.children.tail.map(_ => true)
-      case _: ConditionalExpression | _: AtLeastNNonNulls =>
-        e.children.map(_ => true)
-      case _: And | _: Or | _: In => false +: e.children.tail.map(_ => true)
-      case a: AggregateExpression => a.children.map(_ => a.filter.isDefined)
-      case _ => e.children.map(_ => false)
+    /** The column of `cols` that `e` reads, if `e` is a length or a null
+      * test of it, and whether it needs the character count (`Some(true)`),
+      * the byte count (`Some(false)`) or neither (a null test). */
+    private def leaf(e: Expression,
+        cols: AttributeSet): Option[(Attribute, Option[Boolean])] = e match {
+      case IsNull(a: Attribute) if cols.contains(a) => Some((a, None))
+      case IsNotNull(a: Attribute) if cols.contains(a) => Some((a, None))
+      case Length(a: Attribute) if cols.contains(a) =>
+        Some((a, Some(a.dataType != BinaryType)))
+      case OctetLength(a: Attribute) if cols.contains(a) => Some((a, Some(false)))
+      case _ => None
     }
 
     private def narrow(consumer: LogicalPlan): Option[LogicalPlan] =
       chainUnder(consumer.children.head) match {
         case (chain, w: Window)
             if chain.forall(_.expressions.forall(_.deterministic)) =>
-          val wide = AttributeSet(
-            w.child.output.filterNot(a => UnsafeRow.isFixedLength(a.dataType)))
-          if (wide.isEmpty) None else rewrite(consumer, chain, w, wide)
+          rewrite(consumer, chain, w)
         case _ => None
       }
 
     private def rewrite(consumer: LogicalPlan, chain: List[LogicalPlan],
-        w: Window, wide: AttributeSet): Option[LogicalPlan] = {
+        w: Window): Option[LogicalPlan] = {
       // each chain alias in terms of the Window's output, bottom up
       val defs = chain.reverse.foldLeft(Map.empty[ExprId, Expression]) {
         case (m, Project(list, _)) => m ++ list.collect {
@@ -239,64 +224,67 @@ object GraftExtensions {
         case (m, _) => m
       }
       def inlined(e: Expression) = inline(defs, e)
-      val filters = chain.collect { case f: Filter => f }
-      val readBelow = AttributeSet(
-        w.references ++ filters.flatMap(f => inlined(f.condition).references))
+      val readBelow = AttributeSet(w.references ++ chain.collect {
+        case f: Filter => inlined(f.condition).references
+      }.flatten)
       val (exprs, grouping) = consumer match {
         case p: Project => (p.projectList, Nil)
         case a: Aggregate => (a.aggregateExpressions, a.groupingExpressions)
       }
 
-      // one rewrite of the consumer's expressions, moving no expression
-      // that reads a `blocked` column
-      def attempt(blocked: AttributeSet): (Seq[NamedExpression], Seq[Alias]) = {
-        val moved = mutable.LinkedHashMap.empty[Expression, Alias]
-        def movable(x: Expression, guarded: Boolean): Boolean = {
-          val wideRead = x.references.intersect(wide)
-          !x.isInstanceOf[NamedExpression] && x.deterministic &&
-            UnsafeRow.isFixedLength(x.dataType) &&
-            x.references.subsetOf(w.child.outputSet) &&
-            wideRead.nonEmpty && !wideRead.exists(blocked.contains) &&
-            !x.exists {
-              case _: Attribute => false
-              case _: Unevaluable | _: AggregateFunction |
-                  _: SubqueryExpression => true
-              case _ => false
-            } &&
-            (!guarded || cannotRaise(x))
-        }
-        def visit(e: Expression, guarded: Boolean): Expression = {
-          val x = inlined(e)
-          if (movable(x, guarded))
-            moved.getOrElseUpdate(x.canonicalized,
-              Alias(x, s"_nw${moved.size}")()).toAttribute
-          else e match {
-            case _: Attribute | _: HigherOrderFunction | _: SubqueryExpression => e
-            case _ => e.withNewChildren(e.children.zip(lazyChildren(e)).map {
-              case (c, lazily) => visit(c, guarded || lazily)
-            })
+      // `e` with `f` applied to each leaf over `cols`, subqueries left alone
+      def onLeaves(e: Expression, cols: AttributeSet)(
+          f: (Expression, Attribute, Option[Boolean]) => Expression): Expression = {
+        val x = inlined(e)
+        leaf(x, cols) match {
+          case Some((a, chars)) => f(x, a, chars)
+          case None => e match {
+            case _: SubqueryExpression => e
+            case _ => e.mapChildren(onLeaves(_, cols)(f))
           }
         }
+      }
+
+      // a column still read bare above the Window cannot move; settle on
+      // the columns that can
+      @tailrec def settle(cols: AttributeSet): Option[(Seq[NamedExpression], Seq[Alias])] = {
+        val needs = mutable.Map.empty[ExprId, Set[Boolean]]
+        exprs.foreach(onLeaves(_, cols) { (x, a, chars) =>
+          needs(a.exprId) = needs.getOrElse(a.exprId, Set.empty[Boolean]) ++ chars
+          x
+        })
+        val carriers = w.child.output
+          .filter(a => needs.get(a.exprId).exists(_.size < 2))
+          .zipWithIndex.map { case (a, i) =>
+            val len = if (needs(a.exprId)(true)) Length(a) else OctetLength(a)
+            a -> Alias(len, s"_nw$i")()
+          }
+        val carrierOf = carriers.map { case (a, al) => a.exprId -> al.toAttribute }.toMap
         val out = exprs.map { ne =>
-          visit(ne, filters.nonEmpty) match {
+          onLeaves(ne, AttributeSet(carriers.map(_._1))) { (x, a, _) =>
+            val len = carrierOf(a.exprId)
+            x match {
+              case _: IsNull => IsNull(len)
+              case _: IsNotNull => IsNotNull(len)
+              case _ => len
+            }
+          } match {
             case n: NamedExpression if n.exprId == ne.exprId => n
             case other => Alias(other, ne.name)(ne.exprId, ne.qualifier)
           }
         }
-        (out, moved.values.toSeq)
+        val bare = AttributeSet((out ++ grouping).flatMap(e => inlined(e).references))
+          .intersect(AttributeSet(carriers.map(_._1)))
+        if (bare.nonEmpty) settle(cols -- bare)
+        else if (carriers.isEmpty) None
+        else Some((out, carriers.map(_._2)))
       }
 
-      // a wide column still read above the Window blocks every move
-      // that reads it; settle on the set of such columns
-      @tailrec def settle(blocked: AttributeSet): (Seq[NamedExpression], Seq[Alias]) = {
-        val (out, moved) = attempt(blocked)
-        val stillRead = AttributeSet((out ++ grouping).flatMap(e => inlined(e).references))
-        val more = stillRead.intersect(wide) -- blocked
-        if (more.isEmpty) (out, moved) else settle(blocked ++ more)
-      }
-      val (out, moved) = settle(readBelow.intersect(wide))
-      if (moved.isEmpty) None
-      else {
+      val wide = AttributeSet(w.child.output.filter(a => a.dataType match {
+        case _: StringType | BinaryType => true
+        case _ => false
+      }))
+      settle(wide -- readBelow).map { case (out, moved) =>
         val passed = moved.map(_.toAttribute)
         val window: LogicalPlan =
           w.copy(child = Project(w.child.output ++ moved, w.child))
@@ -305,10 +293,10 @@ object GraftExtensions {
             p.copy(projectList = p.projectList ++ passed, child = below)
           case (f: Filter, below) => f.copy(child = below)
         }
-        Some(consumer match {
+        consumer match {
           case p: Project => p.copy(projectList = out, child = newChain)
           case a: Aggregate => a.copy(aggregateExpressions = out, child = newChain)
-        })
+        }
       }
     }
 

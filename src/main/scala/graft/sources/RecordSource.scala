@@ -95,9 +95,9 @@ object KafkaRecordSource {
   * `event_id` order key, and whatever a query reads above the window:
   * `key` and `value` cross it only when read bare (the alive-key pass
   * groups by `key`). A query reading only their lengths and null flags,
-  * as the stats pass does, gets those computed below the window as
-  * fixed-width columns by [[graft.GraftExtensions.NarrowWindowInputs]],
-  * so the value bytes never cross it.
+  * as the stats pass does, gets one length per column computed below
+  * the window by [[graft.GraftExtensions.NarrowWindowInputs]], so the
+  * bytes never cross it.
   */
 object EventsAsRecords {
   val NumPartitions = 8

@@ -1109,8 +1109,8 @@ class PlanShapeSpec extends SparkSuite {
       castStays(bySelf)
       assert(bySelf.collect().map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq ==
         Seq((1, 1), (3, 1)))
-      // the filter reads another column: only the guard keeps the cast
-      // above it, while length(s), which cannot raise, moves
+      // the filter reads another column: the cast still stays above it,
+      // while length(s), which cannot raise, moves
       val kept = df.filter(col("t") =!= "drop")
       assert(narrowed(kept.select(length(col("s")).as("n"), col("rn"))).size == 1)
       val byOther = kept.select(col("s").cast("int").as("n"), col("rn"))
@@ -1122,6 +1122,47 @@ class PlanShapeSpec extends SparkSuite {
       castStays(branch)
       assert(branch.collect().map(r => Option(r.get(0))).toSeq.sortBy(_.toString) ==
         Seq(None, Some(1), Some(3)))
+    }
+  }
+
+  test("window narrowing under ANSI: a cast under a limit stays above the window") {
+    // under a Limit only the rows taken reach the cast; "xx" is never
+    // the first row of its window partition, but it would be cast in
+    // the window's map stage
+    windowed((0, 0L, "1", "a"), (0, 1L, "xx", "b"), (1, 0L, "3", "c")) { df =>
+      val limited = df.select(col("s").cast("int").as("n"), col("rn")).limit(1)
+      assert(!narrowed(limited).exists(_.exists(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.Cast])),
+        limited.queryExecution.optimizedPlan)
+      val got = limited.collect().map(_.getInt(0)).toSeq
+      assert(got.size == 1 && Set(1, 3)(got.head), got)
+    }
+  }
+
+  test("window narrowing: each moved column gives way to one int") {
+    // the stats pass reads length and null flag of key and value: two
+    // lengths cross the window, and the null tests read them
+    val rec = sources.EventsAsRecords.records(spark, "/root/testdata/sf0.001")
+    val stats = graft.operators.TopicMetrics.withDerived(
+      graft.operators.TopicMetrics.partitionStats(rec))
+    val moved = narrowed(stats)
+    assert(moved.size == 2 &&
+      moved.forall(_.dataType == org.apache.spark.sql.types.IntegerType),
+      stats.queryExecution.optimizedPlan)
+    // a string read through both its character and byte counts would
+    // need two ints, so it stays
+    windowed((0, 0L, "é", "x"), (0, 1L, "ab", "y")) { df =>
+      val both = df.select(length(col("s")).as("c"), octet_length(col("s")).as("b"),
+        col("s").isNull.as("z"), col("rn"))
+      assert(narrowed(both).isEmpty, both.queryExecution.optimizedPlan)
+      assert(both.collect().map(r => (r.getInt(0), r.getInt(1), r.getBoolean(2), r.getInt(3)))
+        .sorted.toSeq == Seq((1, 2, false, 1), (2, 2, false, 2)))
+      val chars = df.select(length(col("s")).as("c"), col("s").isNotNull.as("z"),
+        col("rn"))
+      assert(narrowed(chars).map(_.child.getClass) == Seq(classOf[
+        org.apache.spark.sql.catalyst.expressions.Length]))
+      assert(chars.collect().map(r => (r.getInt(0), r.getBoolean(1), r.getInt(2)))
+        .sorted.toSeq == Seq((1, true, 1), (2, true, 2)))
     }
   }
 
